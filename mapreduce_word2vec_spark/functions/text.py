@@ -306,14 +306,6 @@ WINNOW_WINDOW = 4
 # its Column sibling operator-for-operator; value identity is pinned
 # by tests/test_round10_opt.py and the oracle gates.
 
-def tokens_sql(col: str) -> str:
-    """SQL text of :func:`tokens_expr` over column/expression ``col``."""
-    return (
-        "array_remove(split(regexp_replace(lower(" + col + "), "
-        "'[a-z0-9_]*[0-9_][a-z0-9_]*', ' '), '[^a-z]+'), '')"
-    )
-
-
 def ngrams_sql(arr: str, n: int = 2, sep: str = " ") -> str:
     """SQL text of :func:`ngrams_expr` over array expression ``arr``.
 

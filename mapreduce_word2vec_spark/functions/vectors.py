@@ -38,30 +38,6 @@ def cosine_expr(a: str | Column, b: str | Column) -> Column:
     return F.when(denom > 0, dot_expr(a, b) / denom)
 
 
-def l2_normalize_expr(a: str | Column) -> Column:
-    """Unit-normalize; zero vectors pass through unchanged."""
-    nrm = norm_expr(a)
-    return F.when(
-        nrm > 0, F.transform(_c(a), lambda x: x.cast("double") / nrm)
-    ).otherwise(F.transform(_c(a), lambda x: x.cast("double")))
-
-
-def vector_add_expr(a: str | Column, b: str | Column) -> Column:
-    return F.zip_with(_c(a), _c(b), lambda x, y: x.cast("double") + y.cast("double"))
-
-
-def vector_scale_expr(a: str | Column, s: Column | float) -> Column:
-    s_col = F.lit(s) if isinstance(s, (int, float)) else s
-    return F.transform(_c(a), lambda x: x.cast("double") * s_col)
-
-
-def euclidean_expr(a: str | Column, b: str | Column) -> Column:
-    diffs = F.zip_with(
-        _c(a), _c(b), lambda x, y: (x.cast("double") - y.cast("double")) ** 2
-    )
-    return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v))
-
-
 def sign_bucket_expr(a: str | Column, n_bits: int = 4) -> Column:
     """Deterministic LSH-style bucket id from the signs of the first
     ``n_bits`` components: bucket = Σ (a[i] >= 0) << i.

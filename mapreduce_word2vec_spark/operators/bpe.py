@@ -24,11 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mapreduce_word2vec_spark.runtime import (
-    release_checkpoint,
-    tracked_local_checkpoint,
-    tracked_persist,
-)
+from mapreduce_word2vec_spark.runtime import rerooted
 
 
 def _merge_fold(sym: Column, left: str, right: str) -> Column:
@@ -61,67 +57,62 @@ def train_bpe_merges(
     Returns ``[(rank, left, right, merged, pair_count), ...]`` in
     learning order. Stops early if no adjacent pair remains.
     """
-    syms = tracked_persist(
-        wordfreq.select(
-            F.split(F.col(word_col), "").alias("sym"),
-            F.col(freq_col).cast("long").alias("freq"),
-        )
-    )
+    syms = wordfreq.select(
+        F.split(F.col(word_col), "").alias("sym"),
+        F.col(freq_col).cast("long").alias("freq"),
+    ).persist()
     rules: list[tuple[int, str, str, str, int]] = []
     # Cache lifecycle: each iteration's fold reads the PREVIOUS
     # materialized symbols, so the previous cache can be dropped only
-    # after the new one materializes (the per-iteration collect()).
-    # `prev` holds that one deferred unpersist — exactly two
-    # vocabulary-sized caches live at any time instead of n_merges.
+    # after the new one materializes (the per-iteration collect()) —
+    # exactly two vocabulary-sized caches live at any time instead of
+    # n_merges. No frame outlives the call (the result is a Python
+    # list), so the last cache is freed on return.
     prev: DataFrame | None = None
-    for rank in range(n_merges):
-        pairs = (
-            syms.where(F.size("sym") >= 2)
-            .select(
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("sym") - 1),
-                        lambda i: F.struct(
-                            F.element_at(F.col("sym"), i).alias("l"),
-                            F.element_at(F.col("sym"), i + 1).alias("r"),
-                        ),
-                    )
-                ).alias("p"),
-                "freq",
+    try:
+        for rank in range(n_merges):
+            pairs = (
+                syms.where(F.size("sym") >= 2)
+                .select(
+                    F.explode(
+                        F.transform(
+                            F.sequence(F.lit(1), F.size("sym") - 1),
+                            lambda i: F.struct(
+                                F.element_at(F.col("sym"), i).alias("l"),
+                                F.element_at(F.col("sym"), i + 1).alias("r"),
+                            ),
+                        )
+                    ).alias("p"),
+                    "freq",
+                )
+                .groupBy("p.l", "p.r")
+                .agg(F.sum("freq").alias("cnt"))
             )
-            .groupBy("p.l", "p.r")
-            .agg(F.sum("freq").alias("cnt"))
-        )
-        # ONE row to the driver per iteration — the learned rule
-        # (the PageRank-convergence-check contract, not a data
-        # collect); ties break on the pair text for determinism.
-        best = pairs.orderBy(F.desc("cnt"), "l", "r").limit(1).collect()
-        # The collect() materialized the CURRENT syms cache, so the
-        # previous iteration's cache is no longer reachable — drop it.
+            # ONE row to the driver per iteration — the learned rule
+            # (the PageRank-convergence-check contract, not a data
+            # collect); ties break on the pair text for determinism.
+            best = pairs.orderBy(F.desc("cnt"), "l", "r").limit(1).collect()
+            # The collect() materialized the CURRENT syms cache, so the
+            # previous iteration's cache is no longer reachable — drop it.
+            if prev is not None:
+                prev.unpersist()
+                prev = None
+            if not best:
+                break
+            left, right, cnt = best[0]["l"], best[0]["r"], int(best[0]["cnt"])
+            rules.append((rank, left, right, left + right, cnt))
+            # Apply the merge: each iteration's fold runs on the PREVIOUS
+            # materialized symbols and is re-rooted on its own RDD, so
+            # the plan stays one fold deep however many merges run; a
+            # lost cache block recomputes through at most n_merges folds.
+            prev = syms  # still feeding the new syms until its first action
+            syms = rerooted(
+                syms.select(_merge_fold(F.col("sym"), left, right).alias("sym"), "freq")
+            ).persist()
+    finally:
         if prev is not None:
             prev.unpersist()
-            prev = None
-        if not best:
-            break
-        left, right, cnt = best[0]["l"], best[0]["r"], int(best[0]["cnt"])
-        rules.append((rank, left, right, left + right, cnt))
-        # Apply the merge: each iteration's fold runs on the PREVIOUS
-        # materialized symbols, keeping the per-iteration plan
-        # constant-depth. Every third merge the lineage is cut with an
-        # eager localCheckpoint (the connected_components/pagerank
-        # pattern) so a cache-block eviction under memory pressure
-        # never recomputes through the whole merge-fold chain.
-        folded = syms.select(
-            _merge_fold(F.col("sym"), left, right).alias("sym"), "freq"
-        )
-        if (rank + 1) % 3 == 0:
-            new_syms = tracked_local_checkpoint(folded)
-            syms.unpersist()  # checkpoint materialized — safe now
-            release_checkpoint(syms)  # no-op unless syms was a ckpt
-        else:
-            new_syms = tracked_persist(folded)
-            prev = syms  # still feeding new_syms until its first action
-        syms = new_syms
+        syms.unpersist()
     return rules
 
 

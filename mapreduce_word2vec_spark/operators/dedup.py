@@ -313,7 +313,7 @@ def simhash_signatures(
     never borrow — and bit_j recovers as 2·lane_j − tot > 0. This
     halves the aggregation buffer (16 packed sums + 1 total vs 32
     conditional sums; measured ~20% faster at sf0.1, bit-identical
-    output). Lane overflow needs a single document of ≥ 2^31 tokens —
+    output). Lane overflow needs a single document of ≥ 2^32 tokens —
     not a reachable document size."""
     toks = df.select(
         F.col(id_col).alias("doc_id"), F.explode(tokens_expr(text_col)).alias("w")

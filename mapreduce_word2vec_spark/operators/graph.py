@@ -6,10 +6,14 @@ generation (MinHash/SimHash/Jaccard pairs → clusters → one canonical
 doc per cluster).
 
 Spark-first shape: each iteration is one join + one aggregation, all
-Catalyst-planned; lineage is cut with ``localCheckpoint`` every few
-rounds so the plan doesn't grow with the iteration count. Converges
-in O(diameter) rounds (not O(V)) because labels propagate through
-BOTH edge directions each round.
+Catalyst-planned. Loop inputs are persisted (released by the next
+catalog query or when the loop rolls past them) and iteration counts
+are fixed or bounded, so a released or lost cache block recomputes
+from a lineage of bounded depth. Connected components converges in
+O(diameter) rounds (not O(V)) because labels propagate through BOTH
+edge directions each round; since that count depends on the data, each
+round is re-rooted on its own RDD so the plan does not nest one
+persisted round inside the next.
 
 No fixed Spark primitive exists for this (GraphFrames is an external
 package), so this is the documented composition — SURVEY's category
@@ -21,11 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mapreduce_word2vec_spark.runtime import (
-    release_checkpoint,
-    tracked_local_checkpoint,
-    tracked_persist,
-)
+from mapreduce_word2vec_spark.runtime import rerooted, tracked_persist
 
 
 def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -64,44 +64,49 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iterations: int = 20,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``;
-    component = min node id reachable (undirected)."""
+    component = min node id reachable (undirected).
+
+    Each round reads the previous labels ONCE: every joined edge row
+    sends s's label to d and back to s itself, so one min per node
+    covers its own label and its neighbors'. The round's result is
+    re-rooted on its own RDD (:func:`~mapreduce_word2vec_spark.runtime.rerooted`,
+    so the plan stays one round deep), persisted, materialized by the
+    convergence count, and the previous round's cache is released (the
+    :func:`kcore` roll). A released or lost block recomputes through
+    at most ``max_iterations`` rounds of RDD lineage."""
     sym = _symmetrize(edges, src, dst)
     labels = (
         sym.select(F.col("s").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
     )
-    prev_ckpt: DataFrame | None = None
-    for i in range(max_iterations):
-        # neighbor minimum this round
-        msgs = (
-            sym.join(labels, sym.s == labels.node)
-            .groupBy(F.col("d").alias("node2"))
-            .agg(F.min("component").alias("nbr_min"))
+    sent = F.explode(
+        F.array(
+            F.struct(F.col("d").alias("node"), F.lit(False).alias("own")),
+            F.struct(F.col("s").alias("node"), F.lit(True).alias("own")),
         )
-        updated = (
-            labels.join(msgs, labels.node == msgs.node2, "left")
+    )
+    prev: DataFrame | None = None
+    for _ in range(max_iterations):
+        step = (
+            sym.join(labels, sym.s == labels.node)
+            .select(sent.alias("m"), "component")
+            .groupBy(F.col("m.node").alias("node"))
+            .agg(
+                F.min("component").alias("component"),
+                F.min(F.when(F.col("m.own"), F.col("component"))).alias("_own"),
+            )
             .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_min", F.col("component"))
-                ).alias("component"),
-                (F.coalesce("nbr_min", F.col("component")) < F.col("component")).alias(
-                    "_changed"
-                ),
+                "node", "component", (F.col("component") < F.col("_own")).alias("_changed")
             )
         )
-        if (i + 1) % checkpoint_every == 0:
-            # eager checkpoint materialized — the PREVIOUS checkpoint's
-            # blocks are unreachable now and can be freed immediately
-            updated = tracked_local_checkpoint(updated)
-            if prev_ckpt is not None:
-                release_checkpoint(prev_ckpt)
-            prev_ckpt = updated
+        updated = tracked_persist(rerooted(step))
         n_changed = updated.where(F.col("_changed")).count()
+        if prev is not None:
+            prev.unpersist(blocking=False)  # tracked sweep tolerates this
+        prev = updated
         labels = updated.drop("_changed")
         if n_changed == 0:
             break
@@ -113,7 +118,6 @@ def label_propagation(
     src: str = "id_a",
     dst: str = "id_b",
     iterations: int = 3,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """(node, label) after a FIXED number of synchronous label
     propagation rounds (community detection): label'(v) = the most
@@ -128,14 +132,13 @@ def label_propagation(
     count aggregation, ONE argmax fold per node (``max_by`` over a
     (count, -label) struct — no window, so the per-node state is one
     running pair, not the sorted neighbor-label list). All three
-    hash-partition on node id; lineage is cut with ``localCheckpoint``
-    so the plan stays O(1) in the iteration count."""
+    hash-partition on node id; the plan grows linearly with the fixed
+    iteration count."""
     sym = _symmetrize(edges, src, dst)
     labels = sym.select(F.col("s").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
-    prev_ckpt: DataFrame | None = None
-    for i in range(iterations):
+    for _ in range(iterations):
         labels = (
             sym.join(labels, sym.s == labels.node)
             .groupBy(F.col("d").alias("node"), "label")
@@ -145,11 +148,6 @@ def label_propagation(
                 F.expr("max_by(label, struct(cnt, -label))").alias("label")
             )
         )
-        if (i + 1) % checkpoint_every == 0:
-            labels = tracked_local_checkpoint(labels)
-            if prev_ckpt is not None:
-                release_checkpoint(prev_ckpt)
-            prev_ckpt = labels
     return labels
 
 
@@ -170,15 +168,18 @@ def kcore(
     Scale shape per round: one degree aggregation + two semi-joins
     filtering the edge list to surviving endpoints, all partitioned on
     node id. The edge list shrinks monotonically, so later rounds cost
-    less, and each round's filtered edges are persisted while the next
-    round's survivor set is derived from them (then released)."""
+    less, and each round's filtered edges are re-rooted and persisted
+    while the next round's survivor set is derived from them (then
+    released), as in :func:`connected_components`."""
     cur = _symmetrize(edges, src, dst)
     for _ in range(rounds):
         deg = cur.groupBy("s").agg(F.count("*").alias("deg"))
         keep = deg.where(F.col("deg") >= k).select("s")
         nxt = tracked_persist(
-            cur.join(keep, "s", "left_semi").join(
-                keep.select(F.col("s").alias("d")), "d", "left_semi"
+            rerooted(
+                cur.join(keep, "s", "left_semi").join(
+                    keep.select(F.col("s").alias("d")), "d", "left_semi"
+                )
             )
         )
         nxt.count()  # materialize before releasing the parent
@@ -196,7 +197,6 @@ def pagerank(
     dst: str = "id_b",
     iterations: int = 5,
     damping: float = 0.85,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """(node, rank) after a FIXED number of power iterations over the
     undirected edge list (both directions contribute): rank'(v) =
@@ -207,9 +207,8 @@ def pagerank(
     against the same recurrence unrolled in SQL. Scale shape per
     iteration: ONE join of the rank vector onto the out-edge list and
     ONE aggregation back onto nodes — both hash-partitioned on node id,
-    so Catalyst reuses the exchange across iterations; lineage is cut
-    with ``localCheckpoint`` like :func:`connected_components` so the
-    plan stays O(1) in the iteration count. Dangling nodes cannot occur
+    with a partial sum below each exchange; the plan grows linearly
+    with the fixed iteration count. Dangling nodes cannot occur
     (symmetrized edges give every node degree ≥ 1)."""
     # Persisted for the same reason as in connected_components: the
     # edge list and degree table feed every iteration; without the
@@ -224,46 +223,25 @@ def pagerank(
     # N collected ONCE as a scalar (r9): the former 1-row n_nodes
     # aggregate rode a crossJoin(broadcast(...)) into the init AND
     # every iteration, costing one BroadcastExchange + BNLJ stage per
-    # power iteration (the broadcast subplan is not reused across the
-    # checkpoint job boundary). A single bounded driver count off the
+    # power iteration. A single bounded driver count off the
     # already-persisted degree table replaces all of them with
     # literals; the division stays in the JVM on the same operand
     # types, so ranks are bit-identical.
     n_val = deg.count()
-    # Iteration shuffle width derived from the measured node count
-    # (guide §2: scale-adaptive partitioning, not a constant): the rank
-    # vector is exactly n_val rows, so ~1M rows/partition sizes its
-    # aggregation exchange to the data instead of to
-    # spark.sql.shuffle.partitions. On the 477-node near-dup graph that
-    # is ONE task per iteration instead of 32 near-empty ones (5
-    # iterations of 2-row-per-task staging overhead was ~0.25 s of the
-    # query); on a billion-node graph it is ~1000 real partitions. The
-    # explicit repartition is absorbed by the groupBy (same key, same
-    # width — no second exchange). A broadcast-ranks variant measured
-    # SLOWER (3.70 vs 3.27 s median): one serial broadcast build per
-    # iteration beats the coalesced shuffle only on paper.
-    p_iter = max(1, min(n_val // 1_000_000, 100_000))
     ranks = deg.select(
         F.col("s").alias("node"), (F.lit(1.0) / F.lit(n_val)).alias("rank")
     )
     base = F.lit(1.0 - damping) / F.lit(n_val)
-    prev_ckpt: DataFrame | None = None
-    for i in range(iterations):
+    for _ in range(iterations):
         contribs = (
             sym_deg.join(ranks, F.col("s") == F.col("node"))
             .select(F.col("d").alias("node2"), (F.col("rank") / F.col("deg")).alias("c"))
-            .repartition(p_iter, "node2")
         )
         ranks = (
             contribs.groupBy(F.col("node2").alias("node"))
             .agg(F.sum("c").alias("in_sum"))
             .select("node", (base + F.lit(damping) * F.col("in_sum")).alias("rank"))
         )
-        if (i + 1) % checkpoint_every == 0:
-            ranks = tracked_local_checkpoint(ranks)
-            if prev_ckpt is not None:
-                release_checkpoint(prev_ckpt)
-            prev_ckpt = ranks
     return ranks
 
 

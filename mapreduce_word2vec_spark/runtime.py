@@ -42,81 +42,31 @@ def tracked_persist(df: DataFrame, storage_level=None) -> DataFrame:
     return df
 
 
-# localCheckpoint stores its data as RDD-level cached blocks that
-# DataFrame.unpersist CANNOT reach (it only uncaches CacheManager
-# entries), so without explicit release they linger until the JVM
-# ContextCleaner happens to GC the RDD — unbounded in practice for a
-# long-lived session. Checkpoints made through
-# :func:`tracked_local_checkpoint` record the underlying RDD ids and
-# are freed deterministically by :func:`release_tracked` (or eagerly
-# by :func:`release_checkpoint` for iterative operators that roll
-# checkpoints).
-_TRACKED_RDDS: list[tuple[object, int]] = []  # (SparkContext, rdd id)
-_CKPT_IDS: dict[int, tuple[object, list[int]]] = {}  # id(df) -> (sc, ids)
-
-
-def tracked_local_checkpoint(df: DataFrame) -> DataFrame:
-    """``df.localCheckpoint(eager=True)`` with session-scoped
-    lifecycle: the checkpoint's cached RDD blocks are recorded (by the
-    persistent-RDD-id delta the eager materialization creates) and
-    freed at the next :func:`release_tracked`, exactly like a
-    :func:`tracked_persist` cache."""
-    sc = df.sparkSession.sparkContext
-    before = {int(i) for i in sc._jsc.getPersistentRDDs().keySet()}
-    out = df.localCheckpoint(eager=True)
-    new_ids = [
-        int(i)
-        for i in sc._jsc.getPersistentRDDs().keySet()
-        if int(i) not in before
-    ]
-    _TRACKED_RDDS.extend((sc, i) for i in new_ids)
-    _CKPT_IDS[id(out)] = (sc, new_ids)
-    return out
-
-
-def release_checkpoint(df: DataFrame) -> None:
-    """Eagerly free the RDD blocks behind a
-    :func:`tracked_local_checkpoint` frame that an iterative operator
-    has rolled past (the next checkpoint materialized, so the previous
-    one is unreachable). No-op for frames not checkpointed here."""
-    sc_ids = _CKPT_IDS.pop(id(df), None)
-    if sc_ids is None:
-        return
-    sc, ids = sc_ids
-    _unpersist_rdd_ids(sc, ids)
-    global _TRACKED_RDDS
-    _TRACKED_RDDS = [(s, i) for (s, i) in _TRACKED_RDDS if i not in set(ids)]
-
-
-def _unpersist_rdd_ids(sc, ids) -> None:
-    try:
-        m = sc._jsc.getPersistentRDDs()
-        for rid in ids:
-            if m.containsKey(rid):
-                m.get(rid).unpersist(False)
-    except Exception:
-        pass  # session already stopped — nothing to release
+def rerooted(df: DataFrame) -> DataFrame:
+    """``df``'s rows as a frame whose plan starts at ``df``'s RDD, for
+    loops that persist each round and feed it into the next. Chained
+    persisted plans nest every earlier round's cached plan, and
+    adaptive execution renders each nested plan twice (initial and
+    final), so a query over round k renders 2^k plan copies. The RDD
+    keeps the lineage: a released or lost block recomputes through the
+    earlier rounds instead of failing as a lost executor-local
+    checkpoint block does."""
+    spark = df.sparkSession
+    jdf = df._jdf
+    return DataFrame(spark._jsparkSession.createDataFrame(jdf.javaRDD(), jdf.schema()), spark)
 
 
 def release_tracked() -> None:
-    """Unpersist every tracked DataFrame and checkpoint (non-blocking —
-    Spark drops the blocks asynchronously; correctness is unaffected
-    because unpersisted plans recompute from lineage and checkpoints
-    are only released after their consumers' terminal actions ran)."""
-    global _TRACKED, _TRACKED_RDDS
+    """Unpersist every tracked DataFrame (non-blocking — Spark drops
+    the blocks asynchronously; correctness is unaffected because
+    unpersisted plans recompute from lineage)."""
+    global _TRACKED
     for df in _TRACKED:
         try:
             df.unpersist(blocking=False)
         except Exception:
             pass  # session already stopped — nothing to release
     _TRACKED = []
-    by_sc: dict[int, tuple[object, list[int]]] = {}
-    for sc, rid in _TRACKED_RDDS:
-        by_sc.setdefault(id(sc), (sc, []))[1].append(rid)
-    for sc, ids in by_sc.values():
-        _unpersist_rdd_ids(sc, ids)
-    _TRACKED_RDDS = []
-    _CKPT_IDS.clear()
 
 
 def ensure_workers_can_import(spark: SparkSession) -> None:

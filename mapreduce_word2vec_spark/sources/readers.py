@@ -202,9 +202,3 @@ def read_testdata(
         df = parallelize_scan(df, spark, f"{sf_dir}/{table}.parquet", key=key)
     cache[cache_key] = df
     return df
-
-
-def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every synthetic table as a temp view for spark.sql use."""
-    for table in TESTDATA_TABLES:
-        read_testdata(spark, sf_dir, table).createOrReplaceTempView(table)

@@ -11,7 +11,10 @@ if str(REPO) not in sys.path:
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
-REFERENCE_INPUT = "/root/reference/src/main/resources/input"
+# Small hand-written corpus with the reference input/ layout and its
+# tokenizer edge cases (digits, `_`, apostrophes, hyphens, upper case,
+# non-ASCII letters).
+REFERENCE_INPUT = str(REPO / "tests" / "fixtures" / "corpus")
 
 
 def driver_records() -> dict[str, list[dict]]:

@@ -169,12 +169,10 @@ def _kernel_of(spark):
 
 
 def test_bpe_trainer_storage_released(spark):
-    """The trainer must leave ZERO persistent RDD blocks behind once
-    release_tracked runs: persist-chain caches are bounded at two live
-    tables during training, and localCheckpoint blocks (which
-    DataFrame.unpersist cannot reach) are freed via the runtime's
-    RDD-id tracking — the round-3 advisor's cache-accumulation
-    finding, pinned."""
+    """The trainer must leave ZERO persistent RDD blocks behind when
+    it returns: its result is a Python list, so no frame outlives the
+    call, the persist chain is bounded at two live tables during
+    training, and the last ones are freed on return."""
     from mapreduce_word2vec_spark.operators.bpe import train_bpe_merges
     from mapreduce_word2vec_spark.runtime import release_tracked
 
@@ -184,8 +182,8 @@ def test_bpe_trainer_storage_released(spark):
         [("lowlow", 10), ("lowest", 5), ("newest", 7), ("wider", 3)],
         "word string, freq long",
     )
-    # 7 merges crosses two checkpoint boundaries (every 3rd merge)
     rules = train_bpe_merges(wf, n_merges=7)
     assert len(rules) >= 1
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
     release_tracked()
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0

@@ -1,11 +1,13 @@
-"""Connected components, approx-distinct error bounds, doc-embedding
-metric property, sliding-window stream mode, and foreachBatch sink."""
+"""Connected components, frame lifetime, PageRank plan shape,
+approx-distinct error bounds, doc-embedding metric property,
+sliding-window stream mode, and foreachBatch sink."""
 
 from __future__ import annotations
 
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -30,6 +32,37 @@ def test_connected_components_basic(spark):
     )
     got = {r["node"]: r["component"] for r in connected_components(edges).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
+
+
+def test_connected_components_long_path_plan_stays_flat(spark):
+    """A 20-node path needs 19 label rounds plus the round that sees no
+    change. Each round is re-rooted on its own RDD, so the returned
+    frame's plan is no larger than after a few rounds, and the run,
+    including a re-run after its caches are released, stays within a
+    time bound. Chained persisted rounds would double the rendered
+    plan every round."""
+    import time
+
+    from mapreduce_word2vec_spark.operators.graph import connected_components
+    from mapreduce_word2vec_spark.runtime import release_tracked
+
+    def path(n):
+        return spark.createDataFrame([Row(id_a=i, id_b=i + 1) for i in range(n - 1)])
+
+    def plan_len(df):
+        return len(df._jdf.queryExecution().executedPlan().toString())
+
+    start = time.monotonic()
+    short = plan_len(connected_components(path(4)))
+    # 8 rounds already show the doubling, in seconds instead of hours
+    assert plan_len(connected_components(path(8))) < 2 * short
+    cc = connected_components(path(20))
+    assert plan_len(cc) < 2 * short
+    expected = {(i, 0) for i in range(20)}
+    assert {(r["node"], r["component"]) for r in cc.collect()} == expected
+    release_tracked()
+    assert {(r["node"], r["component"]) for r in cc.collect()} == expected
+    assert time.monotonic() - start < 120
 
 
 def test_approx_count_distinct_error_bound(spark):
@@ -289,8 +322,12 @@ def test_hash_mod_sample_python_parity(spark):
     assert 0.7 < counts["train"] / n < 0.9
 
 
-def test_operator_caches_released_between_catalog_queries(spark):
-    """Operator-level persists (shingle/signature tables) are released
+@pytest.mark.parametrize(
+    "name", ["dedup_ngram_jaccard", "graph_pagerank", "dedup_clusters"]
+)
+def test_operator_caches_released_between_catalog_queries(spark, name):
+    """Operator-level persists (shingle tables, PageRank's edge/degree
+    tables, connected components' rolled label caches) are released
     when the next catalog query starts — a long-lived session running
     the catalog or bench repeatedly must not accumulate caches until
     LRU eviction pressure degrades unrelated queries."""
@@ -298,15 +335,106 @@ def test_operator_caches_released_between_catalog_queries(spark):
     from tests.conftest import SF_SMOKE
 
     qs = catalog.all_queries()
-    # dedup_ngram_jaccard persists its sized-shingle table (the r10
-    # one-pass MinHash/SimHash rewrites removed THEIR persists, so
-    # dedup_minhash_lsh no longer caches anything).
-    qs["dedup_ngram_jaccard"].fn(spark, SF_SMOKE).collect()
+    qs[name].fn(spark, SF_SMOKE).collect()
     assert spark.sparkContext._jsc.getPersistentRDDs().size() > 0
     # dedup_exact itself persists nothing, so after it starts the
     # previous query's caches must be gone.
     qs["dedup_exact"].fn(spark, SF_SMOKE).collect()
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
+
+
+def _matches_oracle(name, df):
+    from mapreduce_word2vec_spark.oracle import compare, duckdb_connection
+    from mapreduce_word2vec_spark.plans import catalog
+    from tests.conftest import SF_ORACLE
+
+    oracle = catalog.all_queries()[name].oracle
+    res = compare(name, df, oracle, duckdb_connection(SF_ORACLE))
+    assert res.match, str(res)
+
+
+@pytest.mark.parametrize("name", ["graph_pagerank", "dedup_clusters"])
+def test_frame_survives_later_catalog_build(spark, name):
+    """A returned frame stays valid after the caller builds another
+    catalog query: building dedup_exact releases the iterative
+    operator's caches, and the frame then recomputes from lineage to
+    its oracle's rows, within a time bound, instead of failing on a
+    missing block."""
+    import time
+
+    from mapreduce_word2vec_spark.plans import catalog
+    from tests.conftest import SF_ORACLE
+
+    qs = catalog.all_queries()
+    df = qs[name].fn(spark, SF_ORACLE)
+    qs["dedup_exact"].fn(spark, SF_ORACLE)
+    start = time.monotonic()
+    _matches_oracle(name, df)
+    assert time.monotonic() - start < 120
+
+
+def test_frame_survives_catalog_build_in_other_thread(spark):
+    """Two threads sharing one session: the second builds dedup_exact
+    between the first thread's pagerank build and its execution."""
+    import threading
+
+    from mapreduce_word2vec_spark.plans import catalog
+    from tests.conftest import SF_ORACLE
+
+    qs = catalog.all_queries()
+    built, other_built = threading.Event(), threading.Event()
+    errors: list[Exception] = []
+
+    def first():
+        try:
+            pr = qs["graph_pagerank"].fn(spark, SF_ORACLE)
+            built.set()
+            assert other_built.wait(timeout=600)
+            _matches_oracle("graph_pagerank", pr)
+        except Exception as e:
+            errors.append(e)
+        finally:
+            built.set()
+
+    def second():
+        try:
+            assert built.wait(timeout=600)
+            qs["dedup_exact"].fn(spark, SF_ORACLE)
+        except Exception as e:
+            errors.append(e)
+        finally:
+            other_built.set()
+
+    threads = [threading.Thread(target=first), threading.Thread(target=second)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=900)
+        assert not t.is_alive()
+    if errors:
+        raise errors[0]
+
+
+def test_pagerank_partial_sum_below_every_iteration_exchange(spark):
+    """Map-side combine before every PageRank iteration exchange: each
+    iteration's partial sum over node2 sits directly under an
+    ENSURE_REQUIREMENTS hash exchange on node2, so the shuffle carries
+    one row per (map task, node) instead of one per edge."""
+    import re
+
+    from mapreduce_word2vec_spark.plans import catalog
+    from mapreduce_word2vec_spark.plans.dedup_queries import _PR_ITERS
+    from tests.conftest import SF_ORACLE
+
+    df = catalog.all_queries()["graph_pagerank"].fn(spark, SF_ORACLE)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    combined = re.findall(
+        r"Exchange hashpartitioning\(node2#\d+L, \d+\), ENSURE_REQUIREMENTS[^\n]*\n"
+        r"[ :]*\+- (?:\*\(\d+\) )?HashAggregate\(keys=\[node2#\d+L\], "
+        r"functions=\[partial_sum\(c#\d+\)\]",
+        plan,
+    )
+    assert len(combined) == _PR_ITERS, plan
 
 
 def test_window_banked_recognizes_prior_round_record():
@@ -502,8 +630,6 @@ class TestBpeTokenIds:
         """Locks the contract to the reference's in-test ids
         (Test.scala:60-61: 'hello' -> 15339) whenever a real backend
         is present; skipped in this vocab-less environment."""
-        import pytest
-
         from mapreduce_word2vec_spark.functions import tokens
 
         if tokens._ENCODING is None and tokens._vocab_ranks() is None:

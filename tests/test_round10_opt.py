@@ -48,14 +48,6 @@ def _pairs(df, col):
     return {r[0]: r[1] for r in df.select("doc_id", col).collect()}
 
 
-def test_tokens_sql_twin(spark, docs):
-    from mapreduce_word2vec_spark.functions.text import tokens_expr, tokens_sql
-
-    a = _pairs(docs, tokens_expr("text").alias("t"))
-    b = _pairs(docs, F.expr(tokens_sql("text")).alias("t"))
-    assert a == b
-
-
 @pytest.mark.parametrize("n", [1, 2, 3, 5])
 def test_ngrams_sql_twin(spark, docs, n):
     from mapreduce_word2vec_spark.functions.text import (

@@ -47,7 +47,7 @@ def test_reducer_golden(spark):
 
 
 def test_embedding_pipeline_reference_corpus(spark):
-    """E2E on the reference's own input/ corpus (3 files, ~390 KB):
+    """E2E on the fixture corpus (3 files in the reference input/ layout):
     schema, token ids, count parity with the pure word-count path,
     vector structure (100-dim, finite, non-zero)."""
     cfg = EngineConfig(layer_size=100, iterations=1)

@@ -13,6 +13,7 @@ from mapreduce_word2vec_spark.operators.word2vec_parity import (
     per_partition_embeddings,
 )
 from mapreduce_word2vec_spark.session import EngineConfig
+from tests.conftest import REFERENCE_INPUT
 
 
 def test_tokenizer_matches_reference_semantics():
@@ -57,14 +58,14 @@ def test_per_partition_models_then_unweighted_mean(spark):
 
 
 def test_parity_pipeline_reference_corpus_small(spark):
-    """Parity pipeline E2E on the reference's two small input files
-    (the Gutenberg book excluded for test speed): output schema and
+    """Parity pipeline E2E on the fixture corpus's two reference-named
+    files (the third file excluded for test speed): output schema and
     count parity with the direct recount."""
     import shutil
     import tempfile
     from pathlib import Path
 
-    src = Path("/root/reference/src/main/resources/input")
+    src = Path(REFERENCE_INPUT)
     d = tempfile.mkdtemp(prefix="parity_corpus_")
     try:
         for f in ["test-file1.txt", "test-file2.txt"]:

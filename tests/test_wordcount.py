@@ -55,7 +55,7 @@ def test_unicode_is_ascii_semantics(spark):
 
 
 def test_reference_corpus_matches_python_recount(spark):
-    """E2E A1-A5+A13 on the reference's own input/ corpus vs an
+    """E2E A1-A5+A13 on the fixture corpus vs an
     independent Python recount with the exact M:102 regex."""
     got = _counts(corpus_word_counts(spark, REFERENCE_INPUT))
 
