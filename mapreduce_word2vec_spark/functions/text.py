@@ -173,7 +173,7 @@ def quality_score_expr(text_col: Column) -> Column:
     quality-filter heuristics, computed entirely JVM-side).
 
     The token array is LET-BOUND as a lambda variable
-    (single-element-array transform, the winnow_fingerprints_expr
+    (single-element-array transform, the winnow_fingerprints_sql
     trick): the score references the array three times, and a bare
     ``tokens_expr`` there re-runs the two regex passes per reference —
     interpreted HOF subtrees get no codegen CSE. Measured 0.775 →
@@ -304,7 +304,8 @@ WINNOW_WINDOW = 4
 # helpers build the IDENTICAL expression as SQL text in Python (free)
 # so call sites pay ONE parsed F.expr() round trip. Each twin mirrors
 # its Column sibling operator-for-operator; value identity is pinned
-# by tests/test_round10_opt.py and the oracle gates.
+# by tests/test_text_sql_twins.py and the oracle gates. The winnowing
+# kernel exists only as SQL text (doc_winnowing's DuckDB oracle pins it).
 
 def ngrams_sql(arr: str, n: int = 2, sep: str = " ") -> str:
     """SQL text of :func:`ngrams_expr` over array expression ``arr``.
@@ -332,8 +333,14 @@ def string_hash_sql(s: str) -> str:
 
 
 def winnow_fingerprints_sql(ws: str) -> str:
-    """SQL text of :func:`winnow_fingerprints_expr` over token-array
-    expression ``ws`` (referenced once)."""
+    """SQL text of the winnowing fingerprint SET (distinct window-mins
+    of 3-gram hashes, 4-hash windows) over token-array expression
+    ``ws`` (referenced once) — the selection kernel of the MOSS
+    algorithm (Schleimer/Wilkerson/Aiken §2: any shared span of at
+    least WINNOW_WINDOW + WINNOW_GRAM - 1 tokens contributes at least
+    one COMMON selected fingerprint; property-tested). Arrays are
+    let-bound as lambda variables (single-element-array transform) so
+    nothing re-evaluates per window — see doc_winnowing's plan notes."""
     grams = ngrams_sql("wn_ws", WINNOW_GRAM)
     hashes = f"transform({grams}, wn_g -> {string_hash_sql('wn_g')})"
     over_hashes = (
@@ -343,28 +350,3 @@ def winnow_fingerprints_sql(ws: str) -> str:
     )
     over_tokens = f"get(transform(array({hashes}), wn_hs -> {over_hashes}), 0)"
     return f"get(transform(array({ws}), wn_ws -> {over_tokens}), 0)"
-
-
-def winnow_fingerprints_expr(ws: Column) -> Column:
-    """Winnowing fingerprint SET (distinct window-mins of 3-gram
-    hashes, 4-hash windows) for a token-array column — the selection
-    kernel of the MOSS algorithm (Schleimer/Wilkerson/Aiken §2:
-    any shared span of at least WINNOW_WINDOW + WINNOW_GRAM - 1
-    tokens contributes at least one COMMON selected fingerprint;
-    property-tested). Arrays are let-bound as lambda variables
-    (single-element-array transform) so nothing re-evaluates per
-    window — see doc_winnowing's plan notes."""
-
-    def over_hashes(hs):
-        mins = F.transform(
-            F.sequence(F.lit(1), F.size(hs) - (WINNOW_WINDOW - 1)),
-            lambda j: F.array_min(F.slice(hs, j, WINNOW_WINDOW)),
-        )
-        return F.array_distinct(mins)
-
-    def over_tokens(ws_b):
-        grams = ngrams_expr(ws_b, WINNOW_GRAM)
-        hashes = F.transform(grams, string_hash_expr)
-        return F.get(F.transform(F.array(hashes), over_hashes), 0)
-
-    return F.get(F.transform(F.array(ws), over_tokens), 0)

@@ -3,9 +3,11 @@
 Every operator the engine claims (SURVEY §2.B) is registered here as a
 named query: a PySpark callable ``(spark, sf_dir) -> DataFrame`` plus,
 where SQL-expressible, an equivalent ANSI-SQL oracle string that DuckDB
-runs on the same parquet tables. The driver hash-compares the two at
-sf0.01 (``CORRECTNESS_r{N}.json``); queries without an oracle get a
-rows-only check and are covered by golden/property tests instead.
+runs on the same parquet tables. The external checker hash-compares
+the two at sf0.01 for the first 50 names of :func:`all_queries`: the
+sentinels (one oracle-backed query per plans module) followed by
+registration order. Queries without an oracle get a rows-only check
+and are covered by golden/property tests instead.
 
 Column-name contract: every computed column is aliased identically in
 the Spark code and the oracle SQL — the driver sorts columns by name
@@ -49,87 +51,22 @@ _QUERY_MODULES = (
 
 _loaded = False
 
-# The driver's CORRECTNESS check covers only the FIRST 50
-# registrations, so registration order is verification budget. Rounds
-# 1-9 verified 417 distinct queries driver-green (r9 window: 50/50,
-# seventh consecutive all-green window). This round-10 window executes
-# the close-out plan recorded in round 9 (comment below): the FINAL 15
-# never-driver-tested names (9 oracle-backed + 6 rows-only whose value
-# semantics are pinned by driver-green contract twins — see
-# ROWS_ONLY.md) enter the window, completing driver coverage of the
-# whole catalog; the other 35 slots become green sentinels sweeping
-# EVERY family, weighted toward the queries whose internals this
-# optimization round changed (scan-plan cache, one-pass MinHash,
-# pipeline explode-emit, SQL-twin expressions) so a value regression
-# in this round's rewrites surfaces in the driver's own check.
-_PRIORITY = (
-    # --- final never-driver-tested names (15: 9 oracle + 6 rows-only) ---
-    "q22_prospect_customers",
-    "agg_mad",
-    "q12_priority_delay",
-    "q21_late_suppliers",
-    "ref_pipeline_documents",
-    "w2v_synonyms",
-    "doc_embedding_knn",
-    "emb_pairwise_cos_histogram",
-    "knn_bruteforce_blas",
-    "brp_lsh_pairs",
-    "dedup_mllib_minhash",
-    "events_ohlc_bars",
-    "events_time_weighted_avg",
-    "events_heatmap_dow_hour",
-    "multimodal_frames",
-    # --- green sentinels (35), every family, r10-touched first ---
-    # text (6) — pipeline explode-emit, winnow SQL twin, quality core
-    "doc_winnowing",
-    "pipeline_curation",
-    "pipeline_pretrain_mix",
-    "doc_quality",
-    "doc_tfidf",
-    "doc_wordcount",
-    # dedup + graph (6) — one-pass MinHash, sized shingles, symmetrize
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_semantic_clustered",
-    "dedup_exact",
-    "graph_pagerank",
-    # relational (8) — scan-plan cache covers every read
+# One oracle-backed query per plans module, placed ahead of the rest of
+# the catalog (which follows in registration order). The external
+# checker hash-compares only the first 50 names, so every family is
+# represented there.
+_SENTINELS = (
     "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier",
-    "q6_forecast_revenue",
-    "sort_limit",
-    "merge_upsert",
-    "window_topk_orders",
-    "join_asof",
-    # streaming (4)
-    "stream_tumbling",
-    "stream_session",
-    "stream_interval_join",
-    "events_sliding_distinct_bitmap",
-    # similarity (5) — PQ/min_by rewrites
+    "doc_winnowing",
+    "dedup_minhash_lsh",
     "knn_bruteforce",
-    "knn_ivf_pq",
-    "knn_pq_adc",
-    "emb_pq_quantize",
-    "hybrid_search_rrf",
-    # embedding (2)
     "emb_label_mean",
-    "emb_norm_stats",
-    # multimodal (2), udf (1), source (1)
+    "stream_tumbling",
     "multimodal_decode",
-    "multimodal_tar_index",
     "udf_scalar_pandas",
     "source_csv_roundtrip",
 )
 
-# Round-11+ window plan: the catalog is now fully driver-verified
-# (417 through r9 + the final 15 above minus the no_oracle rows-only
-# names, which are pinned by their contract twins). From r11 the
-# window is a pure rotating regression tripwire: keep one green
-# sentinel per family and rotate the remainder across the catalog so
-# every name is re-verified on a bounded cadence.
 
 def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
@@ -180,7 +117,7 @@ def _load() -> None:
 
 def all_queries() -> dict[str, Query]:
     _load()
-    ordered = {n: _REGISTRY[n] for n in _PRIORITY if n in _REGISTRY}
+    ordered = {n: _REGISTRY[n] for n in _SENTINELS}
     ordered.update((n, q) for n, q in _REGISTRY.items() if n not in ordered)
     return ordered
 

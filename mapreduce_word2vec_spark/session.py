@@ -18,7 +18,7 @@ pandas-UDF crossing.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
@@ -32,11 +32,6 @@ class EngineConfig:
     min_word_frequency: int = 1
     seed: int = 42
     iterations: int = 1
-
-    # Engine-only knobs (no reference equivalent).
-    shuffle_partitions: int = field(
-        default_factory=lambda: int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
 
 
 DEFAULT_CONFIG = EngineConfig()

@@ -16,75 +16,18 @@ SF_ORACLE = "/root/testdata/sf0.01"
 # non-ASCII letters).
 REFERENCE_INPUT = str(REPO / "tests" / "fixtures" / "corpus")
 
-
-def driver_records() -> dict[str, list[dict]]:
-    """Every per-name record from the committed CORRECTNESS_r*.json
-    files — the driver's own verification history. Window-composition
-    tests derive 'driver-tested' / 'driver-green' from these instead
-    of hardcoding name lists (ADVICE r6: a hardcoded exemption rots
-    silently when the catalog grows)."""
-    import json
-
-    out: dict[str, list[dict]] = {}
-    for p in sorted(REPO.glob("CORRECTNESS_r*.json")):
-        for name, rec in json.loads(p.read_text()).items():
-            out.setdefault(name, []).append(rec)
-    return out
-
-
-def driver_tested() -> set[str]:
-    """Names the driver has ever run (green or not)."""
-    return set(driver_records())
-
-
-def window_banked(window: list[str]) -> bool:
-    """True iff the highest-numbered ON-DISK CORRECTNESS_r*.json
-    covers exactly the current 50-name window with every row green
-    (or rows-only names ran without a real error). In that state the
-    driver has already banked this window's verification and the
-    rotation-freshness asserts would demand next round's rotation
-    early — the designed post-round interregnum (VERDICT r7 "What's
-    wrong #1" / "Next round #7"). Rotation discipline re-arms the
-    moment a new round's record lands with a different window."""
-    import json
-    import re
-
-    paths = sorted(
-        REPO.glob("CORRECTNESS_r*.json"),
-        key=lambda p: int(re.search(r"r(\d+)", p.stem).group(1)),
-    )
-    if not paths:
-        return False
-    latest = json.loads(paths[-1].read_text())
-    if set(latest) != set(window):
-        return False
-    for rec in latest.values():
-        ok_green = (
-            rec.get("rows_match")
-            and rec.get("schema_match")
-            and rec.get("hash_match")
-            and not rec.get("err")
-        )
-        ok_rows_only = rec.get("err") == "no_oracle" and (
-            rec.get("spark_rows") or 0
-        ) >= 0 and rec.get("spark_rows") is not None
-        if not (ok_green or ok_rows_only):
-            return False
-    return True
-
-
-def driver_green() -> set[str]:
-    """Names with at least one fully value-green driver record
-    (rows + schema + hash all matched, no error)."""
-    return {
-        name
-        for name, recs in driver_records().items()
-        if any(
-            r.get("rows_match") and r.get("schema_match") and r.get("hash_match")
-            and not r.get("err")
-            for r in recs
-        )
-    }
+# Text edge cases for expression-level tests: empty strings, nulls,
+# digit-bearing tokens, short and punctuation-heavy documents.
+EDGE_TEXTS = [
+    (0, "The quick brown fox jumps over the lazy dog near the river bank"),
+    (1, "hello world hello world hello world and more filler words here"),
+    (2, "short"),
+    (3, ""),
+    (4, None),
+    (5, "digits123 mixed a1b2 under_score plain words only remain after filtering"),
+    (6, "a b c d e f g h i j k l m n o p q r s t"),
+    (7, "Punctuation, everywhere! Does it; split: correctly? (yes) [maybe] {no}"),
+]
 
 
 @pytest.fixture(scope="session")
@@ -100,3 +43,8 @@ def duck():
     from mapreduce_word2vec_spark.oracle import duckdb_connection
 
     return duckdb_connection(SF_SMOKE)
+
+
+@pytest.fixture(scope="session")
+def docs(spark):
+    return spark.createDataFrame(EDGE_TEXTS, ["doc_id", "text"])

@@ -136,3 +136,47 @@ def test_contamination_fires_on_fixture(spark):
 
     out = catalog.all_queries()["doc_contamination"].fn(spark, SF_ORACLE)
     assert out.count() >= 3
+
+
+def test_simhash_one_pass_equals_distinct_broadcast(spark, docs):
+    """The one-pass simhash hashes each (doc, word) tf row in place; the
+    older form hashed each DISTINCT word once and broadcast-joined the
+    hash back. Same hash per word either way — signatures must match."""
+    from mapreduce_word2vec_spark.functions.text import (
+        string_hash_expr,
+        tokens_expr,
+    )
+    from mapreduce_word2vec_spark.operators.dedup import simhash_signatures
+
+    new = {
+        r["doc_id"]: r["sh"] for r in simhash_signatures(docs).collect()
+    }
+
+    toks = docs.select(
+        F.col("doc_id"), F.explode(tokens_expr("text")).alias("w")
+    )
+    tf = toks.groupBy("doc_id", "w").agg(F.count("*").alias("tf"))
+    dim = (
+        tf.select("w")
+        .distinct()
+        .select("w", string_hash_expr(F.col("w")).alias("h"))
+    )
+    hashed = tf.join(F.broadcast(dim), "w").select("doc_id", "tf", "h")
+    bits = [
+        F.sum(
+            F.when(F.col("h").bitwiseAND(F.lit(1 << j)) > 0, F.col("tf")).otherwise(
+                F.lit(0)
+            )
+        ).alias(f"b{j}")
+        for j in range(32)
+    ]
+    agg = hashed.groupBy("doc_id").agg(F.sum("tf").alias("tot"), *bits)
+    sh = sum(
+        F.when(F.col(f"b{j}") * 2 - F.col("tot") > 0, F.lit(1 << j)).otherwise(
+            F.lit(0)
+        )
+        for j in range(32)
+    )
+    old = {r["doc_id"]: r["sh"] for r in agg.select("doc_id", sh.alias("sh")).collect()}
+    assert len(new) >= 4
+    assert new == old

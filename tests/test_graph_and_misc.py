@@ -437,110 +437,6 @@ def test_pagerank_partial_sum_below_every_iteration_exchange(spark):
     assert len(combined) == _PR_ITERS, plan
 
 
-def test_window_banked_recognizes_prior_round_record():
-    """The interregnum rule (VERDICT r7 #7) must recognize a window
-    the driver has fully banked: the committed CORRECTNESS_r07 record
-    covers the r7 window all-green (incl. its 2 rows-only tokenizer
-    names), so window_banked(r7 window) is True IF r7 is still the
-    latest record — while the rotated r8 window (different names) is
-    never 'banked' by r7's record, so rotation discipline re-arms."""
-    import json
-    import re
-
-    from tests.conftest import REPO, window_banked
-
-    paths = sorted(
-        REPO.glob("CORRECTNESS_r*.json"),
-        key=lambda p: int(re.search(r"r(\d+)", p.stem).group(1)),
-    )
-    latest = json.loads(paths[-1].read_text())
-    latest_round = int(re.search(r"r(\d+)", paths[-1].stem).group(1))
-    r7_window = list(json.loads((REPO / "CORRECTNESS_r07.json").read_text()))
-    if latest_round == 7:
-        assert window_banked(r7_window)
-    else:
-        # A later record exists: r7's window is no longer the latest
-        # and must not read as banked unless it IS that later window.
-        assert window_banked(r7_window) == (set(latest) == set(r7_window))
-    # A window with one name swapped out is never banked.
-    mutated = list(r7_window)
-    mutated[0] = "q1_pricing_summary" if mutated[0] != "q1_pricing_summary" else "q6_forecast_revenue"
-    assert not window_banked(mutated)
-
-
-def test_correctness_window_covers_all_families():
-    """The driver hash-checks only the FIRST 50 registered queries, so
-    catalog order is verification budget. Composition is checked
-    against the committed driver records (ADVICE r6 — derived, not
-    hardcoded): the window must be exactly the priority list; every
-    slot is either a NEVER-driver-tested name (these take absolute
-    priority — no backlog name may wait outside the window while a
-    sentinel holds a slot) or a driver-GREEN sentinel; sentinels must
-    span >= 3 distinct families (every registering module once the
-    backlog no longer fills the window — the r9-recorded close-out
-    plan); and any rows-only name in the window must have a
-    driver-green value-checked contract twin pinning its semantics
-    (mapping per ROWS_ONLY.md).
-
-    Interregnum rule (VERDICT r7 #7): when the latest committed
-    CORRECTNESS record covers exactly this window with all rows
-    green, the driver has already banked it — the freshness asserts
-    stand down until the next round's record re-arms them."""
-    from mapreduce_word2vec_spark.plans import catalog
-    from tests.conftest import driver_green, driver_tested, window_banked
-
-    qs = catalog.all_queries()
-    names = list(qs)
-    assert len(catalog._PRIORITY) == 50
-    assert names[:50] == list(catalog._PRIORITY)
-    window = names[:50]
-
-    if window_banked(window):
-        return
-
-    tested, green = driver_tested(), driver_green()
-
-    # Never-tested names take absolute priority: none may sit outside
-    # the window while an already-tested sentinel occupies a slot.
-    sentinels = [n for n in window if n in tested]
-    backlog_outside = [
-        n for n in names[50:] if n not in tested and qs[n].oracle is not None
-    ]
-    assert not (sentinels and backlog_outside), (sentinels, backlog_outside)
-
-    # Sentinels must be GREEN (a red sentinel wastes the slot twice).
-    assert all(n in green for n in sentinels), [
-        n for n in sentinels if n not in green
-    ]
-    # Family spread: >= 3 families always; once sentinels fill most of
-    # the window (close-out phase), they must sweep EVERY family.
-    sentinel_mods = {qs[n].module for n in sentinels}
-    assert len(sentinel_mods) >= 3, sentinel_mods
-    if len(sentinels) > 25:
-        assert sentinel_mods == {q.module for q in qs.values()}, (
-            {q.module for q in qs.values()} - sentinel_mods
-        )
-
-    # Rows-only window names ride on a driver-green contract twin
-    # (pairings recorded in ROWS_ONLY.md).
-    rows_only = [n for n in window if qs[n].oracle is None]
-    twins = {
-        "tokenizer_bpe_train": "tokenizer_bpe_contract",
-        "tokenizer_bpe_fertility": "tokenizer_bpe_contract",
-        "ref_pipeline_documents": "ref_pipeline_contract",
-        "w2v_synonyms": "w2v_synonyms_contract",
-        "doc_embedding_knn": "doc_embedding_knn_contract",
-        "knn_bruteforce_blas": "knn_bruteforce_blas_parity",
-        "brp_lsh_pairs": "brp_lsh_recall",
-        "dedup_mllib_minhash": "dedup_mllib_minhash_recall",
-    }
-    for n in rows_only:
-        assert n in twins and twins[n] in green, (
-            f"rows-only window name {n!r} lacks a driver-green "
-            "value-checked contract twin"
-        )
-
-
 def test_sample_bucket_overflow_safe(spark):
     """Spark, DuckDB, and Python bigints agree on the sampling bucket
     even for doc_id near int64 max (the pre-fix formula wrapped int64

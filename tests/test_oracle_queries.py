@@ -24,8 +24,11 @@ def test_query_matches_oracle(spark, duck, name):
 
 def test_all_queries_run_at_smoke_sf(spark):
     """Queries without an oracle still must execute and return a
-    stable schema (rows-only driver check)."""
+    stable schema (rows-only check). Oracle-backed queries are executed
+    and compared by test_query_matches_oracle."""
     for name, q in catalog.all_queries().items():
+        if q.oracle is not None:
+            continue
         df = q.fn(spark, SF_SMOKE)
         assert df.columns, name
         df.limit(5).collect()

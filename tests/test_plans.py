@@ -354,53 +354,6 @@ def test_compact_and_percentile_rollup_plan_shapes(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_driver_window_spans_all_families(spark):
-    """The driver's CORRECTNESS check covers only the FIRST 50
-    registrations — registration order is verification budget. The
-    coverage rule is DERIVED from the committed driver records
-    (ADVICE r6: the old hardcoded prefix list + udtf_ exemption would
-    rot silently as families go fully green): any family with ZERO
-    driver-green names must keep >= 1 representative inside the
-    window; families that already banked a green row may yield all
-    their slots to the never-tested backlog. Exact window composition
-    is asserted in test_correctness_window_covers_all_families.
-    Interregnum rule (VERDICT r7 #7): a window the driver already
-    banked all-green this round passes as-is."""
-    from tests.conftest import driver_green, window_banked
-
-    qs = catalog.all_queries()
-    window = list(qs)[:50]
-    green = driver_green()
-
-    if window_banked(window):
-        return
-
-    # Family = the plans module that registered the query (recorded at
-    # registration; name prefixes are too granular — each TPC-H qN
-    # would count as its own family).
-    never_green_modules = {q.module for q in qs.values()} - {
-        qs[n].module for n in qs if n in green
-    }
-    for mod in sorted(never_green_modules):
-        assert any(qs[n].module == mod for n in window), (
-            f"module {mod!r} has no driver-green name yet and no "
-            "representative in the 50-slot window"
-        )
-    # And the budget is actually spent on verification: every
-    # never-driver-TESTED name must sit inside the window until the
-    # backlog is cleared (close-out phase: fewer than 50 remain and
-    # the spare slots become green sentinels — the r9-recorded plan;
-    # composition asserted in
-    # test_correctness_window_covers_all_families).
-    from tests.conftest import driver_tested
-
-    tested = driver_tested()
-    missing = [n for n in qs if n not in tested and n not in window]
-    assert not missing, (
-        f"never-driver-tested names outside the window: {missing}"
-    )
-
-
 def test_salted_join_no_cartesian_and_bigram_no_self_join(spark):
     """The salted join must stay an equi-join on (key, salt); the
     bigram LM must score via windows over one exploded stream (no
@@ -603,40 +556,38 @@ def test_dau_wau_has_no_nested_loop(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_priority_window_names_all_registered_and_oracle_backed(spark):
-    """all_queries() silently SKIPS unknown _PRIORITY names — a typo
-    would shrink the driver's verified window without any failure.
-    Every priority name must resolve to a registered query. A
-    rows-only (no-oracle) name gets only the driver's weaker
-    rows-check, so it may hold a window slot ONLY while clearing the
-    backlog of rows-only names whose value semantics are already
-    pinned by a driver-green contract twin (the r7 window carries the
-    two tokenizer_bpe_* names on tokenizer_bpe_contract's green row —
-    asserted in test_correctness_window_covers_all_families)."""
-    from mapreduce_word2vec_spark.plans.catalog import _PRIORITY
+# Rows-only query -> oracle-backed contract twin that pins its values
+# (the pairing ROWS_ONLY.md documents).
+ROWS_ONLY_TWINS = {
+    "tokenizer_bpe_train": "tokenizer_bpe_contract",
+    "tokenizer_bpe_fertility": "tokenizer_bpe_contract",
+    "ref_pipeline_documents": "ref_pipeline_contract",
+    "w2v_synonyms": "w2v_synonyms_contract",
+    "doc_embedding_knn": "doc_embedding_knn_contract",
+    "knn_bruteforce_blas": "knn_bruteforce_blas_parity",
+    "brp_lsh_pairs": "brp_lsh_recall",
+    "dedup_mllib_minhash": "dedup_mllib_minhash_recall",
+}
 
+
+def test_catalog_order_sentinels_and_rows_only_twins():
+    """The external checker hash-compares only the first 50 names of
+    all_queries(). They open with the sentinels, one oracle-backed query
+    per plans module, and every one of the 50 has an oracle. Each
+    rows-only query has an oracle-backed contract twin."""
     qs = catalog.all_queries()
-    no_oracle = set()
-    for name in _PRIORITY:
-        assert name in qs, f"priority name {name!r} not registered"
-        if qs[name].oracle is None:
-            no_oracle.add(name)
-    # Twin-pinned rows-only names per ROWS_ONLY.md (each contract twin
-    # is driver-green; test_correctness_window_covers_all_families
-    # asserts the pairing against the committed records).
-    allowed = {
-        "tokenizer_bpe_train",
-        "tokenizer_bpe_fertility",
-        "ref_pipeline_documents",
-        "w2v_synonyms",
-        "doc_embedding_knn",
-        "knn_bruteforce_blas",
-        "brp_lsh_pairs",
-        "dedup_mllib_minhash",
-    }
-    assert no_oracle <= allowed, (
-        f"no-oracle queries waste window slots: {no_oracle - allowed}"
-    )
+    names = list(qs)
+    sentinels = list(catalog._SENTINELS)
+    assert names[: len(sentinels)] == sentinels
+    for name in sentinels:
+        assert qs[name].oracle is not None, name
+    sentinel_mods = [qs[n].module for n in sentinels]
+    assert sorted(sentinel_mods) == sorted({q.module for q in qs.values()})
+    assert [n for n in names[:50] if qs[n].oracle is None] == []
+
+    assert {n for n, q in qs.items() if q.oracle is None} == set(ROWS_ONLY_TWINS)
+    for name, twin in ROWS_ONLY_TWINS.items():
+        assert twin in qs and qs[twin].oracle is not None, (name, twin)
 
 
 def test_oracle_backed_schemas_are_driver_canonicalizable(spark):

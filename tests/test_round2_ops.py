@@ -111,7 +111,7 @@ def test_winnowing_shared_span_guarantee(spark):
 
     from mapreduce_word2vec_spark.functions.text import (
         tokens_expr,
-        winnow_fingerprints_expr,
+        winnow_fingerprints_sql,
     )
 
     shared = "alpha beta gamma delta epsilon zeta"  # 6-token shared span
@@ -123,9 +123,11 @@ def test_winnowing_shared_span_guarantee(spark):
         ],
         "doc_id int, text string",
     )
-    fps = docs.select(
-        "doc_id", winnow_fingerprints_expr(tokens_expr("text")).alias("fps")
-    ).collect()
+    fps = (
+        docs.select("doc_id", tokens_expr("text").alias("ws"))
+        .select("doc_id", F.expr(winnow_fingerprints_sql("ws")).alias("fps"))
+        .collect()
+    )
     sets = {r.doc_id: set(r.fps) for r in fps}
     assert sets[1] & sets[2], "shared 6-token span must yield a common fingerprint"
     assert not (sets[1] & sets[3])

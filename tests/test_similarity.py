@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import math
+import random
 
 import pytest
 from pyspark.sql import Row
@@ -154,3 +155,33 @@ def test_pq_adc_recall_vs_exact(spark):
     got = {(r["query_id"], r["neighbor_id"]) for r in adc}
     recall = len(got & exact) / len(exact)
     assert recall >= 0.2, recall
+
+
+def test_minby_argmin_equals_window_argmin(spark):
+    """min_by(payload, struct(dist, id)), the argmin behind PQ coding
+    and SemDeDup assignment, must reproduce the row_number-over-(dist,
+    id) window argmin including tie-breaks."""
+    from pyspark.sql import Window
+
+    rng = random.Random(7)
+    rows = [
+        (v, c, float(rng.choice([0.25, 0.5, 0.5, 1.0, 2.0])))
+        for v in range(200)
+        for c in range(8)
+    ]
+    df = spark.createDataFrame(rows, ["vec_id", "cid", "sqd"])
+    w = Window.partitionBy("vec_id").orderBy(F.asc("sqd"), F.asc("cid"))
+    via_window = {
+        (r.vec_id, r.cid)
+        for r in df.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+        .select("vec_id", "cid")
+        .collect()
+    }
+    via_minby = {
+        (r.vec_id, r.cid)
+        for r in df.groupBy("vec_id")
+        .agg(F.min_by("cid", F.struct("sqd", "cid")).alias("cid"))
+        .collect()
+    }
+    assert via_window == via_minby
