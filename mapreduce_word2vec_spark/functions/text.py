@@ -59,6 +59,15 @@ def tokens_expr(text_col: str | Column) -> Column:
     return F.array_remove(F.split(cleaned, r"[^a-z]+"), "")
 
 
+# DuckDB SQL of :func:`tokens_expr` over column ``text``: the
+# reference's own split-then-filter formulation (M:102), which the
+# oracles use to pin the replace-then-split Spark kernel.
+TOKENS_DUCKDB = (
+    rf"list_filter(regexp_split_to_array(lower(text), '\W+'),"
+    rf" w -> regexp_matches(w, '{WORD_REGEX}'))"
+)
+
+
 def explode_words(df: DataFrame, text_col: str, out_col: str = "word") -> DataFrame:
     """One row per reference-semantics token of ``text_col``."""
     return df.select(
@@ -70,27 +79,6 @@ def remove_stopwords(tokens: Column) -> Column:
     """Drop STOPWORDS from a token array (stays JVM-side)."""
     lit_stops = F.array(*[F.lit(s) for s in STOPWORDS])
     return F.filter(tokens, lambda w: ~F.array_contains(lit_stops, w))
-
-
-def ngrams_expr(tokens: Column, n: int = 2, sep: str = " ") -> Column:
-    """Word n-grams from a token array via higher-order functions.
-
-    Built by zipping the array with its own k-shifted tails
-    (``zip_with`` pads with NULL, ``concat`` propagates NULL, filter
-    drops the tail) — no per-index ``slice`` allocation. Measured 10×
-    faster than the ``transform(sequence, i -> slice)`` formulation at
-    sf0.1 (HOFs are interpreted; per-element work dominates), same
-    results. No UDF, no shuffle.
-    """
-    if n < 1:
-        raise ValueError("n must be >= 1")
-    if n == 1:
-        return tokens
-    out = tokens
-    for k in range(1, n):
-        shifted = F.slice(tokens, k + 1, F.greatest(F.size(tokens) - k, F.lit(0)))
-        out = F.zip_with(out, shifted, lambda a, b: F.concat(a, F.lit(sep), b))
-    return F.filter(out, lambda g: g.isNotNull())
 
 
 def bm25_doc_scores(
@@ -190,9 +178,9 @@ def quality_score_expr(text_col: Column) -> Column:
 
 
 def quality_score_of(words: Column, text_col: Column) -> Column:
-    """The quality score over an ALREADY-BOUND token array (the core of
-    :func:`quality_score_expr`, exposed so pipelines that let-bind the
-    tokens once for several outputs — pipeline_curation's quality +
+    """The quality score over an ALREADY-COMPUTED token array (the core
+    of :func:`quality_score_expr`, exposed so pipelines that tokenize
+    once for several outputs — pipeline_curation's quality +
     fingerprint — reuse the identical arithmetic). Unrounded."""
     n_chars = F.length(text_col)
     punct = F.length(F.regexp_replace(text_col, r"[a-zA-Z0-9\s]", ""))
@@ -258,57 +246,34 @@ FINGERPRINT_MOD = 1_000_000_007
 FINGERPRINT_BASE = 31
 
 
-def string_hash_expr(s: Column) -> Column:
-    """Deterministic polynomial hash of a string → [0, 1e9+7).
-
-    Folded left over character codes, so it is reproducible in any
-    engine with array-fold semantics (the cross-engine contract the
-    dedup operators rely on). Not a cryptographic or even
-    well-diffused hash — it's the *shared* hash.
-    """
-    codes = F.transform(F.split(s, ""), lambda c: F.ascii(c))
-    return F.aggregate(
-        codes,
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * FINGERPRINT_BASE + c) % FINGERPRINT_MOD,
-    )
-
-
-def fingerprint_expr(tokens: Column) -> Column:
-    """Order-sensitive rolling-hash document fingerprint.
-
-    Polynomial hash over per-token hashes, folded left with
-    ``aggregate`` (a Catalyst higher-order function — sequential,
-    deterministic). Token hash = polynomial char hash mod 1e9+7, so
-    every intermediate fits in int64 without overflow and the same
-    arithmetic is expressible in ANSI SQL for the oracle.
-    """
-    token_hashes = F.transform(tokens, string_hash_expr)
-    return F.aggregate(
-        token_hashes,
-        F.lit(0).cast("long"),
-        lambda acc, h: (acc * FINGERPRINT_BASE + h) % FINGERPRINT_MOD,
-    )
-
-
 WINNOW_GRAM = 3
 WINNOW_WINDOW = 4
 
 
-# --- SQL-text twins (r10) -------------------------------------------
+# --- one builder per text kernel ------------------------------------
 #
-# py4j round trips cost ~1-2 ms EACH on the bench rig, so constructors
-# that loop F.transform/F.zip_with/F.slice Column calls spend hundreds
-# of ms of serial DRIVER time building plans (the r5 simhash lesson,
-# where ~0.9 s of Column-tree chatter dominated the query). These
-# helpers build the IDENTICAL expression as SQL text in Python (free)
-# so call sites pay ONE parsed F.expr() round trip. Each twin mirrors
-# its Column sibling operator-for-operator; value identity is pinned
-# by tests/test_text_sql_twins.py and the oracle gates. The winnowing
-# kernel exists only as SQL text (doc_winnowing's DuckDB oracle pins it).
+# n-grams, the string hash, the fingerprint and winnowing each have ONE
+# Spark builder, and it returns SQL text that the call site parses with
+# a single F.expr(). The Column-tree form of the same expression costs
+# a py4j round trip (~1-2 ms) PER NODE, so constructors that loop
+# F.transform/F.zip_with/F.slice spend hundreds of ms of serial driver
+# time building plans (the r5 simhash lesson: ~0.9 s of Column-tree
+# chatter dominated the query); the SQL text is built in Python for
+# free. Array operands are referenced by name (a column or lambda
+# variable), so project an expensive array such as ``tokens_expr`` into
+# a column first. The tokenizer, the hash and the fingerprint each have
+# ONE DuckDB fragment for the oracles, next to its Spark builder;
+# tests/test_fuzz_parity.py pins the builders to Python references and
+# each fragment to its builder.
 
 def ngrams_sql(arr: str, n: int = 2, sep: str = " ") -> str:
-    """SQL text of :func:`ngrams_expr` over array expression ``arr``.
+    """Word n-grams of array expression ``arr``.
+
+    Built by zipping the array with its own k-shifted tails
+    (``zip_with`` pads with NULL, ``concat`` propagates NULL, filter
+    drops the tail) — no per-index ``slice`` allocation. Measured 10×
+    faster than the ``transform(sequence, i -> slice)`` formulation at
+    sf0.1 (HOFs are interpreted; per-element work dominates).
 
     ``arr`` is referenced multiple times — pass a cheap reference (a
     column name or lambda variable), never an expensive expression."""
@@ -324,11 +289,50 @@ def ngrams_sql(arr: str, n: int = 2, sep: str = " ") -> str:
 
 
 def string_hash_sql(s: str) -> str:
-    """SQL text of :func:`string_hash_expr` over string expression ``s``."""
+    """Deterministic polynomial hash of string expression ``s`` →
+    [0, 1e9+7).
+
+    Folded left over character codes, so it is reproducible in any
+    engine with array-fold semantics (the cross-engine contract the
+    dedup operators rely on). Not a cryptographic or even
+    well-diffused hash — it's the *shared* hash."""
     return (
         f"aggregate(transform(split({s}, ''), sh_c -> ascii(sh_c)), "
         f"CAST(0 AS BIGINT), (sh_acc, sh_c) -> "
         f"(sh_acc * {FINGERPRINT_BASE} + sh_c) % {FINGERPRINT_MOD})"
+    )
+
+
+def string_hash_duckdb(s: str) -> str:
+    """DuckDB SQL of :func:`string_hash_sql` over string expression ``s``."""
+    return (
+        f"list_reduce(list_prepend(CAST(0 AS BIGINT),"
+        f" list_transform(split({s}, ''), c -> CAST(ascii(c) AS BIGINT))),"
+        f" (a, b) -> (a * {FINGERPRINT_BASE} + b) % {FINGERPRINT_MOD})"
+    )
+
+
+def fingerprint_sql(ws: str) -> str:
+    """Order-sensitive rolling-hash fingerprint of token-array
+    expression ``ws`` (referenced once).
+
+    Polynomial hash over per-token :func:`string_hash_sql` values,
+    folded left with ``aggregate`` (sequential, deterministic). Every
+    intermediate is below 31·(1e9+7) + 1e9+7, so it fits in int64
+    without overflow in both engines."""
+    return (
+        f"aggregate(transform({ws}, fp_w -> {string_hash_sql('fp_w')}), "
+        f"CAST(0 AS BIGINT), (fp_acc, fp_h) -> "
+        f"(fp_acc * {FINGERPRINT_BASE} + fp_h) % {FINGERPRINT_MOD})"
+    )
+
+
+def fingerprint_duckdb(ws: str) -> str:
+    """DuckDB SQL of :func:`fingerprint_sql` over token-list expression ``ws``."""
+    return (
+        f"list_reduce(list_prepend(CAST(0 AS BIGINT),"
+        f" list_transform({ws}, w -> {string_hash_duckdb('w')})),"
+        f" (a, b) -> (a * {FINGERPRINT_BASE} + b) % {FINGERPRINT_MOD})"
     )
 
 

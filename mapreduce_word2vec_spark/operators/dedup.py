@@ -30,12 +30,12 @@ groupBys here).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mapreduce_word2vec_spark.functions.text import (
-    ngrams_expr,
-    string_hash_expr,
+    ngrams_sql,
+    string_hash_sql,
     tokens_expr,
 )
 from mapreduce_word2vec_spark.runtime import tracked_persist
@@ -113,26 +113,19 @@ def exact_dedup(df: DataFrame, keys: list[str], id_col: str) -> DataFrame:
     )
 
 
-def shingles_expr(text_col: str | Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a document.
-
-    Prefer :func:`doc_shingles` on DataFrames: this single-Column form
-    embeds the tokenizer, which ``ngrams_expr`` references n times, and
-    project-collapsing re-evaluates it per reference in the interpreted
-    HOF path. The two-step projection in :func:`doc_shingles` pins the
-    token array behind a non-cheap alias (CollapseProject keeps it),
-    so tokenization runs once per document — measured ~2× on sf0.1."""
-    return F.array_distinct(ngrams_expr(tokens_expr(text_col), n))
-
-
 def doc_shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3) -> DataFrame:
     """(id, shingle) exploded — one row per distinct shingle.
 
-    Two projections on purpose (see :func:`shingles_expr`)."""
+    Two projections on purpose: n-grams reference the token array n
+    times, and a tokenizer inlined into them is re-evaluated per
+    reference in the interpreted HOF path. Projecting the tokens into
+    a column first pins the array behind a non-cheap alias
+    (CollapseProject keeps it), so tokenization runs once per
+    document — measured ~2× on sf0.1."""
     base = df.select(F.col(id_col), tokens_expr(text_col).alias("_ws"))
     return base.select(
         F.col(id_col),
-        F.explode(F.array_distinct(ngrams_expr(F.col("_ws"), n))).alias("shingle"),
+        F.explode(F.expr(f"array_distinct({ngrams_sql('_ws', n)})")).alias("shingle"),
     )
 
 
@@ -152,7 +145,7 @@ def doc_shingles_sized(
     base = df.select(F.col(id_col), tokens_expr(text_col).alias("_ws"))
     arr = base.select(
         F.col(id_col),
-        F.array_distinct(ngrams_expr(F.col("_ws"), n)).alias("_sh"),
+        F.expr(f"array_distinct({ngrams_sql('_ws', n)})").alias("_sh"),
     )
     # n_sh is computed BELOW the explode: a ``size(_sh)`` alongside the
     # explode would force Generate to retain the whole shingle array on
@@ -232,7 +225,7 @@ def minhash_signatures(
     per-shingle hash per permutation (measured 40× slower at sf0.1)."""
     sh = doc_shingles(df, id_col, text_col, n).select(
         F.col(id_col).alias("doc_id"),
-        string_hash_expr(F.col("shingle")).alias("h"),
+        F.expr(string_hash_sql("shingle")).alias("h"),
     )
     # Permutation mins ship as one parsed expr() each (the
     # simhash_signatures lesson: Column trees looped in Python pay a
@@ -318,7 +311,7 @@ def simhash_signatures(
     toks = df.select(
         F.col(id_col).alias("doc_id"), F.explode(tokens_expr(text_col)).alias("w")
     )
-    hashed = toks.select("doc_id", string_hash_expr(F.col("w")).alias("h"))
+    hashed = toks.select("doc_id", F.expr(string_hash_sql("w")).alias("h"))
     # The lane sums and the 32-branch bit reconstruction are built as
     # SQL strings parsed in ONE expr() call each, not as Column trees:
     # looping F.when/.bitwiseAND pays a Python→JVM round trip per
@@ -465,7 +458,9 @@ def mllib_minhash_pairs(
 
     sh = (
         df.select(F.col(id_col).alias("id"), tokens_expr(text_col).alias("_ws"))
-        .select(F.col("id"), F.array_distinct(ngrams_expr(F.col("_ws"), 3)).alias("sh"))
+        .select(
+            F.col("id"), F.expr(f"array_distinct({ngrams_sql('_ws', 3)})").alias("sh")
+        )
         .where(F.size("sh") > 0)
     )
     # vocabSize is a +1 SENTINEL above the declared budget: fit keeps

@@ -19,6 +19,11 @@ from mapreduce_word2vec_spark.operators.dedup import (
     MINHASH_P,
     SIMHASH_BITS,
 )
+from mapreduce_word2vec_spark.functions.text import (
+    TOKENS_DUCKDB,
+    fingerprint_duckdb,
+    string_hash_duckdb,
+)
 from mapreduce_word2vec_spark.plans.catalog import register
 
 # The split-hash formula is OWNED by text_queries (split_train_val_test
@@ -27,13 +32,6 @@ from mapreduce_word2vec_spark.plans.catalog import register
 from mapreduce_word2vec_spark.plans.text_queries import _SAMPLE_BUCKET_SQL
 from mapreduce_word2vec_spark.sources.readers import read_testdata
 
-_SQL_TOKENS = r"""list_filter(regexp_split_to_array(lower(text), '\W+'), w -> regexp_matches(w, '^[a-z]+$'))"""
-# Polynomial string hash shared with functions.text.string_hash_expr.
-_SQL_STRHASH = (
-    "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-    "list_transform(split({s}, ''), c -> CAST(ascii(c) AS BIGINT))), "
-    "(a, b) -> (a * 31 + b) % 1000000007)"
-)
 _SQL_SHINGLES = (
     "list_distinct(list_transform(range(1, len(ws) - 1), "
     "i -> ws[i] || ' ' || ws[i + 1] || ' ' || ws[i + 2]))"
@@ -50,7 +48,7 @@ _SQL_SHINGLES = (
 # -> 2.2 s at sf0.1, and the difference between a finished gate and
 # an 80 GB temp-spill abort at the sf1 probe.
 _SQL_EDGES = f"""edges AS MATERIALIZED (
-      WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+      WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
       sh AS (SELECT doc_id, unnest({_SQL_SHINGLES}) AS shingle FROM toks),
       sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
       shared AS (
@@ -93,7 +91,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_ngram_jaccard",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     sh AS (SELECT doc_id, unnest({_SQL_SHINGLES}) AS shingle FROM toks),
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
     shared AS (
@@ -118,13 +116,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_sig_sql() -> str:
-    strhash = _SQL_STRHASH.format(s="s")
+    strhash = string_hash_duckdb("s")
     mins = ", ".join(
         f"list_min(list_transform(hh, h -> (h * {a} + {b}) % {MINHASH_P}))"
         for a, b in MINHASH_COEFFS
     )
     return f"""
-    toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     shg AS (SELECT doc_id, {_SQL_SHINGLES} AS shingles FROM toks),
     hsh AS (SELECT doc_id, list_transform(shingles, s -> {strhash}) AS hh FROM shg),
     sig AS (SELECT doc_id, [{mins}] AS sig FROM hsh)
@@ -168,7 +166,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simhash_sql() -> str:
-    strhash = _SQL_STRHASH.format(s="w")
+    strhash = string_hash_duckdb("w")
     bit_terms = " + ".join(
         f"(CASE WHEN list_sum(list_transform(hh, "
         f"h -> CASE WHEN (h >> {j}) & 1 = 1 THEN 1 ELSE -1 END)) > 0 "
@@ -182,7 +180,7 @@ def _simhash_sql() -> str:
     # sh = 0 — pairs the plan never produces (latent on non-Latin or
     # all-punctuation corpora; the fixtures have none).
     return f"""
-    toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     hsh AS (SELECT doc_id, list_transform(ws, w -> {strhash}) AS hh
             FROM toks WHERE len(ws) > 0),
     sim AS (SELECT doc_id, CAST({bit_terms} AS BIGINT) AS sh FROM hsh)
@@ -263,7 +261,7 @@ def dedup_mllib_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_mllib_minhash_recall",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     sh AS (SELECT doc_id, unnest({_SQL_SHINGLES}) AS shingle FROM toks),
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
     shared AS (
@@ -372,7 +370,7 @@ def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_ngram_spans",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     grams AS (
       SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(ws) - 6),
                      i -> list_aggregate(ws[i : i + 7], 'string_agg', ' ')))) AS gram
@@ -389,13 +387,13 @@ def dedup_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     than one document. One explode + one aggregation; the HAVING
     filter is partial-aggregated so singleton spans — the vast
     majority — die map-side."""
-    from mapreduce_word2vec_spark.functions.text import ngrams_expr, tokens_expr
+    from mapreduce_word2vec_spark.functions.text import ngrams_sql, tokens_expr
 
     docs = read_testdata(spark, sf_dir, "documents", parallelize=True)
     base = docs.select("doc_id", tokens_expr("text").alias("_ws"))
     grams = base.select(
         "doc_id",
-        F.explode(F.array_distinct(ngrams_expr(F.col("_ws"), 8))).alias("gram"),
+        F.explode(F.expr(f"array_distinct({ngrams_sql('_ws', 8)})")).alias("gram"),
     )
     return (
         grams.groupBy("gram")
@@ -454,7 +452,7 @@ _CONTAM_PHRASES = (
 @register(
     "doc_contamination",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     grams AS (
       SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(ws) - 1),
                      i -> ws[i] || ' ' || ws[i + 1] || ' ' || ws[i + 2]))) AS gram
@@ -471,13 +469,13 @@ def doc_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup before the explode's aggregation — no join, no second pass
     over the corpus; real pipelines broadcast the phrase table and
     semi-join instead when it no longer fits a literal list."""
-    from mapreduce_word2vec_spark.functions.text import ngrams_expr, tokens_expr
+    from mapreduce_word2vec_spark.functions.text import ngrams_sql, tokens_expr
 
     docs = read_testdata(spark, sf_dir, "documents")
     base = docs.select("doc_id", tokens_expr("text").alias("_ws"))
     grams = base.select(
         "doc_id",
-        F.explode(F.array_distinct(ngrams_expr(F.col("_ws"), 3))).alias("gram"),
+        F.explode(F.expr(f"array_distinct({ngrams_sql('_ws', 3)})")).alias("gram"),
     )
     return (
         grams.where(F.col("gram").isin(*_CONTAM_PHRASES))
@@ -806,7 +804,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_lsh_eval",
     oracle=f"""
-    WITH toks_e AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks_e AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     sh_e AS (SELECT doc_id, unnest({_SQL_SHINGLES}) AS shingle FROM toks_e),
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh_e GROUP BY doc_id),
     shared AS (
@@ -900,7 +898,7 @@ _CONTAM_FUZZY_THRESHOLD = 0.02
 @register(
     "doc_contamination_fuzzy",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     grams AS (
       SELECT doc_id,
              list_distinct(list_transform(range(1, len(ws) - 1),
@@ -927,16 +925,15 @@ def doc_contamination_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-local — shuffle-free at any corpus size; a benchmark set too
     large for a literal becomes a broadcast semi-join with the same
     per-row cost."""
-    from mapreduce_word2vec_spark.functions.text import ngrams_expr, tokens_expr
+    from mapreduce_word2vec_spark.functions.text import ngrams_sql, tokens_expr
 
     docs = read_testdata(spark, sf_dir, "documents")
     bench = F.array(*[F.lit(p) for p in _CONTAM_PHRASES])
-    # Two-step projection (the shingles_expr lesson): referencing the
+    # Projections on purpose (the doc_shingles lesson): referencing the
     # tokenize+3-gram expression twice in one projection re-runs the
     # whole interpreted pipeline per reference (~6 tokenizations/row).
-    grams = docs.select(
-        "doc_id",
-        F.array_distinct(ngrams_expr(tokens_expr("text"), 3)).alias("gs"),
+    grams = docs.select("doc_id", tokens_expr("text").alias("ws")).select(
+        "doc_id", F.expr(f"array_distinct({ngrams_sql('ws', 3)})").alias("gs")
     )
     base = grams.select(
         "doc_id",
@@ -958,7 +955,7 @@ def doc_contamination_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_containment",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     sh AS (SELECT doc_id, unnest({_SQL_SHINGLES}) AS shingle FROM toks),
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
     shared AS (
@@ -988,7 +985,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_ngram_novelty",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     grams AS (
       SELECT doc_id, unnest({_SQL_SHINGLES}) AS gram FROM toks
     ),
@@ -1010,14 +1007,12 @@ def doc_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     curriculum-ordering diagnostic). First-seen owner via a gram-keyed
     min aggregate; the join back is gram-keyed with no broadcast hint
     (the gram table IS the corpus's n-gram vocabulary)."""
-    from mapreduce_word2vec_spark.functions.text import ngrams_expr, tokens_expr
+    from mapreduce_word2vec_spark.functions.text import ngrams_sql, tokens_expr
 
     docs = read_testdata(spark, sf_dir, "documents")
-    grams = docs.select(
+    grams = docs.select("doc_id", tokens_expr("text").alias("ws")).select(
         "doc_id",
-        F.explode(
-            F.array_distinct(ngrams_expr(tokens_expr("text"), 3))
-        ).alias("gram"),
+        F.explode(F.expr(f"array_distinct({ngrams_sql('ws', 3)})")).alias("gram"),
     )
     firstseen = grams.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
     joined = grams.join(firstseen, "gram")
@@ -1032,7 +1027,7 @@ def doc_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_split_leakage",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     sh AS (SELECT doc_id, unnest({_SQL_SHINGLES}) AS shingle FROM toks),
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
     shared AS (
@@ -1285,7 +1280,7 @@ _PARA_W = 12
 @register(
     "dedup_paragraphs",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     nonempty AS (SELECT doc_id, ws FROM toks WHERE len(ws) > 0),
     paras AS (
       SELECT doc_id,
@@ -1441,7 +1436,7 @@ _PREFIX_W = 32
 @register(
     "dedup_prefix_hash",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     p AS (
       SELECT doc_id,
              md5(array_to_string(ws[1 : {_PREFIX_W}], ' ')) AS prefix_md5
@@ -1534,29 +1529,17 @@ def dedup_boundary_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FP_SQL = """
+_FP_SQL = f"""
     fp AS (
-      WITH t AS (SELECT doc_id, {toks} AS ws FROM documents),
-      h AS (
-        SELECT doc_id,
-               list_transform(ws, w ->
-                 list_reduce(
-                   list_prepend(CAST(0 AS BIGINT),
-                                list_transform(split(w, ''), c -> CAST(ascii(c) AS BIGINT))),
-                   (a, b) -> (a * 31 + b) % 1000000007)) AS hs
-        FROM t
-      )
-      SELECT doc_id,
-             list_reduce(list_prepend(CAST(0 AS BIGINT), hs),
-                         (a, b) -> (a * 31 + b) % 1000000007) AS fingerprint
-      FROM h
+      WITH t AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents)
+      SELECT doc_id, {fingerprint_duckdb("ws")} AS fingerprint FROM t
     )"""
 
 
 @register(
     "dedup_incremental_ingest",
     oracle=f"""
-    WITH {_FP_SQL.format(toks=_SQL_TOKENS)},
+    WITH {_FP_SQL},
     idx AS (SELECT DISTINCT fingerprint FROM fp WHERE doc_id % 5 <> 0),
     batch AS (SELECT doc_id, fingerprint FROM fp WHERE doc_id % 5 = 0),
     first_in_batch AS (
@@ -1583,15 +1566,12 @@ def dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     digest-only table (or a bloom pre-filter like join_bloom_semi's)
     and each ingest batch costs one digest join, never a re-scan of
     the corpus."""
-    from mapreduce_word2vec_spark.functions.text import (
-        fingerprint_expr,
-        tokens_expr,
-    )
+    from mapreduce_word2vec_spark.functions.text import fingerprint_sql, tokens_expr
     from pyspark.sql import Window
 
     docs = read_testdata(spark, sf_dir, "documents")
-    fp = docs.select(
-        "doc_id", fingerprint_expr(tokens_expr("text")).alias("fingerprint")
+    fp = docs.select("doc_id", tokens_expr("text").alias("ws")).select(
+        "doc_id", F.expr(fingerprint_sql("ws")).alias("fingerprint")
     )
     idx = fp.where(F.col("doc_id") % 5 != 0).select("fingerprint").distinct()
     w = Window.partitionBy("fingerprint").orderBy("doc_id")
@@ -1623,7 +1603,7 @@ def _lsh_sweep_sql() -> str:
     one bands/cand/stat CTE chain per (b, r) over the shared signature
     and ground-truth CTEs."""
     truth = f"""
-    toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     sh AS (SELECT doc_id, unnest({_SQL_SHINGLES}) AS shingle FROM toks),
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
     shared AS (

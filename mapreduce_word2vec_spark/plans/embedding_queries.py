@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_word2vec_spark.functions.hashing import KNUTH31, MASK32
+from mapreduce_word2vec_spark.functions.text import TOKENS_DUCKDB
 from mapreduce_word2vec_spark.plans.catalog import register
 from mapreduce_word2vec_spark.sources.readers import read_testdata
 
@@ -82,9 +83,9 @@ def emb_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "w2v_vocabulary",
-    oracle=r"""
+    oracle=f"""
     SELECT DISTINCT word, CAST(32 AS BIGINT) AS dim
-    FROM (SELECT unnest(list_filter(regexp_split_to_array(lower(text), '\W+'), w -> regexp_matches(w, '^[a-z]+$'))) AS word FROM documents)
+    FROM (SELECT unnest({TOKENS_DUCKDB}) AS word FROM documents)
     """,
 )
 def w2v_vocabulary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1082,16 +1083,10 @@ def emb_ood_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_TOKS = (
-    r"list_filter(regexp_split_to_array(lower(text), '\W+'), "
-    r"w -> regexp_matches(w, '^[a-z]+$'))"
-)
-
-
 @register(
     "w2v_synonyms_contract",
     oracle=rf"""
-    WITH toks AS (SELECT unnest({_SQL_TOKS}) AS word FROM documents),
+    WITH toks AS (SELECT unnest({TOKENS_DUCKDB}) AS word FROM documents),
     top AS (SELECT word FROM toks GROUP BY word ORDER BY count(*) DESC, word LIMIT 1)
     SELECT word AS query_word,
            CAST(least(5, (SELECT count(DISTINCT word) FROM toks) - 1) AS BIGINT)
@@ -1213,7 +1208,7 @@ def w2v_synonyms_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ref_pipeline_contract",
     oracle=rf"""
-    WITH toks AS (SELECT unnest({_SQL_TOKS}) AS word FROM documents)
+    WITH toks AS (SELECT unnest({TOKENS_DUCKDB}) AS word FROM documents)
     SELECT word,
            CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
                     list_transform(split(word, ''), c -> CAST(ascii(c) AS BIGINT))),
@@ -1264,7 +1259,7 @@ def ref_pipeline_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc_embedding_knn_contract",
     oracle=rf"""
     WITH elig AS (
-      SELECT doc_id FROM documents WHERE len({_SQL_TOKS}) > 0
+      SELECT doc_id FROM documents WHERE len({TOKENS_DUCKDB}) > 0
     ),
     q AS (SELECT count(*) AS nq FROM elig WHERE doc_id < 5),
     c AS (SELECT count(*) AS nc FROM elig)

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_word2vec_spark.functions.text import string_hash_duckdb
 from mapreduce_word2vec_spark.operators.multimodal import N_HIST_BINS
 from mapreduce_word2vec_spark.plans.catalog import register
 from mapreduce_word2vec_spark.sources.readers import read_testdata
@@ -91,12 +92,6 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FRAME_HASH = (
-    "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-    "list_transform(split(chunk, ''), c -> CAST(ascii(c) AS BIGINT))), "
-    "(a, b) -> (a * 31 + b) % 1000000007)"
-)
-
 # 4-frame slicing of the synthetic "video" payload — ONE definition
 # shared by multimodal_frames and multimodal_scene_cuts (a drifted
 # copy is how scene_cuts' empty-frame handling diverged).
@@ -121,7 +116,7 @@ _SQL_FRAME_CHUNKS = """p AS (
     oracle=f"""
     WITH {_SQL_FRAME_CHUNKS}
     SELECT doc_id, frame_idx,
-           {_FRAME_HASH} AS frame_hash,
+           {string_hash_duckdb("chunk")} AS frame_hash,
            CAST(length(chunk) AS BIGINT) AS frame_bytes
     FROM c
     """,

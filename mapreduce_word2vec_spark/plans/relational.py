@@ -19,6 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mapreduce_word2vec_spark.functions.text import (
+    TOKENS_DUCKDB,
+    string_hash_duckdb,
+    string_hash_sql,
+)
 from mapreduce_word2vec_spark.plans.catalog import register
 from mapreduce_word2vec_spark.sources.readers import read_testdata as rt
 
@@ -3536,13 +3541,6 @@ def agg_decimal_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared polynomial hash (functions.text.string_hash_expr ≡ the DuckDB
-# list_reduce fold) applied to the hashing-trick featurizer below.
-_FH_SQL_STRHASH = (
-    "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-    "list_transform(split({s}, ''), c -> CAST(ascii(c) AS BIGINT))), "
-    "(a, b) -> (a * 31 + b) % 1000000007)"
-)
 _FH_BUCKETS = 64
 
 
@@ -3561,7 +3559,7 @@ _FH_BUCKETS = 64
       SELECT c_custkey, f2 FROM f
     ),
     h AS (
-      SELECT CAST({_FH_SQL_STRHASH.format(s="feat")} % {_FH_BUCKETS} AS INT) AS bucket
+      SELECT CAST({string_hash_duckdb("feat")} % {_FH_BUCKETS} AS INT) AS bucket
       FROM e
     )
     SELECT bucket, CAST(count(*) AS BIGINT) AS n_hits
@@ -3579,8 +3577,6 @@ def ml_feature_hash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed features joinable between a Spark trainer and any other
     scorer. Scale shape: pure projection + one bucket-keyed count,
     dimension broadcast by size."""
-    from mapreduce_word2vec_spark.functions.text import string_hash_expr
-
     c = rt(spark, sf_dir, "customer")
     n = rt(spark, sf_dir, "nation")
     f = c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey).select(
@@ -3591,7 +3587,7 @@ def ml_feature_hash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = f.select("c_custkey", F.col("f1").alias("feat")).unionByName(
         f.select("c_custkey", F.col("f2").alias("feat"))
     )
-    bucket = (string_hash_expr(F.col("feat")) % _FH_BUCKETS).cast("int")
+    bucket = F.expr(f"CAST({string_hash_sql('feat')} % {_FH_BUCKETS} AS INT)")
     return (
         e.select(bucket.alias("bucket"))
         .groupBy("bucket")
@@ -6716,11 +6712,9 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml_naive_bayes_lang",
-    oracle=r"""
+    oracle=f"""
     WITH toks AS (
-      SELECT doc_id, lang,
-             unnest(list_filter(regexp_split_to_array(lower(text), '\W+'),
-                                w -> regexp_matches(w, '^[a-z]+$'))) AS w
+      SELECT doc_id, lang, unnest({TOKENS_DUCKDB}) AS w
       FROM documents
     ),
     tf AS (SELECT doc_id, w, CAST(count(*) AS BIGINT) AS tf FROM toks GROUP BY 1, 2),

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_word2vec_spark.functions.text import TOKENS_DUCKDB
 from mapreduce_word2vec_spark.functions.vectors import dot_expr, norm_expr
 from mapreduce_word2vec_spark.operators.similarity import label_centroids
 from mapreduce_word2vec_spark.plans.catalog import register
@@ -461,10 +462,7 @@ _RRF_TOPN = 50
 @register(
     "hybrid_search_rrf",
     oracle=f"""
-    WITH toks AS (SELECT doc_id,
-                         list_filter(regexp_split_to_array(lower(text), '\\W+'),
-                                     w -> regexp_matches(w, '^[a-z]+$')) AS ws
-                  FROM documents),
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     dl AS (SELECT doc_id, len(ws) AS dl FROM toks),
     stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
     tf AS (

@@ -20,12 +20,16 @@ from pyspark.sql import functions as F
 
 from mapreduce_word2vec_spark.functions.text import (
     STOPWORDS,
+    TOKENS_DUCKDB,
     bpe_ish_token_count,
-    fingerprint_expr,
+    fingerprint_duckdb,
+    fingerprint_sql,
     lang_id_expr,
-    ngrams_expr,
+    ngrams_sql,
     quality_score_expr,
     remove_stopwords,
+    string_hash_duckdb,
+    string_hash_sql,
     tokens_expr,
     whitespace_token_count,
 )
@@ -33,32 +37,8 @@ from mapreduce_word2vec_spark.functions.hashing import KNUTH31, MASK32
 from mapreduce_word2vec_spark.plans.catalog import register
 from mapreduce_word2vec_spark.sources.readers import read_testdata
 
-_SQL_TOKENS = r"""list_filter(regexp_split_to_array(lower(text), '\W+'), w -> regexp_matches(w, '^[a-z]+$'))"""
 _SQL_STOPSET = ", ".join(f"'{s}'" for s in STOPWORDS)
 _SQL_PUNCT = r"length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g'))"
-
-
-def _sql_strhash(operand: str) -> str:
-    """The 31-polynomial string hash folded over ``operand`` —
-    ``functions.text.string_hash_expr``'s SQL twin. ONE definition for
-    every oracle (the operands differ per query); a drifted copy would
-    silently desynchronize that query's oracle from the Spark kernel."""
-    return (
-        f"list_reduce(list_prepend(CAST(0 AS BIGINT),"
-        f" list_transform(split({operand}, ''), c -> CAST(ascii(c) AS BIGINT))),"
-        f" (a, b) -> (a * 31 + b) % 1000000007)"
-    )
-
-
-def _sql_fingerprint(ws: str = "ws") -> str:
-    """Order-sensitive document fingerprint (poly-hash every token,
-    fold the hash list) — ``functions.text.fingerprint_expr``'s SQL
-    twin, shared by every dedup-by-fingerprint oracle."""
-    return (
-        f"list_reduce(list_prepend(CAST(0 AS BIGINT),"
-        f" list_transform({ws}, w -> {_sql_strhash('w')})),"
-        f" (a, b) -> (a * 31 + b) % 1000000007)"
-    )
 
 
 def _sql_quality(
@@ -82,7 +62,7 @@ def _sql_quality(
     "doc_wordcount",
     oracle=f"""
     SELECT word, count(*) AS count
-    FROM (SELECT unnest({_SQL_TOKENS}) AS word FROM documents)
+    FROM (SELECT unnest({TOKENS_DUCKDB}) AS word FROM documents)
     GROUP BY word
     """,
 )
@@ -97,7 +77,7 @@ def doc_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_ngrams",
     oracle=f"""
-    WITH toks AS (SELECT {_SQL_TOKENS} AS ws FROM documents)
+    WITH toks AS (SELECT {TOKENS_DUCKDB} AS ws FROM documents)
     SELECT gram, count(*) AS n
     FROM (
       SELECT unnest(list_transform(range(1, len(ws)), i -> ws[i] || ' ' || ws[i + 1])) AS gram
@@ -109,14 +89,16 @@ def doc_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram counts via higher-order functions (no UDF, one shuffle)."""
     docs = read_testdata(spark, sf_dir, "documents", parallelize=True)
-    grams = docs.select(F.explode(ngrams_expr(tokens_expr("text"), 2)).alias("gram"))
+    grams = docs.select(tokens_expr("text").alias("ws")).select(
+        F.explode(F.expr(ngrams_sql("ws", 2))).alias("gram")
+    )
     return grams.groupBy("gram").agg(F.count("*").alias("n"))
 
 
 @register(
     "doc_stopwords",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents)
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents)
     SELECT doc_id,
            CAST(len(ws) AS BIGINT) AS n_tokens,
            CAST(len(list_filter(ws, w -> w NOT IN ({_SQL_STOPSET}))) AS BIGINT) AS n_content
@@ -158,7 +140,7 @@ def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc_quality",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, text, {_SQL_TOKENS} AS ws,
+      SELECT doc_id, text, {TOKENS_DUCKDB} AS ws,
              length(text) AS n_chars,
              length(regexp_replace(text, '[a-zA-Z0-9\\s]', '', 'g')) AS n_punct
       FROM documents
@@ -191,7 +173,7 @@ _LANG_MARKERS_SQL = {
 @register(
     "doc_lang_id",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH t AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     s AS (
       SELECT doc_id,
              len(list_filter(ws, w -> w IN {_LANG_MARKERS_SQL["en"]})) AS s_en,
@@ -218,23 +200,15 @@ def doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_fingerprint",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
-    h AS (
-      SELECT doc_id,
-             list_transform(ws, w -> {_sql_strhash('w')}) AS hs
-      FROM t
-    )
-    SELECT doc_id,
-           list_reduce(list_prepend(CAST(0 AS BIGINT), hs),
-                       (a, b) -> (a * 31 + b) % 1000000007) AS fingerprint
-    FROM h
+    WITH t AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents)
+    SELECT doc_id, {fingerprint_duckdb("ws")} AS fingerprint FROM t
     """,
 )
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-sensitive rolling-hash fingerprint per document."""
     docs = read_testdata(spark, sf_dir, "documents", parallelize=True)
-    return docs.select(
-        "doc_id", fingerprint_expr(tokens_expr("text")).alias("fingerprint")
+    return docs.select("doc_id", tokens_expr("text").alias("ws")).select(
+        "doc_id", F.expr(fingerprint_sql("ws")).alias("fingerprint")
     )
 
 
@@ -243,7 +217,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH toks AS (
       SELECT doc_id,
-             list_filter({_SQL_TOKENS}, w -> w NOT IN ({_SQL_STOPSET})) AS ws
+             list_filter({TOKENS_DUCKDB}, w -> w NOT IN ({_SQL_STOPSET})) AS ws
       FROM documents
     )
     SELECT gram, count(*) AS n
@@ -289,7 +263,7 @@ def doc_ml_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH counts AS (
       SELECT word, count(*) AS cnt
-      FROM (SELECT unnest({_SQL_TOKENS}) AS word FROM documents)
+      FROM (SELECT unnest({TOKENS_DUCKDB}) AS word FROM documents)
       GROUP BY word
     )
     SELECT word || ',' ||
@@ -326,7 +300,7 @@ def doc_ref_output(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_tfidf",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     tf AS (
       SELECT doc_id, word, count(*) AS tf
       FROM (SELECT doc_id, unnest(ws) AS word FROM toks)
@@ -389,7 +363,7 @@ _BM25_B = 0.75
 @register(
     "doc_bm25_search",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     dl AS (SELECT doc_id, len(ws) AS dl FROM toks),
     stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
     tf AS (
@@ -555,7 +529,7 @@ def sample_stratified_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pipeline_curation",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, lang, text, {_SQL_TOKENS} AS ws,
+      SELECT doc_id, lang, text, {TOKENS_DUCKDB} AS ws,
              length(text) AS n_chars,
              length(regexp_replace(text, '[a-zA-Z0-9\\s]', '', 'g')) AS n_punct
       FROM documents
@@ -567,7 +541,7 @@ def sample_stratified_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM t
     ), fp AS (
       SELECT doc_id, lang, quality,
-             {_sql_fingerprint("ws")} AS fingerprint
+             {fingerprint_duckdb("ws")} AS fingerprint
       FROM scored WHERE quality >= 0.5
     ), dedup AS (
       SELECT *, row_number() OVER (PARTITION BY fingerprint ORDER BY doc_id) AS rn
@@ -595,23 +569,22 @@ def pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_testdata(spark, sf_dir, "documents", parallelize=True)
 
     # Quality filter + fingerprint emitted through ONE conditional-array
-    # explode (r10): the former where(quality >= 0.5) pushed the whole
-    # quality expression (tokenize + regex) below the projection that
-    # ALSO computed quality and the fingerprint's tokenize — three
-    # tokenize passes per doc. Here keep-predicate and payload come
-    # from one let-bound token array inside the Generate's generator
-    # (evaluated once per row, no Filter node to push); explode of the
-    # NULL non-keep case drops the row exactly like the filter did.
-    # Interleaved A/B at sf0.1: 2.15 → 1.36 s (min), value-identical.
-    def emit_of(ws_b: F.Column) -> F.Column:
-        quality = F.round(quality_score_of(ws_b, F.col("text")), 6)
-        payload = F.struct(
-            quality.alias("quality"), fingerprint_expr(ws_b).alias("fingerprint")
-        )
-        return F.when(quality >= 0.5, F.array(payload))
-
-    arr = F.get(F.transform(F.array(tokens_expr("text")), emit_of), 0)
-    scored = docs.select("doc_id", "lang", F.explode(arr).alias("_q")).select(
+    # explode (r10): a where(quality >= 0.5) pushes the whole quality
+    # expression (tokenize + regex) below the projection that ALSO
+    # computes quality and the fingerprint's tokenize — three tokenize
+    # passes per doc. Here the tokens are projected once as a column
+    # and keep-predicate and payload read it inside the Generate's
+    # generator (no Filter node to push below the token projection);
+    # explode of the NULL non-keep case drops the row exactly like the
+    # filter did. Interleaved A/B at sf0.1: 2.15 → 1.36 s (min) against
+    # the filter form, value-identical.
+    toks = docs.select("doc_id", "lang", "text", tokens_expr("text").alias("ws"))
+    quality = F.round(quality_score_of(F.col("ws"), F.col("text")), 6)
+    payload = F.struct(
+        quality.alias("quality"), F.expr(fingerprint_sql("ws")).alias("fingerprint")
+    )
+    arr = F.when(quality >= 0.5, F.array(payload))
+    scored = toks.select("doc_id", "lang", F.explode(arr).alias("_q")).select(
         "doc_id",
         "lang",
         F.col("_q.quality").alias("quality"),
@@ -634,7 +607,7 @@ def pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_repetition",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH t AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     f AS (
       SELECT doc_id, len(ws) AS n_tokens,
              len(list_distinct(ws)) AS n_distinct,
@@ -692,7 +665,7 @@ _PACK_C = 256       # context-window capacity in tokens
 @register(
     "doc_chunking",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     nonempty AS (SELECT doc_id, ws FROM toks WHERE len(ws) > 0),
     starts AS (
       SELECT doc_id, ws, unnest(range(0, len(ws), {_CHUNK_STRIDE})) AS start
@@ -735,7 +708,7 @@ def doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_packing",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, lang, len({_SQL_TOKENS}) AS n_tokens
+    WITH toks AS (SELECT doc_id, lang, len({TOKENS_DUCKDB}) AS n_tokens
                   FROM documents),
     cum AS (
       SELECT doc_id, lang, n_tokens,
@@ -784,7 +757,7 @@ def doc_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_unigram_logprob",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     words AS (SELECT doc_id, unnest(ws) AS word FROM toks),
     cnt AS (SELECT word, count(*) AS c FROM words GROUP BY word),
     tot AS (SELECT sum(c) AS total, count(*) AS vocab FROM cnt),
@@ -914,7 +887,7 @@ _TOKEN_BUDGET = 10_000
     "select_token_budget",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_SQL_TOKENS} AS ws,
+      SELECT doc_id, {TOKENS_DUCKDB} AS ws,
              length(text) AS n_chars,
              length(regexp_replace(text, '[a-zA-Z0-9\\s]', '', 'g')) AS n_punct
       FROM documents
@@ -980,7 +953,7 @@ def select_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_top_terms_per_source",
     oracle=f"""
-    WITH toks AS (SELECT source, unnest({_SQL_TOKENS}) AS word FROM documents),
+    WITH toks AS (SELECT source, unnest({TOKENS_DUCKDB}) AS word FROM documents),
     c AS (SELECT source, word, count(*) AS cnt FROM toks GROUP BY source, word),
     r AS (
       SELECT source, word, cnt,
@@ -1016,7 +989,7 @@ def doc_top_terms_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_inverted_index",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, unnest({_SQL_TOKENS}) AS word FROM documents),
+    WITH toks AS (SELECT doc_id, unnest({TOKENS_DUCKDB}) AS word FROM documents),
     d AS (SELECT DISTINCT doc_id, word FROM toks),
     g AS (
       SELECT word, count(*) AS df,
@@ -1075,12 +1048,12 @@ def doc_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_report",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, source, lang, {_SQL_TOKENS} AS ws, text
+      SELECT doc_id, source, lang, {TOKENS_DUCKDB} AS ws, text
       FROM documents
     ),
     h AS (
       SELECT doc_id, source, lang, len(ws) AS n_tokens,
-             {_sql_fingerprint("ws")} AS fingerprint
+             {fingerprint_duckdb("ws")} AS fingerprint
       FROM t
     ),
     q AS (
@@ -1118,12 +1091,12 @@ def corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     becomes `approx_count_distinct` or the HLL sketch path
     (`agg_hll_sketch`) — same query shape."""
     docs = read_testdata(spark, sf_dir, "documents")
-    toks = tokens_expr("text")
-    per_doc = docs.select(
+    toks = docs.select("source", "lang", "text", tokens_expr("text").alias("ws"))
+    per_doc = toks.select(
         "source",
         "lang",
-        F.size(toks).cast("bigint").alias("n_tokens"),
-        fingerprint_expr(toks).alias("fingerprint"),
+        F.size("ws").cast("bigint").alias("n_tokens"),
+        F.expr(fingerprint_sql("ws")).alias("fingerprint"),
         # Mean quality accumulates as a SCALED INTEGER: float addition
         # is order-sensitive across partitionings/engines (the raw
         # avg() flipped the 6th decimal vs the oracle), integer sums
@@ -1146,7 +1119,7 @@ def corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_bigram_logprob",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     vocab AS (
       SELECT count(DISTINCT word) AS v
       FROM (SELECT unnest(ws) AS word FROM toks)
@@ -1185,16 +1158,16 @@ def doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = read_testdata(spark, sf_dir, "documents")
-    toks = tokens_expr("text")
+    toks = docs.select("doc_id", tokens_expr("text").alias("ws"))
     b = (
-        docs.select("doc_id", F.explode(ngrams_expr(toks, 2)).alias("gram"))
+        toks.select("doc_id", F.explode(F.expr(ngrams_sql("ws", 2))).alias("gram"))
         .select(
             "doc_id",
             F.split_part(F.col("gram"), F.lit(" "), F.lit(1)).alias("w1"),
             F.split_part(F.col("gram"), F.lit(" "), F.lit(2)).alias("w2"),
         )
     )
-    vocab = docs.select(F.explode(toks).alias("word")).agg(
+    vocab = toks.select(F.explode("ws").alias("word")).agg(
         F.countDistinct("word").alias("v")
     )
     counted = b.select(
@@ -1239,7 +1212,7 @@ _GOPHER_MIN_STOP = 2
     "doc_gopher_filter",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_SQL_TOKENS} AS ws,
+      SELECT doc_id, {TOKENS_DUCKDB} AS ws,
              CASE WHEN trim(text) = '' THEN []::VARCHAR[]
                   ELSE regexp_split_to_array(trim(text), '\\s+') END AS raw
       FROM documents
@@ -1340,16 +1313,15 @@ def doc_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DSIR_BUCKETS = 1024
 _DSIR_TARGET = ("src0", "src3")
 _DSIR_TARGET_SQL = ", ".join(f"'{s}'" for s in _DSIR_TARGET)
-_SQL_STRHASH = _sql_strhash("word")
 
 
 @register(
     "select_dsir_weights",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, source, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, source, {TOKENS_DUCKDB} AS ws FROM documents),
     words AS (
       SELECT doc_id, source IN ({_DSIR_TARGET_SQL}) AS is_t,
-             {_SQL_STRHASH} % {_DSIR_BUCKETS} AS bucket
+             {string_hash_duckdb("word")} % {_DSIR_BUCKETS} AS bucket
       FROM (SELECT doc_id, source, unnest(ws) AS word FROM toks)
     ),
     bstat AS (
@@ -1385,8 +1357,6 @@ def select_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hashing fixes model size at 100 TB."""
     from pyspark.sql import Window
 
-    from mapreduce_word2vec_spark.functions.text import string_hash_expr
-
     docs = read_testdata(spark, sf_dir, "documents")
     words = docs.select(
         "doc_id",
@@ -1395,7 +1365,7 @@ def select_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "doc_id",
         "is_t",
-        (string_hash_expr(F.col("word")) % _DSIR_BUCKETS).alias("bucket"),
+        F.expr(f"{string_hash_sql('word')} % {_DSIR_BUCKETS}").alias("bucket"),
     )
     wb = Window.partitionBy("bucket")
     counted = words.select(
@@ -1426,7 +1396,7 @@ def select_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_perplexity_bucket",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, lang, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, lang, {TOKENS_DUCKDB} AS ws FROM documents),
     words AS (SELECT doc_id, lang, unnest(ws) AS word FROM toks),
     cnt AS (SELECT word, count(*) AS c FROM words GROUP BY word),
     tot AS (SELECT sum(c) AS total, count(*) AS vocab FROM cnt),
@@ -1499,7 +1469,7 @@ _SOURCE_CAP = 10
     "sample_source_cap",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, source, text, {_SQL_TOKENS} AS ws,
+      SELECT doc_id, source, text, {TOKENS_DUCKDB} AS ws,
              length(text) AS n_chars,
              length(regexp_replace(text, '[a-zA-Z0-9\\s]', '', 'g')) AS n_punct
       FROM documents
@@ -1671,7 +1641,7 @@ def sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pipeline_pretrain_mix",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, lang, text, {_SQL_TOKENS} AS ws,
+      SELECT doc_id, lang, text, {TOKENS_DUCKDB} AS ws,
              CASE WHEN trim(text) = '' THEN []::VARCHAR[]
                   ELSE regexp_split_to_array(trim(text), '\\s+') END AS raw
       FROM documents
@@ -1691,7 +1661,7 @@ def sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     h AS (
       SELECT doc_id, lang, CAST(len(ws) AS BIGINT) AS n_tokens,
-             {_sql_fingerprint("ws")} AS fp
+             {fingerprint_duckdb("ws")} AS fp
       FROM g
     ),
     surv AS (
@@ -1725,54 +1695,49 @@ def pipeline_pretrain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = read_testdata(spark, sf_dir, "documents")
-    ws = tokens_expr("text")
     trimmed = F.trim(F.col("text"))
     raw = F.when(trimmed == "", F.array().cast("array<string>")).otherwise(
         F.split(trimmed, r"\s+")
     )
     stop_lit = F.array(*[F.lit(s) for s in _GOPHER_STOP])
 
-    from mapreduce_word2vec_spark.functions.text import fingerprint_expr
-
     # The WHOLE Gopher rule AND the (n_tokens, fp) payload are emitted
-    # from ONE let-bound (ws, raw) binding through a conditional-array
-    # explode (r10). The r9 shape bound the arrays once for the rule
-    # filter and once for the payload projection — but Filter + Project
-    # are separate operators, so every surviving doc still tokenized
-    # TWICE (and the rule's raw-split once more). Inside a Generate's
-    # generator there is no Filter to push (explode of the NULL
-    # non-keep case drops the row), so the binding is evaluated exactly
-    # once per row. Interleaved A/B at sf0.1: 3.20 → 2.55 s (min),
-    # value-identical.
-    def emit_of(s: F.Column) -> F.Column:
-        ws_b, raw_b = s["w"], s["r"]
-        n_words = F.size(ws_b)
-        mean_len = F.aggregate(
-            F.transform(ws_b, F.length), F.lit(0).cast("long"), lambda a, x: a + x
-        ).cast("double") / n_words
-        n_raw = F.size(raw_b)
-        alpha_frac = F.size(
-            F.filter(raw_b, lambda t: F.lower(t).rlike("[a-z]"))
-        ).cast("double") / n_raw
-        n_stop = F.size(F.filter(stop_lit, lambda st: F.array_contains(ws_b, st)))
-        keep = (
-            n_words.between(_GOPHER_MIN_WORDS, _GOPHER_MAX_WORDS)
-            & (n_words > 0)
-            & mean_len.between(_GOPHER_MIN_MEANLEN, _GOPHER_MAX_MEANLEN)
-            & (n_raw > 0)
-            & (alpha_frac >= _GOPHER_MIN_ALPHA)
-            & (n_stop >= _GOPHER_MIN_STOP)
-        )
-        payload = F.struct(
-            F.size(ws_b).cast("bigint").alias("n_tokens"),
-            fingerprint_expr(ws_b).alias("fp"),
-        )
-        return F.when(keep, F.array(payload))
-
-    arr = F.get(
-        F.transform(F.array(F.struct(ws.alias("w"), raw.alias("r"))), emit_of), 0
+    # from ONE (ws, raw) projection through a conditional-array explode
+    # (r10). The r9 shape computed the arrays once for the rule filter
+    # and once for the payload projection — but Filter + Project are
+    # separate operators, so every surviving doc still tokenized TWICE
+    # (and the rule's raw-split once more). Inside a Generate's
+    # generator there is no Filter to push below the projection
+    # (explode of the NULL non-keep case drops the row), so each array
+    # is computed exactly once per row. Interleaved A/B at sf0.1:
+    # 3.20 → 2.55 s (min) against the r9 shape, value-identical.
+    toks = docs.select(
+        "doc_id", "lang", tokens_expr("text").alias("ws"), raw.alias("raw")
     )
-    filtered = docs.select("doc_id", "lang", F.explode(arr).alias("_tf")).select(
+    ws, raw = F.col("ws"), F.col("raw")
+    n_words = F.size(ws)
+    mean_len = F.aggregate(
+        F.transform(ws, F.length), F.lit(0).cast("long"), lambda a, x: a + x
+    ).cast("double") / n_words
+    n_raw = F.size(raw)
+    alpha_frac = F.size(
+        F.filter(raw, lambda t: F.lower(t).rlike("[a-z]"))
+    ).cast("double") / n_raw
+    n_stop = F.size(F.filter(stop_lit, lambda st: F.array_contains(ws, st)))
+    keep = (
+        n_words.between(_GOPHER_MIN_WORDS, _GOPHER_MAX_WORDS)
+        & (n_words > 0)
+        & mean_len.between(_GOPHER_MIN_MEANLEN, _GOPHER_MAX_MEANLEN)
+        & (n_raw > 0)
+        & (alpha_frac >= _GOPHER_MIN_ALPHA)
+        & (n_stop >= _GOPHER_MIN_STOP)
+    )
+    payload = F.struct(
+        n_words.cast("bigint").alias("n_tokens"),
+        F.expr(fingerprint_sql("ws")).alias("fp"),
+    )
+    arr = F.when(keep, F.array(payload))
+    filtered = toks.select("doc_id", "lang", F.explode(arr).alias("_tf")).select(
         "doc_id",
         "lang",
         F.col("_tf.n_tokens").alias("n_tokens"),
@@ -1811,7 +1776,7 @@ def pipeline_pretrain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_pmi_collocations",
     oracle=f"""
-    WITH toks AS (SELECT {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT {TOKENS_DUCKDB} AS ws FROM documents),
     uni AS (
       SELECT word, count(*) AS c FROM (SELECT unnest(ws) AS word FROM toks)
       GROUP BY word
@@ -1861,7 +1826,7 @@ def doc_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("c"))
     )
     bi = (
-        toks.select(F.explode(ngrams_expr(F.col("ws"), 2)).alias("gram"))
+        toks.select(F.explode(F.expr(ngrams_sql("ws", 2))).alias("gram"))
         .select(
             F.split_part(F.col("gram"), F.lit(" "), F.lit(1)).alias("w1"),
             F.split_part(F.col("gram"), F.lit(" "), F.lit(2)).alias("w2"),
@@ -1903,7 +1868,7 @@ def doc_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH cnt AS (
       SELECT word, count(*) AS c
-      FROM (SELECT unnest({_SQL_TOKENS}) AS word FROM documents)
+      FROM (SELECT unnest({TOKENS_DUCKDB}) AS word FROM documents)
       GROUP BY word
     ),
     ranked AS (
@@ -1946,7 +1911,7 @@ def corpus_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_keywords_topk",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     words AS (SELECT doc_id, unnest(ws) AS word FROM toks),
     tf AS (SELECT doc_id, word, count(*) AS tf FROM words GROUP BY doc_id, word),
     df AS (SELECT word, count(DISTINCT doc_id) AS df FROM words GROUP BY word),
@@ -2045,7 +2010,7 @@ def doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH cnt AS (
       SELECT word, count(*) AS c
-      FROM (SELECT unnest({_SQL_TOKENS}) AS word FROM documents)
+      FROM (SELECT unnest({TOKENS_DUCKDB}) AS word FROM documents)
       GROUP BY word
     )
     SELECT CAST(sum(c) AS BIGINT) AS n_tokens,
@@ -2087,7 +2052,7 @@ def corpus_vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT word, CAST(c AS BIGINT) AS n FROM (
       SELECT word, count(*) AS c
-      FROM (SELECT unnest({_SQL_TOKENS}) AS word FROM documents)
+      FROM (SELECT unnest({TOKENS_DUCKDB}) AS word FROM documents)
       GROUP BY word ORDER BY c DESC LIMIT 9
     )
     """,
@@ -2185,8 +2150,8 @@ _CMS_PROBE_ROWS = ", ".join(f"('{w}')" for w in _CMS_PROBES)
 @register(
     "agg_countmin_words",
     oracle=f"""
-    WITH words AS (SELECT unnest({_SQL_TOKENS}) AS word FROM documents),
-    hw AS (SELECT word, {_SQL_STRHASH} AS h FROM words),
+    WITH words AS (SELECT unnest({TOKENS_DUCKDB}) AS word FROM documents),
+    hw AS (SELECT word, {string_hash_duckdb("word")} AS h FROM words),
     hs(j, a, b) AS (VALUES {_CMS_HASH_ROWS}),
     cells AS (
       SELECT j, CAST((h * a + b) % {_CMS_P} % {_CMS_W} AS INT) AS cell,
@@ -2194,7 +2159,7 @@ _CMS_PROBE_ROWS = ", ".join(f"('{w}')" for w in _CMS_PROBES)
       FROM hw CROSS JOIN hs GROUP BY 1, 2
     ),
     probes(word) AS (VALUES {_CMS_PROBE_ROWS}),
-    ph AS (SELECT word, {_SQL_STRHASH} AS h FROM probes),
+    ph AS (SELECT word, {string_hash_duckdb("word")} AS h FROM probes),
     pc AS (
       SELECT ph.word, hs.j,
              CAST((ph.h * hs.a + hs.b) % {_CMS_P} % {_CMS_W} AS INT) AS cell
@@ -2225,13 +2190,11 @@ def agg_countmin_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     heavy-hitter counts. The probe list is a broadcast of literals;
     the exact-count branch exists to surface the estimate error and
     CMS's one-sided guarantee in the output itself (never_under)."""
-    from mapreduce_word2vec_spark.functions.text import string_hash_expr
-
     docs = read_testdata(spark, sf_dir, "documents")
     words = docs.select(F.explode(tokens_expr("text")).alias("word"))
 
-    def jcells(col):
-        h = string_hash_expr(col)
+    def jcells(col: str):
+        h = F.expr(string_hash_sql(col))
         return F.explode(
             F.array(
                 *[
@@ -2245,13 +2208,13 @@ def agg_countmin_words(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("jc")
 
     sketch = (
-        words.select(jcells(F.col("word")))
+        words.select(jcells("word"))
         .select("jc.j", "jc.cell")
         .groupBy("j", "cell")
         .agg(F.count("*").alias("cnt"))
     )
     probes = spark.createDataFrame([(w,) for w in _CMS_PROBES], "word string")
-    pcells = probes.select("word", jcells(F.col("word"))).select("word", "jc.j", "jc.cell")
+    pcells = probes.select("word", jcells("word")).select("word", "jc.j", "jc.cell")
     est = (
         pcells.join(sketch, ["j", "cell"], "left")
         .groupBy("word")
@@ -2273,7 +2236,7 @@ def agg_countmin_words(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "w2v_skipgram_pairs",
     oracle=f"""
-    WITH toks AS (SELECT {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT {TOKENS_DUCKDB} AS ws FROM documents),
     pos AS (SELECT ws, unnest(range(1, len(ws) + 1)) AS i FROM toks),
     pairs AS (
       SELECT ws[i] AS center, ws[i + off] AS context
@@ -2329,7 +2292,7 @@ def w2v_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "w2v_negative_sampling",
     oracle=f"""
-    WITH words AS (SELECT unnest({_SQL_TOKENS}) AS word FROM documents),
+    WITH words AS (SELECT unnest({TOKENS_DUCKDB}) AS word FROM documents),
     counts AS (SELECT word, count(*) AS n FROM words GROUP BY word),
     powed AS (SELECT word, n, pow(n, 0.75) AS np FROM counts)
     SELECT word, CAST(n AS BIGINT) AS n,
@@ -2368,7 +2331,7 @@ def w2v_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "w2v_subsample_probs",
     oracle=f"""
-    WITH words AS (SELECT unnest({_SQL_TOKENS}) AS word FROM documents),
+    WITH words AS (SELECT unnest({TOKENS_DUCKDB}) AS word FROM documents),
     counts AS (SELECT word, count(*) AS n FROM words GROUP BY word),
     tot AS (SELECT sum(n) AS total FROM counts)
     SELECT word, CAST(n AS BIGINT) AS n,
@@ -2398,14 +2361,11 @@ def w2v_subsample_probs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WINNOW_HASH_G = _sql_strhash("g")
-
-
 @register(
     "doc_winnowing",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents
+      SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents
     ),
     ok AS (SELECT doc_id, ws FROM toks WHERE len(ws) >= 6),
     hs AS (
@@ -2413,7 +2373,7 @@ _WINNOW_HASH_G = _sql_strhash("g")
              list_transform(
                list_transform(range(1, len(ws) - 1),
                               i -> ws[i] || ' ' || ws[i + 1] || ' ' || ws[i + 2]),
-               g -> {_WINNOW_HASH_G}) AS hs
+               g -> {string_hash_duckdb("g")}) AS hs
       FROM ok
     ),
     win AS (
@@ -2469,7 +2429,7 @@ def doc_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_lang_confusion",
     oracle=f"""
-    WITH t AS (SELECT doc_id, lang, {_SQL_TOKENS} AS ws FROM documents),
+    WITH t AS (SELECT doc_id, lang, {TOKENS_DUCKDB} AS ws FROM documents),
     s AS (
       SELECT doc_id, lang,
              len(list_filter(ws, w -> w IN {_LANG_MARKERS_SQL["en"]})) AS s_en,
@@ -2591,7 +2551,7 @@ def doc_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH u AS (
       SELECT doc_id, n_chars,
-             ({_sql_strhash("'wrs|' || CAST(doc_id AS VARCHAR)")} + 1.0)
+             ({string_hash_duckdb("'wrs|' || CAST(doc_id AS VARCHAR)")} + 1.0)
                / 1000000008.0 AS unif
       FROM documents
     ),
@@ -2615,11 +2575,9 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id tie-break, and top-k is a TakeOrderedAndProject heap —
     no global sort, no rand(). The one-pass property is what lets a
     100 TB corpus yield a length-weighted sample in a single scan."""
-    from mapreduce_word2vec_spark.functions.text import string_hash_expr
-
     docs = read_testdata(spark, sf_dir, "documents")
     unif = (
-        string_hash_expr(F.concat(F.lit("wrs|"), F.col("doc_id").cast("string"))) + 1.0
+        F.expr(string_hash_sql("concat('wrs|', CAST(doc_id AS STRING))")) + 1.0
     ) / 1_000_000_008.0
     k = docs.select(
         "doc_id",
@@ -2640,12 +2598,12 @@ _KL_BUCKETS = 1024
     "corpus_kl_divergence",
     oracle=f"""
     WITH words AS (
-      SELECT source, unnest({_SQL_TOKENS}) AS word FROM documents
+      SELECT source, unnest({TOKENS_DUCKDB}) AS word FROM documents
       WHERE source IN ('src0', 'src3')
     ),
     b AS (
       SELECT source,
-             CAST({_SQL_STRHASH} % {_KL_BUCKETS} AS INT) AS bucket,
+             CAST({string_hash_duckdb("word")} % {_KL_BUCKETS} AS INT) AS bucket,
              count(*) AS n
       FROM words GROUP BY source, bucket
     ),
@@ -2676,14 +2634,15 @@ def corpus_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Laplace smoothing covers unhit buckets per source; bucket counts
     are integers, so the only float work is the final bounded sum
     (rounded 1e-6, far above ln() ulp noise)."""
-    from mapreduce_word2vec_spark.functions.text import string_hash_expr
-
     docs = read_testdata(spark, sf_dir, "documents").where(
         F.col("source").isin("src0", "src3")
     )
     words = docs.select("source", F.explode(tokens_expr("text")).alias("word"))
     b = words.select(
-        "source", (string_hash_expr(F.col("word")) % _KL_BUCKETS).cast("int").alias("bucket")
+        "source",
+        F.expr(f"CAST({string_hash_sql('word')} % {_KL_BUCKETS} AS INT)").alias(
+            "bucket"
+        ),
     ).groupBy("source", "bucket").agg(F.count("*").alias("n"))
     # Add-1 over the hit-bucket space with EXACT normalizers (sums of
     # the smoothed cells), so probabilities are well-formed and no
@@ -2757,7 +2716,7 @@ _BP_DF_THRESHOLD = 10
 @register(
     "doc_boilerplate_fraction",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     sh AS (
       SELECT doc_id,
              unnest(list_distinct(list_transform(range(1, len(ws) - 1),
@@ -2786,15 +2745,13 @@ def doc_boilerplate_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct shingles per doc → one df aggregation → join back on the
     shingle key → per-doc fraction. Shuffle carries shingle keys and
     small counts; text never moves."""
-    from mapreduce_word2vec_spark.functions.text import ngrams_expr
-
     docs = read_testdata(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens_expr("text").alias("ws")).where(
         F.size("ws") >= 3
     )
     sh = toks.select(
         "doc_id",
-        F.explode(F.array_distinct(ngrams_expr(F.col("ws"), 3))).alias("shingle"),
+        F.explode(F.expr(f"array_distinct({ngrams_sql('ws', 3)})")).alias("shingle"),
     )
     df = sh.groupBy("shingle").agg(F.count("*").alias("n_docs"))
     j = sh.join(df, "shingle").select(
@@ -2826,15 +2783,29 @@ _QCLS_MIX = KNUTH31
 # across engines; the keep decision thresholds the RAW mean at 0
 # (exact), never the post-sigmoid float.
 _SQL_QCLS_W = (
-    f"((({_sql_strhash('w')}"
+    f"((({string_hash_duckdb('w')}"
     f" % {_QCLS_BUCKETS}) * {_QCLS_MIX}) % 2048) / 1024.0 - 1.0"
 )
+
+
+def _qcls_sum_sql(ws: str) -> str:
+    """Spark SQL of the summed token weights over token array ``ws``
+    (the oracles' ``list_sum`` of :data:`_SQL_QCLS_W`). Double literals
+    carry the ``D`` suffix: a bare ``1024.0`` parses as DECIMAL."""
+    weight = (
+        f"((({string_hash_sql('qc_w')} % {_QCLS_BUCKETS}) * {_QCLS_MIX})"
+        f" % 2048) / 1024.0D - 1.0D"
+    )
+    return (
+        f"aggregate(transform({ws}, qc_w -> {weight}), 0.0D,"
+        f" (qc_a, qc_x) -> qc_a + qc_x)"
+    )
 
 
 @register(
     "doc_quality_classifier",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     ne AS (SELECT doc_id, ws FROM toks WHERE len(ws) > 0),
     m AS (
       SELECT doc_id, len(ws) AS n_tokens,
@@ -2854,21 +2825,14 @@ def doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the canonical 'score every document with a small linear
     model' pass (real weights would ride along as one broadcast
     array<float> lookup)."""
-    from mapreduce_word2vec_spark.functions.text import string_hash_expr
-
     docs = read_testdata(spark, sf_dir, "documents")
-    ws = tokens_expr("text")
-
-    def weight(w):
-        b = string_hash_expr(w) % _QCLS_BUCKETS
-        return ((b * F.lit(_QCLS_MIX)) % 2048) / F.lit(1024.0) - F.lit(1.0)
-
-    base = docs.select("doc_id", ws.alias("ws")).where(F.size("ws") > 0)
-    s = F.aggregate(
-        F.transform(F.col("ws"), weight), F.lit(0.0), lambda a, x: a + x
+    base = docs.select("doc_id", tokens_expr("text").alias("ws")).where(
+        F.size("ws") > 0
     )
     m = base.select(
-        "doc_id", F.size("ws").cast("bigint").alias("n_tokens"), s.alias("s")
+        "doc_id",
+        F.size("ws").cast("bigint").alias("n_tokens"),
+        F.expr(_qcls_sum_sql("ws")).alias("s"),
     )
     mean = F.col("s") / F.col("n_tokens")
     return m.select(
@@ -2896,7 +2860,7 @@ _KN_TOPN = 100
 @register(
     "corpus_kneser_ney_bigram",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     bg AS (
       SELECT ws[i] AS w1, ws[i + 1] AS w2
       FROM (SELECT ws, unnest(range(1, len(ws))) AS i FROM toks WHERE len(ws) >= 2)
@@ -3201,7 +3165,7 @@ def doc_lang_id_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     "select_quality_quantile",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, source, text, {_SQL_TOKENS} AS ws,
+      SELECT doc_id, source, text, {TOKENS_DUCKDB} AS ws,
              length(text) AS n_chars,
              length(regexp_replace(text, '[a-zA-Z0-9\\s]', '', 'g')) AS n_punct
       FROM documents
@@ -3288,7 +3252,7 @@ def _boot_w_sql(u: str) -> str:
     "sample_poisson_bootstrap",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, len({_SQL_TOKENS}) AS n_words FROM documents
+      SELECT doc_id, len({TOKENS_DUCKDB}) AS n_words FROM documents
     ),
     reps AS (
       SELECT doc_id, n_words, CAST(r AS INT) AS replicate,
@@ -3351,7 +3315,7 @@ _BURST_TOPK = 50
 @register(
     "corpus_burstiness",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     n AS (SELECT count(*) AS n_docs FROM documents),
     per AS (
       SELECT word, doc_id, count(*) AS c
@@ -3417,7 +3381,7 @@ _CHAT_PACK = 512
 @register(
     "doc_chat_template",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, lang, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, lang, {TOKENS_DUCKDB} AS ws FROM documents),
     pairs AS (
       SELECT doc_id, lang,
              array_to_string(ws[1 : {_CHAT_PROMPT_W}], ' ') AS prompt,
@@ -3520,7 +3484,7 @@ def _span_masked_sql(i: str) -> str:
 @register(
     "doc_span_corruption",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     ne AS (SELECT doc_id, ws FROM toks WHERE len(ws) > 0),
     m AS (
       SELECT doc_id, ws,
@@ -3612,7 +3576,7 @@ _FIM_M = MASK32
 @register(
     "doc_fim_transform",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     ne AS (SELECT doc_id, ws, len(ws) AS n FROM toks WHERE len(ws) >= 3),
     cuts AS (
       SELECT doc_id, ws, n,
@@ -3686,7 +3650,7 @@ _ENS_MIN_ENTROPY = 3.0
     "doc_filter_ensemble",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_SQL_TOKENS} AS ws, lower(text) AS lt FROM documents
+      SELECT doc_id, {TOKENS_DUCKDB} AS ws, lower(text) AS lt FROM documents
     ),
     sig AS (
       SELECT doc_id,
@@ -3710,20 +3674,13 @@ _ENS_MIN_ENTROPY = 3.0
 def doc_filter_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Majority-vote ensemble of three row-local quality signals
     (length bounds, hashed-classifier sign, char-entropy floor) —
-    one projection, zero exchange."""
-    from mapreduce_word2vec_spark.functions.text import string_hash_expr
-
+    one tokenize projection, zero exchange."""
     docs = read_testdata(spark, sf_dir, "documents").where(F.length("text") > 0)
-    ws = tokens_expr("text")
+    toks = docs.select("doc_id", "text", tokens_expr("text").alias("ws"))
     lt = F.lower(F.col("text"))
-    n = F.size(ws)
+    n = F.size("ws")
     pass_len = (n >= _ENS_MIN_WORDS) & (n <= _ENS_MAX_WORDS)
-
-    def weight(w):
-        b = string_hash_expr(w) % _QCLS_BUCKETS
-        return ((b * F.lit(_QCLS_MIX)) % 2048) / F.lit(1024.0) - F.lit(1.0)
-
-    s = F.aggregate(F.transform(ws, weight), F.lit(0.0), lambda a, x: a + x)
+    s = F.expr(_qcls_sum_sql("ws"))
     pass_cls = F.when(n > 0, s >= 0.0).otherwise(F.lit(False))
     # char entropy: counts per distinct char via HOFs, with the split
     # char array LET-BOUND (doc_char_entropy's fix — a bare reference
@@ -3746,7 +3703,7 @@ def doc_filter_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     votes = (
         pass_len.cast("int") + pass_cls.cast("int") + pass_entropy.cast("int")
     )
-    return docs.select(
+    return toks.select(
         "doc_id",
         pass_len.alias("pass_len"),
         pass_cls.alias("pass_cls"),
@@ -3769,7 +3726,7 @@ _COOC_TOPN = 100
 @register(
     "w2v_cooccurrence",
     oracle=f"""
-    WITH toks AS (SELECT {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT {TOKENS_DUCKDB} AS ws FROM documents),
     pairs AS (
       SELECT u.p[1] AS w1, u.p[2] AS w2, CAST(u.p[3] AS INT) AS d
       FROM toks,
@@ -3840,7 +3797,7 @@ _RAKE_TOPN = 20
     "doc_keyphrase_rake",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, ws FROM (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents)
+      SELECT doc_id, ws FROM (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents)
       WHERE len(ws) > 0
     ),
     pos AS (
@@ -3950,7 +3907,7 @@ def doc_keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc_cross_split_perplexity",
     oracle=f"""
     WITH b AS (SELECT doc_id, text, {_SAMPLE_BUCKET_SQL} AS bucket FROM documents),
-    toks AS (SELECT doc_id, bucket, {_SQL_TOKENS} AS ws FROM b),
+    toks AS (SELECT doc_id, bucket, {TOKENS_DUCKDB} AS ws FROM b),
     words AS (SELECT doc_id, bucket, unnest(ws) AS word FROM toks),
     cnt AS (SELECT word, count(*) AS c FROM words WHERE bucket < 80 GROUP BY word),
     tot AS (SELECT sum(c) AS total, count(*) AS vocab FROM cnt),
@@ -4065,7 +4022,7 @@ def sample_dsir_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_ngram_coverage_curve",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents),
+    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
     grams AS (
       SELECT unnest(list_transform(range(1, len(ws) - 1),
                     i -> ws[i] || ' ' || ws[i + 1] || ' ' || ws[i + 2])) AS g
@@ -4097,11 +4054,9 @@ def doc_ngram_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the three curve points read one cumulative-sum table."""
     from pyspark.sql import Window
 
-    from mapreduce_word2vec_spark.functions.text import ngrams_expr, tokens_expr
-
     docs = read_testdata(spark, sf_dir, "documents")
-    grams = docs.select(
-        F.explode(ngrams_expr(tokens_expr("text"), 3)).alias("g")
+    grams = docs.select(tokens_expr("text").alias("ws")).select(
+        F.explode(F.expr(ngrams_sql("ws", 3))).alias("g")
     )
     cnt = grams.groupBy("g").agg(F.count("*").alias("c"))
     ranked = cnt.withColumn(
@@ -4215,7 +4170,7 @@ _BADWORD_FRAC = 0.05
     "doc_badwords_filter",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_SQL_TOKENS} AS ws FROM documents
+      SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents
     ),
     c AS (
       SELECT doc_id,
@@ -4481,7 +4436,7 @@ def doc_cdc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH w AS (
       SELECT word, count(*) AS freq FROM (
-        SELECT unnest({_SQL_TOKENS}) AS word FROM documents
+        SELECT unnest({TOKENS_DUCKDB}) AS word FROM documents
       ) GROUP BY word
     )
     SELECT CAST(count(*) AS BIGINT) AS n_types,
@@ -4532,7 +4487,7 @@ def tokenizer_bpe_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # near-identical documents from one crawl source straddle train/test
 # — the leakage dedup_split_leakage exists to detect. The group-aware
 # split (sklearn GroupShuffleSplit semantics) hashes the SOURCE via
-# the shared cross-engine polynomial (functions.text.string_hash_expr
+# the shared cross-engine polynomial (functions.text.string_hash_sql
 # — Spark's murmur3 hash() and DuckDB's hash() do NOT agree), then
 # the same overflow-safe multiplicative bucket, so a group is
 # atomically train, val, or test and cross-split near-dup pairs from
@@ -4545,7 +4500,7 @@ def tokenizer_bpe_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH b AS (
       SELECT doc_id, source,
-             ((({_sql_strhash('source')} % {_SAMPLE_HASH_M})
+             ((({string_hash_duckdb('source')} % {_SAMPLE_HASH_M})
                 * {_SAMPLE_HASH_A}) % {_SAMPLE_HASH_M} >> 16) % 100 AS bucket
       FROM documents
     )
@@ -4559,10 +4514,8 @@ def tokenizer_bpe_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def split_group_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Group-atomic 80/10/10 split keyed on source: every document of
     a source lands in the same split."""
-    from mapreduce_word2vec_spark.functions.text import string_hash_expr
-
     docs = read_testdata(spark, sf_dir, "documents")
-    h = string_hash_expr(F.col("source"))
+    h = F.expr(string_hash_sql("source"))
     b = (h % _SAMPLE_HASH_M) * _SAMPLE_HASH_A % _SAMPLE_HASH_M
     bucket = F.shiftright(b, 16) % 100
     return docs.select(

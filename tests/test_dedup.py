@@ -143,7 +143,7 @@ def test_simhash_one_pass_equals_distinct_broadcast(spark, docs):
     older form hashed each DISTINCT word once and broadcast-joined the
     hash back. Same hash per word either way — signatures must match."""
     from mapreduce_word2vec_spark.functions.text import (
-        string_hash_expr,
+        string_hash_sql,
         tokens_expr,
     )
     from mapreduce_word2vec_spark.operators.dedup import simhash_signatures
@@ -159,7 +159,7 @@ def test_simhash_one_pass_equals_distinct_broadcast(spark, docs):
     dim = (
         tf.select("w")
         .distinct()
-        .select("w", string_hash_expr(F.col("w")).alias("h"))
+        .select("w", F.expr(string_hash_sql("w")).alias("h"))
     )
     hashed = tf.join(F.broadcast(dim), "w").select("doc_id", "tf", "h")
     bits = [

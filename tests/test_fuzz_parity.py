@@ -5,7 +5,9 @@ in single Spark jobs.
 * Tokenizer: Spark ``split/rlike`` (Java regex) vs Python ``re`` with
   ``re.ASCII`` — the exact M:102 semantics, including unicode,
   digits, underscores, empty and whitespace-only lines.
-* Fingerprint/string-hash: Catalyst fold vs pure-Python fold.
+* Fingerprint/string-hash/n-grams: the Spark SQL-text builders vs
+  pure-Python folds, and each kernel's DuckDB oracle fragment vs its
+  Spark builder.
 * Cosine: Catalyst HOF expression vs numpy.
 """
 
@@ -16,17 +18,23 @@ import random
 import re
 import string
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from mapreduce_word2vec_spark.functions.text import (
     FINGERPRINT_BASE,
     FINGERPRINT_MOD,
-    fingerprint_expr,
-    string_hash_expr,
+    TOKENS_DUCKDB,
+    fingerprint_duckdb,
+    fingerprint_sql,
+    ngrams_sql,
+    string_hash_duckdb,
+    string_hash_sql,
     tokens_expr,
 )
 from mapreduce_word2vec_spark.functions.vectors import cosine_expr
+from tests.conftest import EDGE_TEXTS
 
 _ALPHABET = (
     string.ascii_letters
@@ -73,34 +81,122 @@ def _py_string_hash(w: str) -> int:
     return h
 
 
-def test_string_hash_and_fingerprint_fuzz(spark):
+def _fuzz_words_and_docs() -> tuple[list[str], list[list[str]]]:
+    """2000 random lowercase words and 300 random token arrays over them."""
     rng = random.Random(11)
     words = [
         "".join(rng.choice(string.ascii_lowercase) for _ in range(rng.randint(1, 25)))
         for _ in range(2000)
     ]
+    docs = [
+        [rng.choice(words) for _ in range(rng.randint(0, 30))] for _ in range(300)
+    ]
+    return words, docs
+
+
+def test_string_hash_and_fingerprint_fuzz(spark):
+    words, docs = _fuzz_words_and_docs()
     df = spark.createDataFrame([Row(i=i, w=w) for i, w in enumerate(words)])
     got = {
         r["i"]: r["h"]
-        for r in df.select("i", string_hash_expr(F.col("w")).alias("h")).collect()
+        for r in df.select("i", F.expr(string_hash_sql("w")).alias("h")).collect()
     }
     for i, w in enumerate(words):
         assert got[i] == _py_string_hash(w), (w, got[i])
 
     # fingerprint over random token arrays
-    docs = [
-        [rng.choice(words) for _ in range(rng.randint(0, 30))] for _ in range(300)
-    ]
     fdf = spark.createDataFrame([Row(i=i, toks=d) for i, d in enumerate(docs)])
     fgot = {
         r["i"]: r["fp"]
-        for r in fdf.select("i", fingerprint_expr(F.col("toks")).alias("fp")).collect()
+        for r in fdf.select("i", F.expr(fingerprint_sql("toks")).alias("fp")).collect()
     }
     for i, d in enumerate(docs):
         h = 0
         for w in d:
             h = (h * FINGERPRINT_BASE + _py_string_hash(w)) % FINGERPRINT_MOD
         assert fgot[i] == h, (i, d[:3])
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 5])
+def test_ngrams_sql_matches_python(spark, docs, n):
+    """n-grams of the edge-case documents (empty strings, arrays shorter
+    than n, a NULL text) against a Python n-gram of the tokens."""
+    toks = docs.select("doc_id", "text", tokens_expr("text").alias("ws"))
+    got = {
+        r["doc_id"]: (r["text"], r["g"])
+        for r in toks.select("doc_id", "text", F.expr(ngrams_sql("ws", n)).alias("g"))
+        .collect()
+    }
+    assert len(got) == len(EDGE_TEXTS)
+    for doc_id, (text, g) in got.items():
+        if text is None:
+            assert g is None, doc_id
+            continue
+        ws = _py_tokens(text)
+        want = [" ".join(ws[i : i + n]) for i in range(len(ws) - n + 1)]
+        assert g == want, (doc_id, n, g, want)
+
+
+def test_duckdb_fragments_match_spark_builders(spark):
+    """Each text kernel's DuckDB oracle fragment, evaluated in DuckDB,
+    equals its Spark builder row for row: the tokenizer and the string
+    hash over the edge-case documents plus the fuzz words, the
+    fingerprint over those documents' tokens plus the fuzz token arrays.
+
+    The one divergence is a NULL operand: the Spark fold returns NULL,
+    while DuckDB's ``list_prepend(0, NULL)`` folds to 0. No oracle
+    query hashes a NULL operand; the assertion pins the divergence so
+    a change to either side shows up here."""
+    import duckdb
+
+    words, fuzz_docs = _fuzz_words_and_docs()
+    texts = [t for _, t in EDGE_TEXTS] + words
+    tok_lists = [None if t is None else _py_tokens(t) for t in texts] + fuzz_docs
+
+    with duckdb.connect() as con:
+        con.execute("CREATE TABLE t (i INTEGER, text VARCHAR)")
+        con.executemany("INSERT INTO t VALUES (?, ?)", list(enumerate(texts)))
+        con.execute("CREATE TABLE f (i INTEGER, toks VARCHAR[])")
+        con.executemany("INSERT INTO f VALUES (?, ?)", list(enumerate(tok_lists)))
+        duck_t = {
+            i: (ws, h)
+            for i, ws, h in con.execute(
+                f"SELECT i, {TOKENS_DUCKDB}, {string_hash_duckdb('text')} FROM t"
+            ).fetchall()
+        }
+        duck_f = dict(
+            con.execute(f"SELECT i, {fingerprint_duckdb('toks')} FROM f").fetchall()
+        )
+
+    sdf = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    spark_t = {
+        r["i"]: (r["ws"], r["h"])
+        for r in sdf.select(
+            "i",
+            tokens_expr("text").alias("ws"),
+            F.expr(string_hash_sql("text")).alias("h"),
+        ).collect()
+    }
+    fdf = spark.createDataFrame(list(enumerate(tok_lists)), "i int, toks array<string>")
+    spark_f = {
+        r["i"]: r["fp"]
+        for r in fdf.select("i", F.expr(fingerprint_sql("toks")).alias("fp")).collect()
+    }
+
+    assert len(duck_t) == len(spark_t) == len(texts)
+    assert len(duck_f) == len(spark_f) == len(tok_lists)
+    for i, text in enumerate(texts):
+        (d_ws, d_h), (s_ws, s_h) = duck_t[i], spark_t[i]
+        assert d_ws == s_ws, (i, text, d_ws, s_ws)
+        if text is None:
+            assert (s_h, d_h) == (None, 0), i
+        else:
+            assert d_h == s_h, (i, text, d_h, s_h)
+    for i, toks in enumerate(tok_lists):
+        if toks is None:
+            assert (spark_f[i], duck_f[i]) == (None, 0), i
+        else:
+            assert duck_f[i] == spark_f[i], (i, toks[:3], duck_f[i], spark_f[i])
 
 
 def test_cosine_fuzz_matches_numpy(spark):

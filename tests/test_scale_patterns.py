@@ -244,14 +244,14 @@ def test_corpus_statistics_replication_laws(spark):
 
         # reuse the registered query's logic via a temp view is
         # overkill — recompute the bounded top-100 form inline
-        from mapreduce_word2vec_spark.functions.text import ngrams_expr
+        from mapreduce_word2vec_spark.functions.text import ngrams_sql
 
         toks = df.select(tokens_expr("text").alias("ws"))
         uni = (
             toks.select(F.explode("ws").alias("w")).groupBy("w").agg(F.count("*").alias("c"))
         )
         bi_all = (
-            toks.select(F.explode(ngrams_expr(F.col("ws"), 2)).alias("g"))
+            toks.select(F.explode(F.expr(ngrams_sql("ws", 2))).alias("g"))
             .groupBy("g")
             .agg(F.count("*").alias("c_ab"))
         )

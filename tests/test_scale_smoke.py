@@ -113,7 +113,7 @@ def test_curation_pipeline_at_scale(spark):
     doc_id picks the same winner)."""
     from pyspark.sql import Window
     from mapreduce_word2vec_spark.functions.text import (
-        fingerprint_expr,
+        fingerprint_sql,
         quality_score_expr,
         tokens_expr,
     )
@@ -130,7 +130,7 @@ def test_curation_pipeline_at_scale(spark):
             quality_score_expr(F.col("text")).alias("quality"),
         )
         scored = base.where(F.col("quality") >= 0.5).select(
-            "doc_id", fingerprint_expr(F.col("_ws")).alias("fp")
+            "doc_id", F.expr(fingerprint_sql("_ws")).alias("fp")
         )
         w = Window.partitionBy("fp").orderBy("doc_id")
         return (
