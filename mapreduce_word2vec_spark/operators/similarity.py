@@ -33,10 +33,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mapreduce_word2vec_spark.functions.vectors import (
-    cosine_expr,
-    dot_expr,
-    norm_expr,
+    cosine_sql,
+    norm_sql,
     sign_bucket_expr,
+    sq_dist_sql,
 )
 
 
@@ -61,19 +61,19 @@ def cosine_pairs(
     q = left.select(
         F.col(left_id).alias("query_id"),
         F.col(vec_col).alias("qv"),
-        norm_expr(vec_col).alias("qn"),
+        F.expr(norm_sql(vec_col)).alias("qn"),
     ).where(F.col("qn") > 0)
     c = right.select(
         F.col(right_id).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
-        norm_expr(vec_col).alias("cn"),
+        F.expr(norm_sql(vec_col)).alias("cn"),
     ).where(F.col("cn") > 0)
     return (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",
             "neighbor_id",
-            (dot_expr("qv", "cv") / (F.col("qn") * F.col("cn"))).alias("cos"),
+            F.expr(cosine_sql("qv", "cv", "qn", "cn")).alias("cos"),
         )
     )
 
@@ -114,7 +114,7 @@ def cosine_pairs_blocked(
         joined.select(
             F.least("id_l", "id_r").alias("id_a"),
             F.greatest("id_l", "id_r").alias("id_b"),
-            (dot_expr("v_l", "v_r") / (F.col("n_l") * F.col("n_r"))).alias("cos"),
+            F.expr(cosine_sql("v_l", "v_r", "n_l", "n_r")).alias("cos"),
         )
         .where(F.col("cos") >= threshold)
     )
@@ -129,7 +129,7 @@ def _blocked_self_join(
     plus (n_l, n_r) when ``with_norms`` — the norm is an interpreted
     O(d) HOF per exploded row, so distance metrics that don't need it
     (Euclidean) skip it."""
-    norm_cols = [norm_expr(vec_col).alias("_n")] if with_norms else []
+    norm_cols = [F.expr(norm_sql(vec_col)).alias("_n")] if with_norms else []
     base = df.select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_v"),
@@ -171,21 +171,12 @@ def euclidean_pairs_blocked(
     (strict, matching MLlib ``approxSimilarityJoin`` semantics) via
     the same block-pair hash join as :func:`cosine_pairs_blocked` —
     the ground-truth side of LSH recall evaluation."""
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("v_l").cast("array<double>"),
-            F.col("v_r").cast("array<double>"),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     return (
         _blocked_self_join(df, id_col, vec_col, n_blocks, with_norms=False)
         .select(
             F.least("id_l", "id_r").alias("id_a"),
             F.greatest("id_l", "id_r").alias("id_b"),
-            F.sqrt(d2).alias("dist"),
+            F.expr(f"sqrt({sq_dist_sql('v_l', 'v_r')})").alias("dist"),
         )
         .where(F.col("dist") < threshold)
     )
@@ -252,13 +243,13 @@ def knn_sign_lsh(
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
-        norm_expr(vec_col).alias("qn"),
+        F.expr(norm_sql(vec_col)).alias("qn"),
         sign_bucket_expr(vec_col, n_bits).alias("bucket"),
     ).where(F.col("qn") > 0)
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
-        norm_expr(vec_col).alias("cn"),
+        F.expr(norm_sql(vec_col)).alias("cn"),
         sign_bucket_expr(vec_col, n_bits).alias("bucket"),
     ).where(F.col("cn") > 0)
     scored = (
@@ -267,7 +258,7 @@ def knn_sign_lsh(
         .select(
             "query_id",
             "neighbor_id",
-            (dot_expr("qv", "cv") / (F.col("qn") * F.col("cn"))).alias("cos"),
+            F.expr(cosine_sql("qv", "cv", "qn", "cn")).alias("cos"),
         )
     )
     # Zero-norm rows are gone at the scan → skip the per-pair NULL

@@ -24,6 +24,13 @@ from mapreduce_word2vec_spark.functions.text import (
     fingerprint_duckdb,
     string_hash_duckdb,
 )
+from mapreduce_word2vec_spark.functions.vectors import (
+    cosine_duckdb,
+    cosine_sql,
+    norm_sql,
+    sq_dist_duckdb,
+    sq_dist_sql,
+)
 from mapreduce_word2vec_spark.plans.catalog import register
 
 # The split-hash formula is OWNED by text_queries (split_train_val_test
@@ -213,14 +220,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("hamming", F.col("hamming").cast("int"))
 
 
-_SQL_DOT_E = (
-    "list_sum(list_transform(range(1, len(ea) + 1), "
-    "i -> CAST(ea[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)))"
-)
-_SQL_NORM_A = "sqrt(list_sum(list_transform(ea, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-_SQL_NORM_B = "sqrt(list_sum(list_transform(eb, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-
-
 @register(
     "dedup_embedding_cosine",
     oracle=f"""
@@ -228,7 +227,7 @@ _SQL_NORM_B = "sqrt(list_sum(list_transform(eb, x -> CAST(x AS DOUBLE) * CAST(x 
          b AS (SELECT vec_id, embedding AS eb FROM embeddings),
          s AS (
            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                  {_SQL_DOT_E} / ({_SQL_NORM_A} * {_SQL_NORM_B}) AS cos
+                  {cosine_duckdb("ea", "eb")} AS cos
            FROM a JOIN b ON a.vec_id < b.vec_id
          )
     SELECT id_a, id_b, round(cos, 6) AS cos FROM s WHERE cos >= 0.4
@@ -638,9 +637,7 @@ _SEM_K = 8  # fixed deterministic centroid count (vec_id < 8 seeds)
     WITH cent AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id < {_SEM_K}),
     d AS (
       SELECT e.vec_id, cent.cid,
-             list_sum(list_transform(range(1, len(e.embedding) + 1),
-               i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(ce[i] AS DOUBLE))
-                  * (CAST(e.embedding[i] AS DOUBLE) - CAST(ce[i] AS DOUBLE)))) AS sqd
+             {sq_dist_duckdb("e.embedding", "ce")} AS sqd
       FROM embeddings e CROSS JOIN cent
     ),
     asg AS (
@@ -657,7 +654,7 @@ _SEM_K = 8  # fixed deterministic centroid count (vec_id < 8 seeds)
       JOIN embeddings b ON b.vec_id = xb.vec_id
     ),
     s AS (
-      SELECT cid, id_a, id_b, {_SQL_DOT_E} / ({_SQL_NORM_A} * {_SQL_NORM_B}) AS cos
+      SELECT cid, id_a, id_b, {cosine_duckdb("ea", "eb")} AS cos
       FROM p
     )
     SELECT CAST(cid AS BIGINT) AS cluster_id, id_a, id_b, round(cos, 6) AS cos
@@ -688,11 +685,7 @@ def dedup_semantic_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = emb.where(F.col("vec_id") < _SEM_K).select(
         F.col("vec_id").alias("cid"), dbl.alias("ce")
     )
-    sqd = F.aggregate(
-        F.zip_with(dbl, F.col("ce"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, v: a + v,
-    )
+    sqd = F.expr(sq_dist_sql("embedding", "ce"))
     # Persist the assignment: both sides of the pair self-join consume
     # it, and without the cache Catalyst recomputes the K-fanout
     # cross join + argmin TWICE (two scans of the corpus).
@@ -715,9 +708,7 @@ def dedup_semantic_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             F.col("cid").cast("bigint").alias("cluster_id"),
             "v",
-            F.sqrt(
-                F.aggregate(F.col("v"), F.lit(0.0), lambda a, x: a + x * x)
-            ).alias("nrm"),
+            F.expr(norm_sql("v")).alias("nrm"),
         )
     )
     a = asg.select(
@@ -732,15 +723,10 @@ def dedup_semantic_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("vb"),
         F.col("nrm").alias("nb"),
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda a_, x: a_ + x,
-    )
     return (
         a.join(b, ["cluster_id"])
         .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", dot / (F.col("na") * F.col("nb")))
+        .withColumn("cos", F.expr(cosine_sql("va", "vb", "na", "nb")))
         .where(F.col("cos") >= 0.4)
         .select("cluster_id", "id_a", "id_b", F.round("cos", 6).alias("cos"))
     )

@@ -15,6 +15,16 @@ from pyspark.sql import functions as F
 
 from mapreduce_word2vec_spark.functions.hashing import KNUTH31, MASK32
 from mapreduce_word2vec_spark.functions.text import TOKENS_DUCKDB
+from mapreduce_word2vec_spark.functions.vectors import (
+    cosine_duckdb,
+    cosine_sql,
+    norm_duckdb,
+    norm_sql,
+    sq_dist_duckdb,
+    sq_dist_sql,
+    sq_norm_duckdb,
+    sq_norm_sql,
+)
 from mapreduce_word2vec_spark.plans.catalog import register
 from mapreduce_word2vec_spark.sources.readers import read_testdata
 
@@ -49,10 +59,9 @@ def emb_label_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "emb_norm_stats",
-    oracle="""
+    oracle=f"""
     WITH n AS (
-      SELECT label,
-             sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
+      SELECT label, {norm_duckdb("embedding")} AS nrm
       FROM embeddings
     )
     SELECT label,
@@ -66,11 +75,10 @@ def emb_label_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 def emb_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2-norm distribution per label — exercises the higher-order
     vector functions against the oracle."""
-    from mapreduce_word2vec_spark.functions.vectors import norm_expr
 
     emb = read_testdata(spark, sf_dir, "embeddings")
     return (
-        emb.select("label", norm_expr("embedding").alias("nrm"))
+        emb.select("label", F.expr(norm_sql("embedding")).alias("nrm"))
         .groupBy("label")
         .agg(
             F.count("*").alias("n"),
@@ -199,10 +207,9 @@ def doc_embedding_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "emb_normalize",
-    oracle="""
+    oracle=f"""
     WITH n AS (
-      SELECT vec_id, embedding,
-             sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
+      SELECT vec_id, embedding, {norm_duckdb("embedding")} AS nrm
       FROM embeddings
     ),
     u AS (
@@ -226,7 +233,7 @@ def emb_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard preparation before similarity search at scale."""
     emb = read_testdata(spark, sf_dir, "embeddings")
     v = F.col("embedding").cast("array<double>")
-    nrm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
+    nrm = F.expr(norm_sql("embedding"))
     unit = F.when(
         nrm > 0, F.transform(v, lambda x: F.round(x / nrm, 6))
     ).otherwise(F.transform(v, lambda x: F.lit(0.0)))
@@ -269,12 +276,12 @@ def emb_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "emb_matryoshka_truncate",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT vec_id,
              list_transform(embedding[1:16], x -> CAST(x AS DOUBLE)) AS head,
-             list_sum(list_transform(embedding[1:16], x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS head_sq,
-             list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS full_sq
+             {sq_norm_duckdb("embedding[1:16]")} AS head_sq,
+             {sq_norm_duckdb("embedding")} AS full_sq
       FROM embeddings
     )
     ,
@@ -303,8 +310,8 @@ def emb_matryoshka_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_testdata(spark, sf_dir, "embeddings")
     v = F.col("embedding").cast("array<double>")
     head = F.slice(v, 1, 16)
-    head_sq = F.aggregate(head, F.lit(0.0), lambda a, x: a + x * x)
-    full_sq = F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x)
+    head_sq = F.expr(sq_norm_sql("slice(embedding, 1, 16)"))
+    full_sq = F.expr(sq_norm_sql("embedding"))
     head_unit = F.when(
         head_sq > 0, F.transform(head, lambda x: F.round(x / F.sqrt(head_sq), 6))
     ).otherwise(F.transform(head, lambda x: F.lit(0.0)))
@@ -432,14 +439,11 @@ def emb_anisotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "emb_pairwise_cos_histogram",
-    oracle="""
+    oracle=f"""
     WITH a AS (SELECT vec_id, embedding AS ea FROM embeddings WHERE vec_id < 100),
          b AS (SELECT vec_id, embedding AS eb FROM embeddings WHERE vec_id < 100),
          s AS (
-           SELECT list_sum(list_transform(range(1, len(ea) + 1),
-                    i -> CAST(ea[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)))
-                  / (sqrt(list_sum(list_transform(ea, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                     * sqrt(list_sum(list_transform(eb, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cos
+           SELECT {cosine_duckdb("ea", "eb")} AS cos
            FROM a JOIN b ON a.vec_id < b.vec_id
          )
     SELECT CAST(least(9, greatest(0, floor((cos + 1.0) * 5))) AS INT) AS bin,
@@ -459,20 +463,19 @@ def emb_pairwise_cos_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches the full corpus; the full-corpus version is the
     block-pair join dedup_embedding_cosine already demonstrates."""
     emb = read_testdata(spark, sf_dir, "embeddings").where(F.col("vec_id") < 100)
-    from mapreduce_word2vec_spark.functions.vectors import dot_expr, norm_expr
 
     a = emb.select(
         F.col("vec_id").alias("id_a"),
         F.col("embedding").alias("ea"),
-        norm_expr("embedding").alias("na"),
+        F.expr(norm_sql("embedding")).alias("na"),
     )
     b = emb.select(
         F.col("vec_id").alias("id_b"),
         F.col("embedding").alias("eb"),
-        norm_expr("embedding").alias("nb"),
+        F.expr(norm_sql("embedding")).alias("nb"),
     )
     s = a.join(b, F.col("id_a") < F.col("id_b")).select(
-        (dot_expr("ea", "eb") / (F.col("na") * F.col("nb"))).alias("cos")
+        F.expr(cosine_sql("ea", "eb", "na", "nb")).alias("cos")
     )
     bin_ = F.least(
         F.lit(9), F.greatest(F.lit(0), F.floor((F.col("cos") + 1.0) * 5))
@@ -906,7 +909,7 @@ def emb_pca_explained_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "emb_cluster_purity",
-    oracle="""
+    oracle=f"""
     WITH idx AS (
       -- dimensionality from the data (the emb_kmeans_iter rule): a
       -- hard-coded bound silently truncates stats if the fixture
@@ -925,9 +928,7 @@ def emb_pca_explained_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT vec_id, label, cid,
              row_number() OVER (
                PARTITION BY vec_id
-               ORDER BY list_sum(list_transform(range(1, len(embedding) + 1),
-                 i -> (CAST(embedding[i] AS DOUBLE) - ce[i])
-                      * (CAST(embedding[i] AS DOUBLE) - ce[i]))) ASC, cid
+               ORDER BY {sq_dist_duckdb("embedding", "ce")} ASC, cid
              ) AS rn
       FROM embeddings CROSS JOIN cent
     ),
@@ -959,15 +960,7 @@ def emb_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = read_testdata(spark, sf_dir, "embeddings")
     cent = label_centroids(emb, id_out="cid")
-    sqd = F.aggregate(
-        F.zip_with(
-            F.col("embedding").cast("array<double>"),
-            F.col("ce"),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    sqd = F.expr(sq_dist_sql("embedding", "ce"))
     w_assign = Window.partitionBy("vec_id").orderBy(F.asc("sqd"), F.asc("cid"))
     cl = (
         emb.crossJoin(F.broadcast(cent))
@@ -1116,7 +1109,6 @@ def w2v_synonyms_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     kNN on word vectors.
     Scale shape: everything after training is vocab-bounded; the
     five returned rows and the one query vector broadcast."""
-    from mapreduce_word2vec_spark.functions.vectors import dot_expr, norm_expr
     from mapreduce_word2vec_spark.operators.word2vec import (
         sentences_df,
         train_word2vec,
@@ -1169,14 +1161,14 @@ def w2v_synonyms_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "word", F.col("vector").cast("array<double>").alias("v")
     )
     qv = vecs.where(F.col("word") == top_word).select(
-        F.col("v").alias("qv"), norm_expr("v").alias("qn")
+        F.col("v").alias("qv"), F.expr(norm_sql("v")).alias("qn")
     )
     scored = (
         vecs.where(F.col("word") != top_word)
         .crossJoin(F.broadcast(qv))
         .select(
             "word",
-            (dot_expr("v", "qv") / (norm_expr("v") * F.col("qn"))).alias("cos"),
+            F.expr(cosine_sql("v", "qv", nb="qn")).alias("cos"),
         )
     )
     ret_min = (

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_word2vec_spark.functions.text import string_hash_duckdb
+from mapreduce_word2vec_spark.functions.vectors import sq_norm_duckdb
 from mapreduce_word2vec_spark.operators.multimodal import N_HIST_BINS
 from mapreduce_word2vec_spark.plans.catalog import register
 from mapreduce_word2vec_spark.sources.readers import read_testdata
@@ -137,7 +138,7 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_audio_windows",
-    oracle="""
+    oracle=f"""
     WITH w AS (
       SELECT doc_id, text,
              unnest(range(0, CAST(ceil(length(text) / 256.0) AS INT))) AS win
@@ -152,8 +153,7 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, CAST(win AS INT) AS window_idx,
            CAST(len(cs) AS BIGINT) AS n_samples,
            round(CAST(list_sum(cs) AS DOUBLE) / len(cs), 6) AS mean_amp,
-           round(sqrt(CAST(list_sum(list_transform(cs, c -> c * c)) AS DOUBLE)
-                      / len(cs)), 6) AS rms
+           round(sqrt({sq_norm_duckdb("cs")} / len(cs)), 6) AS rms
     FROM s
     """,
 )
@@ -632,8 +632,7 @@ _VAD_WIN = 256
     ),
     rms AS (
       SELECT doc_id, CAST(win AS INT) AS win,
-             sqrt(CAST(list_sum(list_transform(cs, c -> c * c)) AS DOUBLE)
-                  / len(cs)) AS r
+             sqrt({sq_norm_duckdb("cs")} / len(cs)) AS r
       FROM w WHERE len(cs) > 0
     ),
     flags AS (

@@ -2,9 +2,11 @@
 "Similarity search"; the reference's missing cosine feature,
 feedback.md:5).
 
-Oracle cosine uses the same formula shape as the Spark expressions
-(sequential dot / (norm_a * norm_b) in double) and both sides round
-to 6 dp, so rank boundaries and values agree.
+Every dot product, norm, cosine and squared distance here comes from
+``functions/vectors.py``: the Spark side parses its SQL-text builder
+with ``F.expr`` and the oracle interpolates the matching DuckDB
+fragment. Both fold left to right in double and both sides round to
+6 dp, so rank boundaries and values agree.
 """
 
 from __future__ import annotations
@@ -13,17 +15,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_word2vec_spark.functions.text import TOKENS_DUCKDB
-from mapreduce_word2vec_spark.functions.vectors import dot_expr, norm_expr
+from mapreduce_word2vec_spark.functions.vectors import (
+    cosine_duckdb,
+    cosine_sql,
+    norm_sql,
+    sq_dist_duckdb,
+    sq_dist_sql,
+    sq_norm_duckdb,
+    sq_norm_sql,
+)
 from mapreduce_word2vec_spark.operators.similarity import label_centroids
 from mapreduce_word2vec_spark.plans.catalog import register
 from mapreduce_word2vec_spark.sources.readers import read_testdata
-
-_SQL_DOT = (
-    "list_sum(list_transform(range(1, len(qe) + 1), "
-    "i -> CAST(qe[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE)))"
-)
-_SQL_NORM_Q = "sqrt(list_sum(list_transform(qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-_SQL_NORM_C = "sqrt(list_sum(list_transform(ce, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
 
 
 @register(
@@ -33,7 +36,7 @@ _SQL_NORM_C = "sqrt(list_sum(list_transform(ce, x -> CAST(x AS DOUBLE) * CAST(x 
          c AS (SELECT vec_id AS neighbor_id, embedding AS ce FROM embeddings),
          s AS (
            SELECT query_id, neighbor_id,
-                  {_SQL_DOT} / ({_SQL_NORM_Q} * {_SQL_NORM_C}) AS cos
+                  {cosine_duckdb("qe", "ce")} AS cos
            FROM q, c WHERE query_id <> neighbor_id
          ),
          r AS (
@@ -68,7 +71,7 @@ def knn_bruteforce_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     c AS (SELECT vec_id AS neighbor_id, embedding AS ce, bucket FROM b),
     s AS (
       SELECT query_id, neighbor_id,
-             {_SQL_DOT} / ({_SQL_NORM_Q} * {_SQL_NORM_C}) AS cos
+             {cosine_duckdb("qe", "ce")} AS cos
       FROM q JOIN c USING (bucket) WHERE query_id <> neighbor_id
     ),
     r AS (
@@ -175,11 +178,9 @@ def brp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "brp_lsh_recall",
-    oracle="""
+    oracle=f"""
     WITH pairs AS (
-      SELECT sqrt(list_sum(list_transform(range(1, len(x.embedding) + 1),
-               i -> (CAST(x.embedding[i] AS DOUBLE) - CAST(y.embedding[i] AS DOUBLE))
-                    * (CAST(x.embedding[i] AS DOUBLE) - CAST(y.embedding[i] AS DOUBLE))))) AS dist
+      SELECT sqrt({sq_dist_duckdb("x.embedding", "y.embedding")}) AS dist
       FROM embeddings x JOIN embeddings y ON x.vec_id < y.vec_id
     )
     SELECT CAST(count(*) AS BIGINT) AS n_exact,
@@ -245,21 +246,14 @@ _SQL_CENTROID = """
       SELECT query_id, qe, label AS probe_label,
              row_number() OVER (
                PARTITION BY query_id
-               ORDER BY list_sum(list_transform(range(1, len(qe) + 1),
-                                 i -> CAST(qe[i] AS DOUBLE) * ce[i]))
-                        / (sqrt(list_sum(list_transform(qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                           * sqrt(list_sum(list_transform(ce, x -> x * x)))) DESC,
-                        label
+               ORDER BY {cosine_duckdb("qe", "ce")} DESC, label
              ) AS rn
       FROM q CROSS JOIN cent
     ),
     c AS (SELECT vec_id AS neighbor_id, embedding AS ce2, label FROM embeddings),
     s AS (
       SELECT query_id, neighbor_id,
-             list_sum(list_transform(range(1, len(qe) + 1),
-                      i -> CAST(qe[i] AS DOUBLE) * CAST(ce2[i] AS DOUBLE)))
-             / (sqrt(list_sum(list_transform(qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                * sqrt(list_sum(list_transform(ce2, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cos
+             {cosine_duckdb("qe", "ce2")} AS cos
       FROM qc JOIN c ON qc.probe_label = c.label
       WHERE qc.rn = 1 AND qc.query_id <> c.neighbor_id
     ),
@@ -278,7 +272,6 @@ def knn_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted list only. At scale the inverted lists are partitions
     co-located by cluster id, so a probe touches 1/K of the corpus."""
     from pyspark.sql import Window
-    from mapreduce_word2vec_spark.functions.vectors import dot_expr, norm_expr
 
     emb = read_testdata(spark, sf_dir, "embeddings")
 
@@ -287,7 +280,7 @@ def knn_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.where(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
-        norm_expr("embedding").alias("qn"),
+        F.expr(norm_sql("embedding")).alias("qn"),
     )
     w_probe = Window.partitionBy("query_id").orderBy(
         F.desc("cent_cos"), "probe_label"
@@ -296,7 +289,7 @@ def knn_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.crossJoin(F.broadcast(cent))
         .withColumn(
             "cent_cos",
-            dot_expr("qe", "ce") / (F.col("qn") * norm_expr("ce")),
+            F.expr(cosine_sql("qe", "ce", "qn")),
         )
         .withColumn("rn", F.row_number().over(w_probe))
         .where(F.col("rn") == 1)
@@ -306,7 +299,7 @@ def knn_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("ce2"),
-        norm_expr("embedding").alias("cn"),
+        F.expr(norm_sql("embedding")).alias("cn"),
         F.col("label").alias("probe_label"),
     )
     scored = (
@@ -315,7 +308,7 @@ def knn_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "neighbor_id",
-            (dot_expr("qe", "ce2") / (F.col("qn") * F.col("cn"))).alias("cos"),
+            F.expr(cosine_sql("qe", "ce2", "qn", "cn")).alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
@@ -373,7 +366,7 @@ def knn_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "emb_kmeans_iter",
-    oracle="""
+    oracle=f"""
     WITH idx AS (
       -- dimensionality derived from the data, not hard-coded: a
       -- literal bound would silently truncate (embedding[i] beyond
@@ -393,9 +386,7 @@ def knn_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT vec_id, embedding, cid,
              row_number() OVER (
                PARTITION BY vec_id
-               ORDER BY list_sum(list_transform(range(1, len(embedding) + 1),
-                 i -> (CAST(embedding[i] AS DOUBLE) - ce[i])
-                      * (CAST(embedding[i] AS DOUBLE) - ce[i]))) ASC, cid
+               ORDER BY {sq_dist_duckdb("embedding", "ce")} ASC, cid
              ) AS rn
       FROM embeddings CROSS JOIN cent
     )
@@ -424,15 +415,7 @@ def emb_kmeans_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = read_testdata(spark, sf_dir, "embeddings")
     cent = label_centroids(emb, id_out="cid")
-    sqd = F.aggregate(
-        F.zip_with(
-            F.col("embedding").cast("array<double>"),
-            F.col("ce"),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    sqd = F.expr(sq_dist_sql("embedding", "ce"))
     w = Window.partitionBy("vec_id").orderBy(F.asc("sqd"), F.asc("cid"))
     assigned = (
         emb.crossJoin(F.broadcast(cent))
@@ -487,7 +470,7 @@ _RRF_TOPN = 50
     q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
     cos AS (
       SELECT vec_id AS doc_id,
-             round({_SQL_DOT} / ({_SQL_NORM_Q} * {_SQL_NORM_C}), 6) AS cos
+             round({cosine_duckdb("qe", "ce")}, 6) AS cos
       FROM (SELECT vec_id, embedding AS ce FROM embeddings), q
     ),
     vec_rank AS (
@@ -548,16 +531,12 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.where(F.col("vec_id") == 0).select(
         F.col("embedding").cast("array<double>").alias("qe")
     )
-    ce = F.col("embedding").cast("array<double>")
+    ce = "CAST(embedding AS ARRAY<DOUBLE>)"
     cos = (
         emb.crossJoin(F.broadcast(q))
         .select(
             F.col("vec_id").alias("doc_id"),
-            F.round(
-                dot_expr(ce, F.col("qe"))
-                / (norm_expr(F.col("qe")) * norm_expr(ce)),
-                6,
-            ).alias("cos"),
+            F.round(F.expr(cosine_sql(ce, "qe")), 6).alias("cos"),
         )
         .orderBy(F.desc("cos"), "doc_id")
         .limit(_RRF_TOPN)
@@ -613,9 +592,7 @@ _SQL_PQ_CODE = f"""ss AS (SELECT unnest(range(0, {_PQ_SUBSPACES})) AS s),
     ),
     d AS (
       SELECT sub.vec_id, sub.s, pqcb.cid,
-             list_sum(list_transform(range(1, {_PQ_SUBDIM} + 1),
-               i -> (CAST(sub.v[i] AS DOUBLE) - CAST(pqcb.cv[i] AS DOUBLE))
-                  * (CAST(sub.v[i] AS DOUBLE) - CAST(pqcb.cv[i] AS DOUBLE)))) AS sqd
+             {sq_dist_duckdb("sub.v", "pqcb.cv")} AS sqd
       FROM sub JOIN pqcb ON sub.s = pqcb.s
     ),
     code AS (
@@ -649,14 +626,9 @@ def _pq_distances(spark: SparkSession, emb: DataFrame) -> DataFrame:
             F.slice(dbl, F.col("s") * _PQ_SUBDIM + 1, _PQ_SUBDIM).alias("cv"),
         )
     )
-    sqd = F.aggregate(
-        F.zip_with(F.col("v"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
     return (
         sub.join(F.broadcast(cb), "s")
-        .withColumn("sqd", sqd)
+        .withColumn("sqd", F.expr(sq_dist_sql("v", "cv")))
         .select("vec_id", "s", "cid", "sqd")
     )
 
@@ -783,11 +755,7 @@ def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT query_id, label AS probe_label,
                row_number() OVER (
                  PARTITION BY query_id
-                 ORDER BY list_sum(list_transform(range(1, len(qe) + 1),
-                                   i -> CAST(qe[i] AS DOUBLE) * ce[i]))
-                          / (sqrt(list_sum(list_transform(qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                             * sqrt(list_sum(list_transform(ce, x -> x * x)))) DESC,
-                          label
+                 ORDER BY {cosine_duckdb("qe", "ce")} DESC, label
                ) AS rn
         FROM q CROSS JOIN cent
       ) WHERE rn = 1
@@ -827,7 +795,6 @@ def knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     `knn_pq_adc` composed end to end."""
     from pyspark.sql import Window
 
-    from mapreduce_word2vec_spark.functions.vectors import dot_expr, norm_expr
 
     emb = read_testdata(spark, sf_dir, "embeddings")
     dbl = F.col("embedding").cast("array<double>")
@@ -837,12 +804,12 @@ def knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
-        norm_expr("embedding").alias("qn"),
+        F.expr(norm_sql("embedding")).alias("qn"),
     )
     w_probe = Window.partitionBy("query_id").orderBy(F.desc("cent_cos"), "probe_label")
     probed = (
         q.crossJoin(F.broadcast(cent))
-        .withColumn("cent_cos", dot_expr("qe", "ce") / (F.col("qn") * norm_expr("ce")))
+        .withColumn("cent_cos", F.expr(cosine_sql("qe", "ce", "qn")))
         .withColumn("rn", F.row_number().over(w_probe))
         .where(F.col("rn") == 1)
         .select("query_id", "probe_label")
@@ -880,15 +847,6 @@ def knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_DOT16 = (
-    "list_sum(list_transform(range(1, 17), "
-    "i -> CAST(qe[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE)))"
-)
-_SQL_NORM16 = (
-    "sqrt(list_sum(list_transform({v}[1:16], x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-)
-
-
 @register(
     "knn_matryoshka_cascade",
     oracle=f"""
@@ -896,7 +854,7 @@ _SQL_NORM16 = (
          c AS (SELECT vec_id AS neighbor_id, embedding AS ce FROM embeddings),
          s1 AS (
            SELECT query_id, neighbor_id, qe, ce,
-                  {_SQL_DOT16} / ({_SQL_NORM16.format(v="qe")} * {_SQL_NORM16.format(v="ce")}) AS pcos
+                  {cosine_duckdb("qe[1:16]", "ce[1:16]")} AS pcos
            FROM q, c WHERE query_id <> neighbor_id
          ),
          cand AS (
@@ -908,7 +866,7 @@ _SQL_NORM16 = (
          ),
          s2 AS (
            SELECT query_id, neighbor_id,
-                  {_SQL_DOT} / ({_SQL_NORM_Q} * {_SQL_NORM_C}) AS cos
+                  {cosine_duckdb("qe", "ce")} AS cos
            FROM cand
          )
     SELECT query_id, neighbor_id, round(cos, 6) AS cos FROM (
@@ -937,25 +895,21 @@ def knn_matryoshka_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = base.select(F.col("vec_id").alias("neighbor_id"), F.col("vec").alias("cv"))
 
-    # shared sequential folds (functions.vectors) — one definition of
-    # the determinism-critical dot/norm shape repo-wide
-    dot, nrm = dot_expr, norm_expr
-
-    qh, ch = F.slice(F.col("qv"), 1, 16), F.slice(F.col("cv"), 1, 16)
     s1 = (
         c.crossJoin(F.broadcast(q))
         .where(F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id", "neighbor_id", "qv", "cv",
-            (dot(qh, ch) / (nrm(qh) * nrm(ch))).alias("pcos"),
+            F.expr(cosine_sql("slice(qv, 1, 16)", "slice(cv, 1, 16)")).alias("pcos"),
         )
     )
     rn1 = F.row_number().over(
         W.partitionBy("query_id").orderBy(F.desc("pcos"), "neighbor_id")
     )
     cand = s1.withColumn("rn", rn1).where(F.col("rn") <= 50)
-    full_cos = dot(F.col("qv"), F.col("cv")) / (nrm(F.col("qv")) * nrm(F.col("cv")))
-    s2 = cand.select("query_id", "neighbor_id", full_cos.alias("cos"))
+    s2 = cand.select(
+        "query_id", "neighbor_id", F.expr(cosine_sql("qv", "cv")).alias("cos")
+    )
     rn2 = F.row_number().over(
         W.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
     )
@@ -975,7 +929,7 @@ def knn_matryoshka_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
                FROM embeddings),
          s AS (
            SELECT query_id, neighbor_id,
-                  {_SQL_DOT} / ({_SQL_NORM_Q} * {_SQL_NORM_C}) AS cos
+                  {cosine_duckdb("qe", "ce")} AS cos
            FROM q JOIN c ON q.q_label <> c.c_label
          ),
          r AS (
@@ -997,27 +951,26 @@ def emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     mining cost equals one search pass — no post-filter re-ranking."""
     from pyspark.sql import Window
 
-    from mapreduce_word2vec_spark.functions.vectors import dot_expr, norm_expr
 
     emb = read_testdata(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("q_label"),
         F.col("embedding").alias("qe"),
-        norm_expr("embedding").alias("qn"),
+        F.expr(norm_sql("embedding")).alias("qn"),
     )
     c = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("label").alias("c_label"),
         F.col("embedding").alias("ce"),
-        norm_expr("embedding").alias("cn"),
+        F.expr(norm_sql("embedding")).alias("cn"),
     )
     scored = (
         c.join(F.broadcast(q), F.col("q_label") != F.col("c_label"))
         .select(
             "query_id",
             "neighbor_id",
-            (dot_expr("qe", "ce") / (F.col("qn") * F.col("cn"))).alias("cos"),
+            F.expr(cosine_sql("qe", "ce", "qn", "cn")).alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
@@ -1047,7 +1000,7 @@ def emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
          c AS (SELECT vec_id AS neighbor_id, embedding AS ce FROM embeddings),
          s AS (
            SELECT query_id, neighbor_id,
-                  {_SQL_DOT} / ({_SQL_NORM_Q} * {_SQL_NORM_C}) AS cos
+                  {cosine_duckdb("qe", "ce")} AS cos
            FROM q, c WHERE query_id <> neighbor_id
          ),
          r AS (
@@ -1098,11 +1051,7 @@ def emb_hubness(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT vec_id, native, label AS assigned,
              row_number() OVER (
                PARTITION BY vec_id
-               ORDER BY list_sum(list_transform(range(1, len(qe) + 1),
-                                 i -> CAST(qe[i] AS DOUBLE) * ce[i]))
-                        / (sqrt(list_sum(list_transform(qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                           * sqrt(list_sum(list_transform(ce, x -> x * x)))) DESC,
-                        label
+               ORDER BY {cosine_duckdb("qe", "ce")} DESC, label
              ) AS rn
       FROM v CROSS JOIN cent
     )
@@ -1123,7 +1072,6 @@ def emb_ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     report run after every index build."""
     from pyspark.sql import Window
 
-    from mapreduce_word2vec_spark.functions.vectors import dot_expr, norm_expr
 
     emb = read_testdata(spark, sf_dir, "embeddings")
     cent = label_centroids(emb, id_out="clabel")
@@ -1132,9 +1080,7 @@ def emb_ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("native"),
         F.col("embedding").cast("array<double>").alias("qe"),
     )
-    cos = dot_expr(F.col("qe"), F.col("ce")) / (
-        norm_expr(F.col("qe")) * norm_expr(F.col("ce"))
-    )
+    cos = F.expr(cosine_sql("qe", "ce"))
     w = Window.partitionBy("vec_id").orderBy(F.desc("cos"), "assigned")
     a = (
         v.crossJoin(F.broadcast(cent))
@@ -1167,11 +1113,8 @@ def emb_ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     v AS (SELECT vec_id, label, embedding AS qe FROM embeddings),
     j AS (
       SELECT v.label,
-             list_sum(list_transform(qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))
-               AS e_tot,
-             list_sum(list_transform(range(1, len(qe) + 1),
-               i -> (CAST(qe[i] AS DOUBLE) - ce[i]) * (CAST(qe[i] AS DOUBLE) - ce[i])))
-               AS e_res
+             {sq_norm_duckdb("qe")} AS e_tot,
+             {sq_dist_duckdb("qe", "ce")} AS e_res
       FROM v JOIN cent ON v.label = cent.label
     )
     SELECT label,
@@ -1183,7 +1126,6 @@ def emb_ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 def emb_residual_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cluster residual-energy fraction after coarse quantization
     (native-label centroids, broadcast): Σ‖v−c‖²/Σ‖v‖²."""
-    from mapreduce_word2vec_spark.functions.vectors import dot_expr
 
     emb = read_testdata(spark, sf_dir, "embeddings")
     cent = label_centroids(emb)
@@ -1191,11 +1133,12 @@ def emb_residual_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("qe")
     )
     j = v.join(F.broadcast(cent), "label")
-    e_tot = dot_expr(F.col("qe"), F.col("qe"))
-    diff = F.zip_with(F.col("qe"), F.col("ce"), lambda a, b: a - b)
-    e_res = dot_expr(diff, diff)
     return (
-        j.select("label", e_tot.alias("e_tot"), e_res.alias("e_res"))
+        j.select(
+            "label",
+            F.expr(sq_norm_sql("qe")).alias("e_tot"),
+            F.expr(sq_dist_sql("qe", "ce")).alias("e_res"),
+        )
         .groupBy("label")
         .agg(
             F.count("*").cast("bigint").alias("n_vectors"),
@@ -1218,11 +1161,6 @@ _SQL_SUBVECS = (
     "list_transform(range(0, {t}), k -> "
     "list_transform({col}[k * {s} + 1 : k * {s} + {s}], x -> CAST(x AS DOUBLE)))"
 )
-_SQL_SUBCOS = (
-    "list_sum(list_transform(range(1, {s} + 1), i -> qi[i] * dj[i]))"
-    " / (sqrt(list_sum(list_transform(qi, x -> x * x)))"
-    "    * sqrt(list_sum(list_transform(dj, x -> x * x))))"
-)
 
 
 @register(
@@ -1242,7 +1180,7 @@ _SQL_SUBCOS = (
       SELECT query_id, neighbor_id,
              list_sum(list_transform(qs, qi ->
                list_max(list_transform(ds, dj ->
-                 {_SQL_SUBCOS.format(s=_MAXSIM_SUB)})))) AS maxsim
+                 {cosine_duckdb("qi", "dj")})))) AS maxsim
       FROM q CROSS JOIN c WHERE query_id <> neighbor_id
     ),
     r AS (
@@ -1274,14 +1212,9 @@ def knn_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = emb.select(F.col("vec_id").alias("neighbor_id"), subvecs("embedding").alias("ds"))
 
-    def cos(qi, dj):
-        return dot_expr(qi, dj) / (norm_expr(qi) * norm_expr(dj))
-
-    maxsim = F.aggregate(
-        F.col("qs"),
-        F.lit(0.0),
-        lambda acc, qi: acc
-        + F.array_max(F.transform(F.col("ds"), lambda dj: cos(qi, dj))),
+    maxsim = F.expr(
+        "aggregate(qs, 0.0D, (ms_acc, ms_q) -> ms_acc + "
+        f"array_max(transform(ds, ms_d -> {cosine_sql('ms_q', 'ms_d')})))"
     )
     s = (
         c.crossJoin(F.broadcast(q))
@@ -1303,7 +1236,7 @@ def knn_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
          c AS (SELECT vec_id AS neighbor_id, embedding AS ce FROM embeddings),
          s AS (
            SELECT query_id, neighbor_id,
-                  round({_SQL_DOT} / ({_SQL_NORM_Q} * {_SQL_NORM_C}), 6) AS cos
+                  round({cosine_duckdb("qe", "ce")}, 6) AS cos
            FROM q, c WHERE query_id <> neighbor_id
          )
     SELECT query_id, neighbor_id, cos FROM s WHERE cos >= 0.35
@@ -1356,7 +1289,7 @@ _BQ_CODE_SQL = (
     ),
     resc AS (
       SELECT query_id, neighbor_id, CAST(hamming AS INT) AS hamming,
-             {_SQL_DOT} / ({_SQL_NORM_Q} * {_SQL_NORM_C}) AS cos
+             {cosine_duckdb("qe", "ce")} AS cos
       FROM ham WHERE hrn <= 20
     ),
     r AS (
@@ -1416,9 +1349,8 @@ def knn_binary_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("hrn", F.row_number().over(hw))
         .where(F.col("hrn") <= 20)
     )
-    from mapreduce_word2vec_spark.functions.vectors import dot_expr, norm_expr
 
-    cos = dot_expr("qv", "cv") / (norm_expr("qv") * norm_expr("cv"))
+    cos = F.expr(cosine_sql("qv", "cv"))
     rw = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
     return (
         cand.withColumn("cos", cos)
@@ -1457,11 +1389,7 @@ _NPROBES = (1, 2, 4, 8)
       SELECT query_id, qe, label AS probe_label,
              row_number() OVER (
                PARTITION BY query_id
-               ORDER BY list_sum(list_transform(range(1, len(qe) + 1),
-                                 i -> CAST(qe[i] AS DOUBLE) * ce[i]))
-                        / (sqrt(list_sum(list_transform(qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                           * sqrt(list_sum(list_transform(ce, x -> x * x)))) DESC,
-                        label
+               ORDER BY {cosine_duckdb("qe", "ce")} DESC, label
              ) AS rn
       FROM q CROSS JOIN cent
     ),
@@ -1473,10 +1401,7 @@ _NPROBES = (1, 2, 4, 8)
     c AS (SELECT vec_id AS neighbor_id, embedding AS ce2, label FROM embeddings),
     s AS (
       SELECT nprobe, query_id, neighbor_id,
-             list_sum(list_transform(range(1, len(qe) + 1),
-                      i -> CAST(qe[i] AS DOUBLE) * CAST(ce2[i] AS DOUBLE)))
-             / (sqrt(list_sum(list_transform(qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                * sqrt(list_sum(list_transform(ce2, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cos
+             {cosine_duckdb("qe", "ce2")} AS cos
       FROM cand JOIN c ON cand.probe_label = c.label
       WHERE cand.query_id <> c.neighbor_id
     ),
@@ -1503,7 +1428,6 @@ def knn_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     graded against exact brute-force top-5."""
     from pyspark.sql import Window
 
-    from mapreduce_word2vec_spark.functions.vectors import dot_expr, norm_expr
     from mapreduce_word2vec_spark.runtime import tracked_persist
 
     emb = read_testdata(spark, sf_dir, "embeddings")
@@ -1511,12 +1435,12 @@ def knn_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.where(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
-        norm_expr("embedding").alias("qn"),
+        F.expr(norm_sql("embedding")).alias("qn"),
     )
     w_probe = Window.partitionBy("query_id").orderBy(F.desc("cent_cos"), "probe_label")
     ranked = tracked_persist(
         q.crossJoin(F.broadcast(cent))
-        .withColumn("cent_cos", dot_expr("qe", "ce") / (F.col("qn") * norm_expr("ce")))
+        .withColumn("cent_cos", F.expr(cosine_sql("qe", "ce", "qn")))
         .withColumn("rn", F.row_number().over(w_probe))
         .select("query_id", "qe", "qn", "probe_label", "rn")
     )
@@ -1529,7 +1453,7 @@ def knn_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("ce2"),
-        norm_expr("embedding").alias("cn"),
+        F.expr(norm_sql("embedding")).alias("cn"),
         F.col("label").alias("probe_label"),
     )
     scored = (
@@ -1539,7 +1463,7 @@ def knn_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             "nprobe",
             "query_id",
             "neighbor_id",
-            (dot_expr("qe", "ce2") / (F.col("qn") * F.col("cn"))).alias("cos"),
+            F.expr(cosine_sql("qe", "ce2", "qn", "cn")).alias("cos"),
         )
     )
     w = Window.partitionBy("nprobe", "query_id").orderBy(

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mapreduce_word2vec_spark.functions.vectors import norm_duckdb
 from mapreduce_word2vec_spark.plans.catalog import register
 from mapreduce_word2vec_spark.sources.readers import read_testdata
 
@@ -99,10 +100,8 @@ def udf_scalar_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "udf_map_in_arrow",
-    oracle="""
-    SELECT vec_id,
-           round(sqrt(list_sum(list_transform(embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 6) AS l2_norm
+    oracle=f"""
+    SELECT vec_id, round({norm_duckdb("embedding")}, 6) AS l2_norm
     FROM embeddings
     """,
 )

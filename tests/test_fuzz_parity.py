@@ -8,7 +8,8 @@ in single Spark jobs.
 * Fingerprint/string-hash/n-grams: the Spark SQL-text builders vs
   pure-Python folds, and each kernel's DuckDB oracle fragment vs its
   Spark builder.
-* Cosine: Catalyst HOF expression vs numpy.
+* Vector kernels: the cosine builder vs numpy, and each kernel's
+  DuckDB oracle fragment vs its Spark builder.
 """
 
 from __future__ import annotations
@@ -33,7 +34,18 @@ from mapreduce_word2vec_spark.functions.text import (
     string_hash_sql,
     tokens_expr,
 )
-from mapreduce_word2vec_spark.functions.vectors import cosine_expr
+from mapreduce_word2vec_spark.functions.vectors import (
+    cosine_duckdb,
+    cosine_sql,
+    dot_duckdb,
+    dot_sql,
+    norm_duckdb,
+    norm_sql,
+    sq_dist_duckdb,
+    sq_dist_sql,
+    sq_norm_duckdb,
+    sq_norm_sql,
+)
 from tests.conftest import EDGE_TEXTS
 
 _ALPHABET = (
@@ -209,12 +221,86 @@ def test_cosine_fuzz_matches_numpy(spark):
     ]
     df = spark.createDataFrame([Row(i=i, a=a, b=b) for i, (a, b) in enumerate(pairs)])
     got = {
-        r["i"]: r["c"] for r in df.select("i", cosine_expr("a", "b").alias("c")).collect()
+        r["i"]: r["c"]
+        for r in df.select("i", F.expr(cosine_sql("a", "b")).alias("c")).collect()
     }
     for i, (a, b) in enumerate(pairs):
         a, b = np.array(a), np.array(b)
         want = float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
         assert math.isclose(got[i], want, rel_tol=1e-12), (i, got[i], want)
+
+
+def _fuzz_vector_pairs(seed: int) -> list[tuple[list[float], list[float]]]:
+    """Seeded 64-d vector pairs at scales 1e-3, 1 and 1e3, with zero
+    vectors, ``-0.0`` components and identical operands mixed in."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    pairs = []
+    for k in range(300):
+        a = rng.standard_normal(64) * rng.choice([1e-3, 1.0, 1e3])
+        b = rng.standard_normal(64) * rng.choice([1e-3, 1.0, 1e3])
+        if k % 10 == 0:
+            a[rng.integers(0, 64, 8)] = -0.0
+        if k % 25 == 1:
+            b = np.zeros(64)
+        if k % 25 == 2:
+            a = -np.zeros(64)
+        if k % 25 == 3:
+            b = a.copy()
+        pairs.append((a.tolist(), b.tolist()))
+    return pairs
+
+
+@pytest.mark.parametrize("elem", ["float", "double"])
+def test_vector_fragments_match_spark_builders(spark, elem):
+    """Each vector kernel's DuckDB oracle fragment, evaluated in DuckDB,
+    equals its Spark builder exactly (``==``, no tolerance) on seeded
+    float32 and float64 64-d vectors; a zero vector gives a NULL
+    cosine on both sides."""
+    import duckdb
+
+    pairs = _fuzz_vector_pairs(seed=17)
+    kernels = {
+        "dot": (dot_sql("a", "b"), dot_duckdb("a", "b")),
+        "sq_norm": (sq_norm_sql("a"), sq_norm_duckdb("a")),
+        "norm": (norm_sql("b"), norm_duckdb("b")),
+        "cos": (cosine_sql("a", "b"), cosine_duckdb("a", "b")),
+        "sq_dist": (sq_dist_sql("a", "b"), sq_dist_duckdb("a", "b")),
+    }
+    duck_type = {"float": "FLOAT[]", "double": "DOUBLE[]"}[elem]
+    with duckdb.connect() as con:
+        con.execute(f"CREATE TABLE t (i INTEGER, a {duck_type}, b {duck_type})")
+        con.executemany(
+            "INSERT INTO t VALUES (?, ?, ?)",
+            [(i, a, b) for i, (a, b) in enumerate(pairs)],
+        )
+        cols = ", ".join(f"{d} AS {k}" for k, (_, d) in kernels.items())
+        duck = {
+            r[0]: dict(zip(kernels, r[1:]))
+            for r in con.execute(f"SELECT i, {cols} FROM t").fetchall()
+        }
+    sdf = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(pairs)],
+        f"i int, a array<{elem}>, b array<{elem}>",
+    )
+    got = {
+        r["i"]: r.asDict()
+        for r in sdf.select(
+            "i", *[F.expr(s).alias(k) for k, (s, _) in kernels.items()]
+        ).collect()
+    }
+    assert len(duck) == len(got) == len(pairs)
+    n_zero = 0
+    for i, (a, b) in enumerate(pairs):
+        for k in kernels:
+            assert duck[i][k] == got[i][k], (elem, i, k, duck[i][k], got[i][k])
+        if not any(a) or not any(b):
+            n_zero += 1
+            assert got[i]["cos"] is None and duck[i]["cos"] is None, i
+        else:
+            assert got[i]["cos"] is not None, i
+    assert n_zero > 0
 
 
 def test_binary_code_packing_fuzz_boundaries(spark):

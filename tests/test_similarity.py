@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from mapreduce_word2vec_spark.functions.vectors import cosine_expr
+from mapreduce_word2vec_spark.functions.vectors import cosine_sql
 from mapreduce_word2vec_spark.sources.readers import read_testdata
 from tests.conftest import SF_SMOKE
 
@@ -25,7 +25,7 @@ def test_cosine_properties(spark):
         ]
     )
     rows = df.select(
-        cosine_expr("a", "b").alias("ab"), cosine_expr("b", "a").alias("ba")
+        F.expr(cosine_sql("a", "b")).alias("ab"), F.expr(cosine_sql("b", "a")).alias("ba")
     ).collect()
     assert rows[0]["ab"] == pytest.approx(1.0)
     assert rows[1]["ab"] == pytest.approx(0.0)

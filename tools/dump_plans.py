@@ -1,15 +1,19 @@
 #!/usr/bin/env python
 """Dump `explain("formatted")` physical plans of catalog queries.
 
-Markdown of the showcase queries, each with a one-line note on why its
-plan is the intended 100 TB shape (run from the repo root):
+Markdown of the showcase queries on stdout, each with a one-line note
+on why its plan is the intended 100 TB shape (run from the repo root):
 
-    python tools/dump_plans.py > PLANS.md
+    python tools/dump_plans.py [name ...]
 
-One file per query, ``DIR/<name>_<TAG>.txt``, for before/after plan
-comparison of an optimisation (names default to ``bench.HEADLINE``):
+One file per query, ``DIR/<TAG>/<name>.txt``, for before/after plan
+comparison of a change (names default to ``bench.HEADLINE``):
 
     python tools/dump_plans.py --out DIR --tag TAG [name ...]
+
+``--out`` files are normalised (see :func:`normalise`): dump the same
+queries at two commits with the tags ``before`` and ``after``, and
+``diff -r DIR/before DIR/after`` shows only plan changes.
 
 Plans are built at ``$SPARK_GRAFT_SF_DIR`` (default sf0.001).
 """
@@ -18,6 +22,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 from pathlib import Path
 
@@ -85,9 +90,29 @@ SHOWCASE = {
 }
 
 
+def normalise(plan: str) -> str:
+    """Drop the run-dependent names from a formatted plan: lambda
+    variables become ``lv1, lv2, ...``, and expression ids (``#123``),
+    exchange plan ids (``plan_id=45``) and RDD ids (``RDD[67]``) are
+    renumbered in order of first appearance."""
+
+    def renumber(pattern: str, fmt: str, text: str) -> str:
+        seen: dict[str, int] = {}
+        return re.sub(
+            pattern,
+            lambda m: fmt.format(seen.setdefault(m.group(1), len(seen) + 1)),
+            text,
+        )
+
+    plan = renumber(r"\blambda (\w+)#", "lambda lv{}#", plan)
+    plan = renumber(r"#(\d+)", "#{}", plan)
+    plan = renumber(r"plan_id=(\d+)", "plan_id={}", plan)
+    return renumber(r"RDD\[(\d+)\]", "RDD[{}]", plan)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--out", help="write DIR/<name>_<TAG>.txt instead of markdown")
+    ap.add_argument("--out", help="write DIR/<TAG>/<name>.txt instead of markdown")
     ap.add_argument("--tag", default="before")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
@@ -105,12 +130,12 @@ def main() -> None:
     names = args.names or (bench.HEADLINE if args.out else list(SHOWCASE))
 
     if args.out:
-        out_dir = Path(args.out)
+        out_dir = Path(args.out) / args.tag
         out_dir.mkdir(parents=True, exist_ok=True)
     else:
         print("# PLANS — physical plans of representative queries")
         print()
-        print(f"Regenerate with `python tools/dump_plans.py > PLANS.md` ({sf_dir},")
+        print(f"Generated by `python tools/dump_plans.py` ({sf_dir},")
         print(f"{spark.sparkContext.master}, AQE on — AdaptiveSparkPlan nodes show the")
         print("initial plan). Each caption states the property that makes the plan")
         print("survive 100 TB; plan-shape tests in tests/test_plans.py assert these")
@@ -121,8 +146,8 @@ def main() -> None:
             df._jdf.queryExecution(), "formatted"
         ).strip()
         if args.out:
-            path = out_dir / f"{name}_{args.tag}.txt"
-            path.write_text(plan)
+            path = out_dir / f"{name}.txt"
+            path.write_text(normalise(plan))
             print(f"[plan] {name} -> {path} ({len(plan)} chars)", flush=True)
         else:
             why = f"*{SHOWCASE[name]}*\n\n" if name in SHOWCASE else ""
