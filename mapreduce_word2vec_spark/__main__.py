@@ -12,7 +12,10 @@ reads every ``.txt`` under ``input_dir``, runs the full pipeline
 (word count → Word2Vec → token id → vector mean/join), and writes
 ``word,token,count,[v1,...,vN]`` lines (sorted, with ``_SUCCESS``)
 to ``output_dir`` — the reference's exact output contract
-(``README.md:22-23``).
+(``README.md:22-23``). ``--partitions N`` applies in both modes: the
+number of Word2Vec SGD partitions in global mode (default one per
+core) and the number of per-partition models in parity mode (default
+the input's partitioning).
 """
 
 from __future__ import annotations
@@ -42,7 +45,14 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument("--min-count", type=int, default=1)
     parser.add_argument("--seed", type=int, default=42)
     parser.add_argument("--iterations", type=int, default=1)
-    parser.add_argument("--partitions", type=int, default=None)
+    parser.add_argument(
+        "--partitions",
+        type=int,
+        default=None,
+        help="global: Word2Vec SGD partitions, averaged each iteration "
+        "(default one per core); parity: models to train and average "
+        "(default the input's partition count)",
+    )
     args = parser.parse_args(argv)
 
     from mapreduce_word2vec_spark.operators.word2vec import (
@@ -68,7 +78,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.mode == "parity":
         out = parity_pipeline(spark, args.input_dir, config, args.partitions)
     else:
-        out = embedding_pipeline(spark, args.input_dir, config)
+        out = embedding_pipeline(spark, args.input_dir, config, args.partitions)
     write_reference_csv(format_reference_output(out), args.output_dir)
     n = spark.read.text(args.output_dir).count()
     print(

@@ -10,8 +10,10 @@ per-mapper vectors (``:196-229``) and formats
 
 Engine default = ONE global MLlib ``Word2Vec`` model (the reference's
 own stated intent — its per-split models were a MapReduce constraint,
-``MapRedWord2Vec.scala:76-82``). The per-mapper-then-average semantics
-are available as a parity mode (``operators.word2vec_parity``).
+``MapRedWord2Vec.scala:76-82``), fitted with one SGD partition per core
+and averaged after every iteration (``train_word2vec``). The reference's
+train-once-then-average semantics are available as a parity mode
+(``operators.word2vec_parity``).
 
 Tokenization note (SURVEY §2.A "two-tokenizer subtlety"): the
 reference tokenizes the count path with ``\\W+`` but feeds raw lines
@@ -38,15 +40,31 @@ def sentences_df(lines: DataFrame, text_col: str = "value") -> DataFrame:
 
 
 def train_word2vec(
-    sentences: DataFrame, config: EngineConfig = DEFAULT_CONFIG, num_partitions: int = 1
+    sentences: DataFrame,
+    config: EngineConfig = DEFAULT_CONFIG,
+    num_partitions: int | None = None,
 ) -> Word2VecModel:
     """One global distributed skip-gram model (A7, global-default mode).
 
-    ``num_partitions`` trades model quality for parallelism exactly
-    like the reference's mapper count did; default 1 keeps gradient
-    application deterministic-ish and highest-quality. At cluster
-    scale, raise it toward the executor count.
+    ``num_partitions`` is the number of SGD partitions. ``None`` (the
+    default for every caller) means one per core:
+    ``sparkContext.defaultParallelism``. An explicit integer wins.
+    MLlib trains each partition on its share of the sentences and,
+    after every iteration, replaces each word's vector by the
+    unweighted mean over the partitions that touched it. That is the
+    reference's one-model-per-mapper, mean-in-the-reducer semantics
+    (``MapRedWord2Vec.scala:143-154,203-229``), applied per iteration
+    instead of once.
+
+    Quality (4 cores, 1 iteration): on the seeded planted-pair corpus of
+    ``tests/test_word2vec.py`` (50 pairs, dim 32) nearest-neighbour
+    recall@10 for seeds 7/8/9 was 0.88/0.76/0.86 at 1 partition and
+    0.98/1.00/1.00 at 4; with 100 pairs in a 150k-token background at
+    dim 100 (seed 5) it was 0.99 at 1 and 1.00 at 4. That test gates the
+    derived count to within 0.05 of 1 partition.
     """
+    if num_partitions is None:
+        num_partitions = sentences.sparkSession.sparkContext.defaultParallelism
     w2v = Word2Vec(
         vectorSize=config.layer_size,
         windowSize=config.window_size,
@@ -76,9 +94,11 @@ def embedding_pipeline(
     spark: SparkSession,
     input_dir: str,
     config: EngineConfig = DEFAULT_CONFIG,
+    num_partitions: int | None = None,
 ) -> DataFrame:
     """The complete reference pipeline (SURVEY §2.C): text corpus →
-    (word, token, count, vector).
+    (word, token, count, vector). ``num_partitions`` is the Word2Vec
+    SGD partition count (``None``: one per core, see ``train_word2vec``).
 
     Physical shape: one scan feeds both the count aggregation and the
     training input; the (word → vector) join is broadcast (vocab ≪
@@ -92,7 +112,7 @@ def embedding_pipeline(
 
     lines = read_text_corpus(spark, input_dir)
     counts = word_counts(lines)
-    model = train_word2vec(sentences_df(lines), config)
+    model = train_word2vec(sentences_df(lines), config, num_partitions)
     vectors = word_vectors(model)
     return (
         counts.join(F.broadcast(vectors), "word", "inner")  # A9: inner = null-drop

@@ -1,5 +1,5 @@
 """Round-4 operator tests: ZCA whitening contract, boundary-overlap
-dedup brute-force parity, vocabulary-contract sanity."""
+dedup brute-force parity."""
 
 from __future__ import annotations
 
@@ -101,24 +101,6 @@ def test_boundary_overlap_text_stays_in_scan(spark):
     for line in plan.splitlines():
         if "Exchange" in line:
             assert "text" not in line, line
-
-
-def test_w2v_vocabulary_contract(spark):
-    """Vocabulary rows = distinct A2–A4 tokens, dim = configured 32."""
-    from mapreduce_word2vec_spark.functions.text import tokens_expr
-    from mapreduce_word2vec_spark.plans import catalog
-    from mapreduce_word2vec_spark.sources.readers import read_testdata
-
-    rows = catalog.queries()["w2v_vocabulary"](spark, SF_SMOKE).collect()
-    assert rows and all(r["dim"] == 32 for r in rows)
-    vocab = {
-        r["w"]
-        for r in read_testdata(spark, SF_SMOKE, "documents")
-        .select(F.explode(tokens_expr("text")).alias("w"))
-        .distinct()
-        .collect()
-    }
-    assert {r["word"] for r in rows} == vocab
 
 
 def test_label_propagation_preserves_communities(spark):
