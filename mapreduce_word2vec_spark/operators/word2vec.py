@@ -62,6 +62,13 @@ def train_word2vec(
     0.98/1.00/1.00 at 4; with 100 pairs in a 150k-token background at
     dim 100 (seed 5) it was 0.99 at 1 and 1.00 at 4. That test gates the
     derived count to within 0.05 of 1 partition.
+
+    With more than one SGD partition the vectors are not bit-reproducible
+    from run to run: MLlib sums the partition vectors in a shuffle
+    (``reduceByKey``) whose merge order depends on task timing, and float
+    addition is not associative. Two runs on the same corpus write the
+    same words, counts and token ids but different vector bytes, so
+    output comparisons cover the ``word,token,count`` columns only.
     """
     if num_partitions is None:
         num_partitions = sentences.sparkSession.sparkContext.defaultParallelism
@@ -102,8 +109,12 @@ def embedding_pipeline(
 
     Physical shape: one scan feeds both the count aggregation and the
     training input; the (word → vector) join is broadcast (vocab ≪
-    corpus); the token-id pandas UDF runs after the join so it touches
-    one row per distinct word, not per occurrence — the same
+    corpus). The joined rows, one per model word, go through the one
+    range exchange of the job (``ordered_with_token``), which gives the
+    output its global word order. The range sort's sampling job re-reads
+    only the word-count shuffle and the broadcast join. The token-id
+    pandas UDF runs above the exchange, so it touches each distinct word
+    once, not per occurrence and not again for the sampling — the same
     "compute where cheaper" placement the reference argued for
     (``MapRedWord2Vec.scala:124-129``).
     """
@@ -114,9 +125,25 @@ def embedding_pipeline(
     counts = word_counts(lines)
     model = train_word2vec(sentences_df(lines), config, num_partitions)
     vectors = word_vectors(model)
+    joined = counts.join(F.broadcast(vectors), "word", "inner")  # A9: inner = null-drop
+    return ordered_with_token(joined)  # A10
+
+
+def ordered_with_token(df: DataFrame) -> DataFrame:
+    """Vocabulary rows (word, count, vector) → (word, token, count,
+    vector) in ascending word order (A10 + the reference's output order).
+
+    The reference's single reducer writes its output globally sorted by
+    key (``MapRedWord2Vec.scala:245-284``). Words are ``[a-z]+`` and
+    ``","`` sorts below every letter, so ordering by word orders the
+    ``word,token,...`` lines exactly as sorting the lines would. Sorting
+    here, at vocabulary grain and before the token-id pandas UDF, keeps
+    the UDF and every later narrow step (``format_reference_output``,
+    the text write) above the range exchange: they run once per word,
+    and the range sort's sampling job does not run them."""
     return (
-        counts.join(F.broadcast(vectors), "word", "inner")  # A9: inner = null-drop
-        .withColumn("token", first_token_id(F.col("word")))  # A10
+        df.orderBy("word")
+        .withColumn("token", first_token_id(F.col("word")))
         .select("word", "token", "count", "vector")
     )
 

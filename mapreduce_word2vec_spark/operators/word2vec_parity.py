@@ -31,7 +31,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from mapreduce_word2vec_spark.session import DEFAULT_CONFIG, EngineConfig
 
@@ -159,14 +158,14 @@ def parity_pipeline(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Full reference-parity pipeline: per-partition models, token id,
-    sum-counts + unweighted vector mean (A5/A7/A10/A13/A14)."""
-    from mapreduce_word2vec_spark.functions.tokens import first_token_id
-    from mapreduce_word2vec_spark.operators.word2vec import sum_counts_and_mean_vectors
+    sum-counts + unweighted vector mean (A5/A7/A10/A13/A14), in
+    ascending word order like the reference's single reducer."""
+    from mapreduce_word2vec_spark.operators.word2vec import (
+        ordered_with_token,
+        sum_counts_and_mean_vectors,
+    )
     from mapreduce_word2vec_spark.sources.readers import read_text_corpus
 
     lines = read_text_corpus(spark, input_dir)
     per_part = per_partition_embeddings(lines, config, num_partitions)
-    merged = sum_counts_and_mean_vectors(per_part, group_cols=["word"])
-    return merged.withColumn("token", first_token_id(F.col("word"))).select(
-        "word", "token", "count", "vector"
-    )
+    return ordered_with_token(sum_counts_and_mean_vectors(per_part, group_cols=["word"]))

@@ -6,6 +6,9 @@ separator (``MapRedWord2Vec.scala:251,272,276``), producing lines
 Spark's file sinks write the same ``_SUCCESS`` marker; the
 reference-format line is produced by
 :func:`mapreduce_word2vec_spark.operators.word2vec.format_reference_output`.
+The sinks write rows in the order they are given; the reference's
+global key order comes from the pipelines, which sort by word
+(:func:`mapreduce_word2vec_spark.operators.word2vec.ordered_with_token`).
 """
 
 from __future__ import annotations
@@ -32,20 +35,18 @@ def write_csv(df: DataFrame, path: str, mode: str = "overwrite", header: bool = 
     df.write.mode(mode).option("header", header).csv(path)
 
 
-def write_reference_csv(df: DataFrame, path: str, sort: bool = True) -> None:
+def write_reference_csv(df: DataFrame, path: str) -> None:
     """Reference output parity (A17+A18).
 
     Expects the single-column frame from ``format_reference_output``
     (one ``word,token,count,[...]`` line per row) and writes raw text —
     NOT the csv writer, which would quote lines containing the
-    separator. The reference's single default reducer makes its output
-    globally sorted lexicographically by key (MR sort-based shuffle;
-    no custom comparator in ``MapRedWord2Vec.scala:245-284``);
-    ``sort=True`` reproduces that with a range-partitioned sort, so
-    concatenating part files in filename order yields the reference's
-    global order. Opt-in parity feature — a global sort at 100 TB is
-    one extra exchange.
+    separator. Rows are written in the order they are given, one part
+    file per partition. The reference's global key order (one default
+    reducer, ``MapRedWord2Vec.scala:245-284``) comes from the
+    pipelines: ``embedding_pipeline`` and ``parity_pipeline`` range-sort
+    their vocabulary rows by word (``operators.word2vec.ordered_with_token``),
+    so concatenating the part files in filename order yields the
+    reference's order.
     """
-    if sort:
-        df = df.orderBy(df.columns[0])
     df.write.mode("overwrite").text(path)

@@ -10,6 +10,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pytest
 from pyspark.sql import Row, Window
 from pyspark.sql import functions as F
 
@@ -23,6 +24,7 @@ from mapreduce_word2vec_spark.operators.word2vec import (
     train_word2vec,
     word_vectors,
 )
+from mapreduce_word2vec_spark.operators.word2vec_parity import parity_pipeline
 from mapreduce_word2vec_spark.session import EngineConfig
 from tests.conftest import REFERENCE_INPUT, SF_SMOKE
 
@@ -151,6 +153,52 @@ def test_cli_partitions_reach_global_fit(spark, monkeypatch, tmp_path):
     assert cli.main(args) == 0
     assert seen == [2]
     assert spark.read.text(str(out)).count() > 100
+
+
+@pytest.mark.parametrize("mode", ["global", "parity"])
+def test_cli_writes_one_line_per_word_in_word_order(spark, monkeypatch, tmp_path, mode):
+    """Like the reference's single reducer, the part files read in
+    filename order hold one line per counted word, words strictly
+    ascending. AQE partition coalescing is off here, so the range
+    exchange writes several part files."""
+    from mapreduce_word2vec_spark import __main__ as cli
+    from mapreduce_word2vec_spark import session
+    from mapreduce_word2vec_spark.operators.wordcount import corpus_word_counts
+
+    monkeypatch.setattr(session, "get_spark", lambda **_: spark)
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    out = tmp_path / "out"
+    try:
+        assert cli.main([REFERENCE_INPUT, str(out), "--dim", "8", "--mode", mode]) == 0
+    finally:
+        spark.conf.set(key, before)
+    parts = sorted(out.glob("part-*"))
+    assert len(parts) > 1
+    words = [line.split(",", 1)[0] for p in parts for line in p.read_text().splitlines()]
+    counted = {r["word"] for r in corpus_word_counts(spark, REFERENCE_INPUT).collect()}
+    assert words == sorted(counted)
+
+
+@pytest.mark.parametrize(
+    "pipeline", [embedding_pipeline, parity_pipeline], ids=["global", "parity"]
+)
+def test_token_udf_and_formatting_run_above_the_range_exchange(spark, pipeline):
+    """One Python crossing per word: the token-id pandas UDF and the line
+    formatting sit above the job's one range exchange, so the range
+    sort's sampling job does not run them."""
+    out = format_reference_output(pipeline(spark, REFERENCE_INPUT, EngineConfig(layer_size=8)))
+    plan = out._jdf.queryExecution().executedPlan().toString().splitlines()
+
+    def line_of(marker: str) -> int:
+        hits = [i for i, line in enumerate(plan) if marker in line]
+        assert len(hits) == 1, (marker, plan)
+        return hits[0]
+
+    exchange = line_of("Exchange rangepartitioning")
+    assert line_of("ArrowEvalPython") < exchange
+    assert line_of("concat_ws(") < exchange
 
 
 def _planted_pair_corpus(seed: int) -> tuple[list[str], list[tuple[str, str]]]:
