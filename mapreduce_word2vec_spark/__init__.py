@@ -7,9 +7,10 @@ embeddings — see ``SURVEY.md``), rebuilt Spark-first:
 
 * DataFrame / Spark SQL for every relational operator (Catalyst owns
   pushdown, pruning, join strategy, partial aggregation).
-* MLlib ``Word2Vec`` for embedding training (one global distributed
-  model by default; a per-partition parity mode reproduces the
-  reference's average-of-split-models semantics).
+* MLlib ``Word2Vec`` for embedding training, the one Word2Vec path:
+  one SGD partition per core (the CLI's ``--partitions`` sets the
+  reference's mapper count), with the partition models averaged
+  unweighted after every iteration, the reference's reducer rule.
 * Structured Streaming for windows / watermarks over event streams.
 * LLM-data-pipeline operators (dedup, similarity search, text
   analysis, multimodal columns) designed for 100 TB scale.

@@ -5,17 +5,17 @@ The reference runs as ``sbt "run <input_dir> <output_dir>"``
 equivalent here::
 
     python -m mapreduce_word2vec_spark <input_dir> <output_dir> \
-        [--mode global|parity] [--dim 100] [--window 5] [--min-count 1] \
-        [--seed 42] [--iterations 1] [--partitions N]
+        [--dim 100] [--window 5] [--min-count 1] [--seed 42] \
+        [--iterations 1] [--partitions N]
 
 reads every ``.txt`` under ``input_dir``, runs the full pipeline
-(word count → Word2Vec → token id → vector mean/join), and writes
+(word count → Word2Vec → vector join → token id), and writes
 ``word,token,count,[v1,...,vN]`` lines (sorted, with ``_SUCCESS``)
 to ``output_dir`` — the reference's exact output contract
-(``README.md:22-23``). ``--partitions N`` applies in both modes: the
-number of Word2Vec SGD partitions in global mode (default one per
-core) and the number of per-partition models in parity mode (default
-the input's partitioning).
+(``README.md:22-23``). ``--partitions N`` is the number of Word2Vec
+SGD partitions, the reference's mapper count (e.g. one per input file);
+the default is one per core. MLlib averages the partition models after
+every iteration, as the reference's reducer does once.
 """
 
 from __future__ import annotations
@@ -32,14 +32,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     parser.add_argument("input_dir")
     parser.add_argument("output_dir")
-    parser.add_argument(
-        "--mode",
-        choices=["global", "parity"],
-        default="global",
-        help="global: one distributed Word2Vec model (default); "
-        "parity: reference semantics — one model per partition, "
-        "unweighted vector averaging",
-    )
     parser.add_argument("--dim", type=int, default=100)
     parser.add_argument("--window", type=int, default=5)
     parser.add_argument("--min-count", type=int, default=1)
@@ -49,9 +41,8 @@ def main(argv: list[str] | None = None) -> int:
         "--partitions",
         type=int,
         default=None,
-        help="global: Word2Vec SGD partitions, averaged each iteration "
-        "(default one per core); parity: models to train and average "
-        "(default the input's partition count)",
+        help="Word2Vec SGD partitions, the reference's mapper count; their "
+        "models are averaged each iteration (default one per core)",
     )
     args = parser.parse_args(argv)
 
@@ -59,7 +50,6 @@ def main(argv: list[str] | None = None) -> int:
         embedding_pipeline,
         format_reference_output,
     )
-    from mapreduce_word2vec_spark.operators.word2vec_parity import parity_pipeline
     from mapreduce_word2vec_spark.runtime import ensure_workers_can_import
     from mapreduce_word2vec_spark.session import EngineConfig, get_spark
     from mapreduce_word2vec_spark.sources.writers import write_reference_csv
@@ -75,15 +65,12 @@ def main(argv: list[str] | None = None) -> int:
     ensure_workers_can_import(spark)
 
     t0 = time.perf_counter()
-    if args.mode == "parity":
-        out = parity_pipeline(spark, args.input_dir, config, args.partitions)
-    else:
-        out = embedding_pipeline(spark, args.input_dir, config, args.partitions)
+    out = embedding_pipeline(spark, args.input_dir, config, args.partitions)
     write_reference_csv(format_reference_output(out), args.output_dir)
     n = spark.read.text(args.output_dir).count()
     print(
         f"wrote {n} words to {args.output_dir} "
-        f"({args.mode} mode, dim={args.dim}) in {time.perf_counter() - t0:.1f}s",
+        f"(dim={args.dim}) in {time.perf_counter() - t0:.1f}s",
         file=sys.stderr,
     )
     return 0

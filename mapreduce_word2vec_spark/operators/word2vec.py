@@ -8,12 +8,16 @@ the reducer sums counts and element-wise **unweighted**-averages the
 per-mapper vectors (``:196-229``) and formats
 ``word,token,count,[v1,...,v100]`` (``:232-235,251``).
 
-Engine default = ONE global MLlib ``Word2Vec`` model (the reference's
-own stated intent — its per-split models were a MapReduce constraint,
-``MapRedWord2Vec.scala:76-82``), fitted with one SGD partition per core
-and averaged after every iteration (``train_word2vec``). The reference's
-train-once-then-average semantics are available as a parity mode
-(``operators.word2vec_parity``).
+The engine has one trainer: MLlib ``Word2Vec`` (``train_word2vec``). It
+trains one SGD partition per core by default, and after every iteration
+replaces each word's vector by the unweighted mean over the partitions
+that touched it. That is the reference's per-mapper models and
+unweighted mean in the reducer, applied after every iteration instead
+of once (iterative parameter mixing; the reference's one-shot mixing is
+the weaker variant). ``num_partitions`` (the CLI's ``--partitions``)
+plays the reference's mapper count, e.g. one per input file. One model
+is the reference's own stated intent; its per-split models were a
+MapReduce constraint (``MapRedWord2Vec.scala:76-82``).
 
 Tokenization note (SURVEY §2.A "two-tokenizer subtlety"): the
 reference tokenizes the count path with ``\\W+`` but feeds raw lines
@@ -44,7 +48,7 @@ def train_word2vec(
     config: EngineConfig = DEFAULT_CONFIG,
     num_partitions: int | None = None,
 ) -> Word2VecModel:
-    """One global distributed skip-gram model (A7, global-default mode).
+    """One global distributed skip-gram model (A7).
 
     ``num_partitions`` is the number of SGD partitions. ``None`` (the
     default for every caller) means one per core:
@@ -118,15 +122,29 @@ def embedding_pipeline(
     "compute where cheaper" placement the reference argued for
     (``MapRedWord2Vec.scala:124-129``).
     """
-    from mapreduce_word2vec_spark.operators.wordcount import word_counts
     from mapreduce_word2vec_spark.sources.readers import read_text_corpus
 
     lines = read_text_corpus(spark, input_dir)
+    return ordered_with_token(vocabulary_rows(lines, config, num_partitions))  # A10
+
+
+def vocabulary_rows(
+    lines: DataFrame,
+    config: EngineConfig = DEFAULT_CONFIG,
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """Text lines → (word, count, vector), one row per model word (A5-A9).
+
+    Word counts joined to the fitted model's vectors. The join is inner,
+    so words the model dropped (``minCount``) drop out, like the
+    reference's null check (``MapRedWord2Vec.scala:162-164``); the vectors
+    side is broadcast (vocab ≪ corpus). ``num_partitions`` goes to
+    ``train_word2vec``."""
+    from mapreduce_word2vec_spark.operators.wordcount import word_counts
+
     counts = word_counts(lines)
-    model = train_word2vec(sentences_df(lines), config, num_partitions)
-    vectors = word_vectors(model)
-    joined = counts.join(F.broadcast(vectors), "word", "inner")  # A9: inner = null-drop
-    return ordered_with_token(joined)  # A10
+    vectors = word_vectors(train_word2vec(sentences_df(lines), config, num_partitions))
+    return counts.join(F.broadcast(vectors), "word", "inner")
 
 
 def ordered_with_token(df: DataFrame) -> DataFrame:

@@ -127,20 +127,12 @@ def ref_pipeline_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim). Vector values are model-dependent → returns the shape-stable
     projection; full-value checks live in the E2E tests."""
     from mapreduce_word2vec_spark.functions.tokens import first_token_id
-    from mapreduce_word2vec_spark.operators.word2vec import (
-        sentences_df,
-        train_word2vec,
-        word_vectors,
-    )
-    from mapreduce_word2vec_spark.operators.wordcount import word_counts
+    from mapreduce_word2vec_spark.operators.word2vec import vocabulary_rows
     from mapreduce_word2vec_spark.session import EngineConfig
 
     docs = read_testdata(spark, sf_dir, "documents").select(F.col("text").alias("value"))
-    counts = word_counts(docs)
-    model = train_word2vec(sentences_df(docs), EngineConfig(layer_size=32))
-    vectors = word_vectors(model)
     return (
-        counts.join(F.broadcast(vectors), "word", "inner")
+        vocabulary_rows(docs, EngineConfig(layer_size=32))
         .withColumn("token", first_token_id(F.col("word")))
         .select("word", "token", "count", F.size("vector").cast("int").alias("dim"))
     )
@@ -1224,20 +1216,12 @@ def ref_pipeline_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicated nothing, leaving only the vector VALUES model-dependent
     (rows-only twin + E2E tests cover those)."""
     from mapreduce_word2vec_spark.functions.tokens import fallback_token_id_expr
-    from mapreduce_word2vec_spark.operators.word2vec import (
-        sentences_df,
-        train_word2vec,
-        word_vectors,
-    )
-    from mapreduce_word2vec_spark.operators.wordcount import word_counts
+    from mapreduce_word2vec_spark.operators.word2vec import vocabulary_rows
     from mapreduce_word2vec_spark.session import EngineConfig
 
     docs = read_testdata(spark, sf_dir, "documents").select(F.col("text").alias("value"))
-    counts = word_counts(docs)
-    model = train_word2vec(sentences_df(docs), EngineConfig(layer_size=32))
-    vectors = word_vectors(model)
     return (
-        counts.join(F.broadcast(vectors), "word", "inner")
+        vocabulary_rows(docs, EngineConfig(layer_size=32))
         .select(
             "word",
             fallback_token_id_expr("word").cast("bigint").alias("token"),

@@ -75,10 +75,11 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     if key in _ADDED:
         return
     pkg_dir = Path(__file__).resolve().parent
+    # Always rewritten: a zip left at this path by an earlier process with
+    # the same pid holds that process's code, and the workers would run it.
     zpath = Path(tempfile.gettempdir()) / f"mapreduce_word2vec_spark_{os.getpid()}.zip"
-    if not zpath.exists():
-        with zipfile.ZipFile(zpath, "w") as z:
-            for p in sorted(pkg_dir.rglob("*.py")):
-                z.write(p, arcname=str(Path(pkg_dir.name) / p.relative_to(pkg_dir)))
+    with zipfile.ZipFile(zpath, "w") as z:
+        for p in sorted(pkg_dir.rglob("*.py")):
+            z.write(p, arcname=str(Path(pkg_dir.name) / p.relative_to(pkg_dir)))
     sc.addPyFile(str(zpath))
     _ADDED.add(key)

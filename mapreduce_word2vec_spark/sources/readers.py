@@ -5,8 +5,7 @@ The reference's only source is a text-file scan
 directory of ``.txt`` files, one record per line). Spark-first
 equivalent: ``spark.read.text``; the byte-offset key is never used by
 the reference logic (``MapRedWord2Vec.scala:99-118``) so it has no
-column here. ``input_file_name()`` recovers per-file lineage, which is
-what the reference's "one model per split" parity mode partitions by.
+column here.
 
 Parquet / CSV / JSON scans are the engine's native columnar sources;
 Catalyst pushes filters and prunes columns into them (verify with
@@ -33,16 +32,9 @@ TESTDATA_TABLES = (
 )
 
 
-def read_text_corpus(spark: SparkSession, path: str, with_file: bool = False) -> DataFrame:
-    """Text scan: one row per line (reference A1).
-
-    ``with_file=True`` adds the source file path — the reference's unit
-    of parallelism (one mapper per split ≈ per file) for parity mode.
-    """
-    df = spark.read.text(path)
-    if with_file:
-        df = df.withColumn("file", F.input_file_name())
-    return df
+def read_text_corpus(spark: SparkSession, path: str) -> DataFrame:
+    """Text scan: one row per line (reference A1)."""
+    return spark.read.text(path)
 
 
 def read_parquet(spark: SparkSession, path: str, columns: list[str] | None = None) -> DataFrame:

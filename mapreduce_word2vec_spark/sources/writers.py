@@ -44,9 +44,10 @@ def write_reference_csv(df: DataFrame, path: str) -> None:
     separator. Rows are written in the order they are given, one part
     file per partition. The reference's global key order (one default
     reducer, ``MapRedWord2Vec.scala:245-284``) comes from the
-    pipelines: ``embedding_pipeline`` and ``parity_pipeline`` range-sort
-    their vocabulary rows by word (``operators.word2vec.ordered_with_token``),
-    so concatenating the part files in filename order yields the
-    reference's order.
+    pipeline: ``embedding_pipeline``, the one Word2Vec path (its
+    ``num_partitions``, the CLI's ``--partitions``, is the mapper
+    count), range-sorts its vocabulary rows by word
+    (``operators.word2vec.ordered_with_token``), so concatenating the
+    part files in filename order yields the reference's order.
     """
     df.write.mode("overwrite").text(path)

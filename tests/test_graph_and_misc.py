@@ -65,6 +65,32 @@ def test_connected_components_long_path_plan_stays_flat(spark):
     assert time.monotonic() - start < 120
 
 
+def test_workers_get_the_current_package_zip(monkeypatch, tmp_path):
+    """A zip left at the pid path by an earlier process is rewritten,
+    not shipped: the shipped zip holds this checkout's ``runtime.py``."""
+    import os
+    import tempfile
+    import zipfile
+    from pathlib import Path
+    from types import SimpleNamespace
+
+    from mapreduce_word2vec_spark import runtime
+
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    stale = tmp_path / f"mapreduce_word2vec_spark_{os.getpid()}.zip"
+    stale.write_bytes(b"junk from an earlier process")
+    monkeypatch.setattr(runtime, "_ADDED", set())
+    shipped: list[str] = []
+    fake = SimpleNamespace(sparkContext=SimpleNamespace(addPyFile=shipped.append))
+
+    runtime.ensure_workers_can_import(fake)
+
+    assert shipped == [str(stale)]
+    with zipfile.ZipFile(shipped[0]) as z:
+        got = z.read("mapreduce_word2vec_spark/runtime.py")
+    assert got == Path(runtime.__file__).read_bytes()
+
+
 def test_approx_count_distinct_error_bound(spark):
     """HLL++ at rsd=0.02 stays within 5% of the exact distinct count
     (the property check backing the rows-only agg_approx_distinct)."""

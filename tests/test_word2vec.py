@@ -24,7 +24,6 @@ from mapreduce_word2vec_spark.operators.word2vec import (
     train_word2vec,
     word_vectors,
 )
-from mapreduce_word2vec_spark.operators.word2vec_parity import parity_pipeline
 from mapreduce_word2vec_spark.session import EngineConfig
 from tests.conftest import REFERENCE_INPUT, SF_SMOKE
 
@@ -133,8 +132,8 @@ def test_default_partitions_follow_parallelism(spark):
 
 
 def test_cli_partitions_reach_global_fit(spark, monkeypatch, tmp_path):
-    """``--partitions`` reaches the Word2Vec fit in the default global
-    mode, not only in parity mode."""
+    """``--partitions``, the reference's mapper count, reaches the
+    Word2Vec fit as its number of SGD partitions."""
     from mapreduce_word2vec_spark import __main__ as cli
     from mapreduce_word2vec_spark import session
     from mapreduce_word2vec_spark.operators import word2vec
@@ -155,8 +154,10 @@ def test_cli_partitions_reach_global_fit(spark, monkeypatch, tmp_path):
     assert spark.read.text(str(out)).count() > 100
 
 
-@pytest.mark.parametrize("mode", ["global", "parity"])
-def test_cli_writes_one_line_per_word_in_word_order(spark, monkeypatch, tmp_path, mode):
+# "global": one SGD partition per core (the default); "parity": one per
+# fixture file (3), the reference's one mapper per input file.
+@pytest.mark.parametrize("partitions", [[], ["--partitions", "3"]], ids=["global", "parity"])
+def test_cli_writes_one_line_per_word_in_word_order(spark, monkeypatch, tmp_path, partitions):
     """Like the reference's single reducer, the part files read in
     filename order hold one line per counted word, words strictly
     ascending. AQE partition coalescing is off here, so the range
@@ -171,7 +172,7 @@ def test_cli_writes_one_line_per_word_in_word_order(spark, monkeypatch, tmp_path
     spark.conf.set(key, "false")
     out = tmp_path / "out"
     try:
-        assert cli.main([REFERENCE_INPUT, str(out), "--dim", "8", "--mode", mode]) == 0
+        assert cli.main([REFERENCE_INPUT, str(out), "--dim", "8", *partitions]) == 0
     finally:
         spark.conf.set(key, before)
     parts = sorted(out.glob("part-*"))
@@ -181,14 +182,16 @@ def test_cli_writes_one_line_per_word_in_word_order(spark, monkeypatch, tmp_path
     assert words == sorted(counted)
 
 
-@pytest.mark.parametrize(
-    "pipeline", [embedding_pipeline, parity_pipeline], ids=["global", "parity"]
-)
-def test_token_udf_and_formatting_run_above_the_range_exchange(spark, pipeline):
+# "global": one SGD partition per core (the default); "parity": one per
+# fixture file (3), the reference's one mapper per input file.
+@pytest.mark.parametrize("num_partitions", [None, 3], ids=["global", "parity"])
+def test_token_udf_and_formatting_run_above_the_range_exchange(spark, num_partitions):
     """One Python crossing per word: the token-id pandas UDF and the line
     formatting sit above the job's one range exchange, so the range
     sort's sampling job does not run them."""
-    out = format_reference_output(pipeline(spark, REFERENCE_INPUT, EngineConfig(layer_size=8)))
+    out = format_reference_output(
+        embedding_pipeline(spark, REFERENCE_INPUT, EngineConfig(layer_size=8), num_partitions)
+    )
     plan = out._jdf.queryExecution().executedPlan().toString().splitlines()
 
     def line_of(marker: str) -> int:
