@@ -84,7 +84,7 @@ def main() -> None:
     sf = float(m.group(1)) if m else -1.0
 
     from mapreduce_word2vec_spark.plans import catalog
-    from mapreduce_word2vec_spark.session import get_spark
+    from mapreduce_word2vec_spark.session import codegen_compiles, get_spark
 
     spark = get_spark(
         app_name="mapreduce-word2vec-spark-bench",
@@ -104,8 +104,12 @@ def main() -> None:
     # and Python-worker spin-up for the pandas-UDF queries landing on
     # the first TIMED round, which is visibly the slow one in every
     # committed samples row and what kept run_spread_ratio > 1.3).
+    # Generated classes compiled per pass are recorded: a steady round
+    # that compiles many has outgrown Spark's codegen class cache.
+    compiled = codegen_compiles(spark)
     for name in HEADLINE:
         qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    warmup_compiles = codegen_compiles(spark) - compiled
 
     # Host-speed calibration (round-8 adjudication lesson): the r7/r8
     # text/dedup cluster "regression" was the HOST running ~1.2x slower
@@ -136,14 +140,17 @@ def main() -> None:
     # rounds decorrelates a load spike from any one query's samples.
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
 
-    def sample_rounds() -> dict[str, list[float]]:
+    def sample_rounds() -> tuple[dict[str, list[float]], list[int]]:
         out: dict[str, list[float]] = {name: [] for name in HEADLINE}
+        compiles: list[int] = []
         for _ in range(n_runs):
+            compiled = codegen_compiles(spark)
             for name in HEADLINE:
                 t0 = time.perf_counter()
                 qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
                 out[name].append(time.perf_counter() - t0)
-        return out
+            compiles.append(codegen_compiles(spark) - compiled)
+        return out, compiles
 
     def totals_of(s: dict[str, list[float]]) -> list[float]:
         return [
@@ -160,13 +167,13 @@ def main() -> None:
     # spread ratio and the retry count, so a record from a machine that
     # never went quiet is explicitly annotated rather than silently
     # trusted.
-    samples = sample_rounds()
+    samples, round_compiles = sample_rounds()
     run_totals = totals_of(samples)
     spread_ratio = round(max(run_totals) / min(run_totals), 3)
     noise_retries = 0
     while spread_ratio > 1.3 and n_runs > 1 and noise_retries < 2:
         noise_retries += 1
-        retry = sample_rounds()
+        retry, retry_compiles = sample_rounds()
         retry_totals = totals_of(retry)
         retry_spread = round(max(retry_totals) / min(retry_totals), 3)
         if retry_spread < spread_ratio or (
@@ -174,6 +181,7 @@ def main() -> None:
             and statistics.median(retry_totals) < statistics.median(run_totals)
         ):
             samples, run_totals, spread_ratio = retry, retry_totals, retry_spread
+            round_compiles = retry_compiles
     noise_retried = noise_retries > 0
 
     times = {
@@ -210,6 +218,7 @@ def main() -> None:
                 "noise_retried": noise_retried,
                 "noise_retries": noise_retries,
                 "host_calibration_sec": calibration_sec,
+                "codegen_compiles": {"warmup": warmup_compiles, "rounds": round_compiles},
                 "samples": {n: [round(t, 3) for t in ts] for n, ts in samples.items()},
             },
             indent=1,

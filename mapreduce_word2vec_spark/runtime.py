@@ -7,10 +7,12 @@ cluster only if the package is shipped. :func:`ensure_workers_can_import`
 zips the package once and registers it with ``SparkContext.addPyFile``
 (the same mechanism ``spark-submit --py-files`` uses), making every
 catalog query self-contained no matter where the driver process runs.
+The zip is deleted when the process exits.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
 import tempfile
 import zipfile
@@ -82,4 +84,7 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
         for p in sorted(pkg_dir.rglob("*.py")):
             z.write(p, arcname=str(Path(pkg_dir.name) / p.relative_to(pkg_dir)))
     sc.addPyFile(str(zpath))
+    # Removed at exit, not now: on a cluster the driver's file server
+    # serves this path to executors for the whole session.
+    atexit.register(zpath.unlink, missing_ok=True)
     _ADDED.add(key)

@@ -48,6 +48,10 @@ def get_spark(
     Designed so the same code path works on ``local[N]`` and on a
     1000-executor cluster: everything scale-sensitive (shuffle
     partition count, AQE, broadcast threshold) is config, not code.
+
+    ``spark.sql.codegen.cache.maxEntries`` is a static setting: like
+    the driver memory, it takes effect only when this call creates the
+    session, not when ``getOrCreate`` returns one that already exists.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -89,6 +93,17 @@ def get_spark(
         # be composed without per-expression try_* wrapping; oracle
         # queries are written to avoid semantics that differ.
         .config("spark.sql.ansi.enabled", "false")
+        # Generated-code class cache. Spark compiles Java source for
+        # every codegen stage and keeps the compiled classes in a cache
+        # of 100 entries by default. The 13 perfbench catalog queries
+        # generate 299 distinct classes and the 36 bench.py headline
+        # queries 642, so at 100 every query had lost its classes by
+        # the time it ran again, and each catalog pass recompiled
+        # 262-280 of them (about 7-10 ms each) on the driver. 1000
+        # holds the headline set with about 1.5x headroom; a pass then
+        # compiles 0-14 classes. The reference job's 25 classes fit
+        # either way.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     # Caller overrides last so they win over the defaults above.
     for k, v in (extra_conf or {}).items():
@@ -96,3 +111,11 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes compiled so far in this JVM: the count of
+    Spark's ``CodegenMetrics`` compilation-time histogram. A cache hit
+    does not count, so the difference over a run is its misses."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

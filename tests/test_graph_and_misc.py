@@ -91,6 +91,54 @@ def test_workers_get_the_current_package_zip(monkeypatch, tmp_path):
     assert got == Path(runtime.__file__).read_bytes()
 
 
+def test_package_zip_removed_at_exit(monkeypatch, tmp_path):
+    """The shipped zip stays for the session (a cluster's executors
+    fetch it from the driver) and is deleted when the process exits."""
+    import atexit
+    import tempfile
+    from pathlib import Path
+    from types import SimpleNamespace
+
+    from mapreduce_word2vec_spark import runtime
+
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    monkeypatch.setattr(runtime, "_ADDED", set())
+    at_exit = []
+    monkeypatch.setattr(atexit, "register", lambda fn, *a, **kw: at_exit.append((fn, a, kw)))
+    shipped: list[str] = []
+    fake = SimpleNamespace(sparkContext=SimpleNamespace(addPyFile=shipped.append))
+
+    runtime.ensure_workers_can_import(fake)
+
+    zpath = Path(shipped[0])
+    assert zpath.exists() and len(at_exit) == 1
+    fn, args, kwargs = at_exit[0]
+    fn(*args, **kwargs)
+    assert not zpath.exists()
+
+
+def test_codegen_classes_survive_other_queries(spark):
+    """A query run again after other queries reuses its compiled
+    classes: knn_ivf_pq and hybrid_search_rrf generate more than 100
+    classes between q3_shipping_priority's two runs, which with Spark's
+    default 100-entry codegen cache evicted nearly all of q3's."""
+    from mapreduce_word2vec_spark.plans import catalog
+    from mapreduce_word2vec_spark.session import codegen_compiles
+
+    qs = catalog.all_queries()
+
+    def compiles(name):
+        before = codegen_compiles(spark)
+        qs[name].fn(spark, SF_SMOKE).collect()
+        return codegen_compiles(spark) - before
+
+    first = compiles("q3_shipping_priority")
+    compiles("knn_ivf_pq")
+    compiles("hybrid_search_rrf")
+    again = compiles("q3_shipping_priority")
+    assert again <= 0.1 * first, (first, again)
+
+
 def test_approx_count_distinct_error_bound(spark):
     """HLL++ at rsd=0.02 stays within 5% of the exact distinct count
     (the property check backing the rows-only agg_approx_distinct)."""

@@ -154,6 +154,29 @@ def test_cli_partitions_reach_global_fit(spark, monkeypatch, tmp_path):
     assert spark.read.text(str(out)).count() > 100
 
 
+def test_cli_never_reads_its_output(spark, monkeypatch, tmp_path):
+    """The CLI reads its input and writes its output, and runs no job
+    that reads the output back."""
+    from pyspark.sql import DataFrameReader
+
+    from mapreduce_word2vec_spark import __main__ as cli
+    from mapreduce_word2vec_spark import session
+
+    read: list[str] = []
+    real_text = DataFrameReader.text
+
+    def recording_text(self, paths, *args, **kwargs):
+        read.extend([paths] if isinstance(paths, str) else paths)
+        return real_text(self, paths, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "text", recording_text)
+    monkeypatch.setattr(session, "get_spark", lambda **_: spark)
+    out = tmp_path / "out"
+    assert cli.main([REFERENCE_INPUT, str(out), "--dim", "8"]) == 0
+    assert (out / "_SUCCESS").exists()
+    assert read == [REFERENCE_INPUT]
+
+
 # "global": one SGD partition per core (the default); "parity": one per
 # fixture file (3), the reference's one mapper per input file.
 @pytest.mark.parametrize("partitions", [[], ["--partitions", "3"]], ids=["global", "parity"])
