@@ -157,6 +157,27 @@ def doc_shingles_sized(
     )
 
 
+def _shared_shingle_counts(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(id_a < id_b, shared, n_a, n_b): shingles each pair of documents
+    shares and both set sizes, by one self-join of the sized shingle
+    table. Pairs without a shared shingle never appear."""
+    # Persisted for the same reason as minhash_signatures: the sized
+    # shingle table feeds both sides of the self-join.
+    sh = tracked_persist(doc_shingles_sized(df, id_col, text_col, n))
+    a = sh.select(F.col(id_col).alias("id_a"), "shingle", F.col("n_sh").alias("n_a"))
+    b = sh.select(F.col(id_col).alias("id_b"), "shingle", F.col("n_sh").alias("n_b"))
+    return (
+        a.join(b, "shingle")
+        .where(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(
+            F.count("*").alias("shared"),
+            F.first("n_a").alias("n_a"),
+            F.first("n_b").alias("n_b"),
+        )
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     threshold: float,
@@ -173,21 +194,7 @@ def ngram_jaccard_pairs(
     evaluates the (expensive) shingle subtree three times; this one
     evaluates it once with zero extra exchanges, and the self-join's
     two sides are identical so AQE reuses the shingle exchange."""
-    # Persisted for the same reason as minhash_signatures: the sized
-    # shingle table feeds both sides of the self-join.
-    sh = tracked_persist(doc_shingles_sized(df, id_col, text_col, n))
-    a = sh.select(F.col(id_col).alias("id_a"), "shingle", F.col("n_sh").alias("n_a"))
-    b = sh.select(F.col(id_col).alias("id_b"), "shingle", F.col("n_sh").alias("n_b"))
-    shared = (
-        a.join(b, "shingle")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.count("*").alias("shared"),
-            F.first("n_a").alias("n_a"),
-            F.first("n_b").alias("n_b"),
-        )
-    )
+    shared = _shared_shingle_counts(df, id_col, text_col, n)
     return (
         shared.select(
             "id_a",
@@ -512,19 +519,7 @@ def ngram_containment_pairs(
     self-join sides, candidate pairs are bounded by shared shingles
     (never all-pairs).
     """
-    sh = tracked_persist(doc_shingles_sized(df, id_col, text_col, n))
-    a = sh.select(F.col(id_col).alias("id_a"), "shingle", F.col("n_sh").alias("n_a"))
-    b = sh.select(F.col(id_col).alias("id_b"), "shingle", F.col("n_sh").alias("n_b"))
-    shared = (
-        a.join(b, "shingle")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.count("*").alias("shared"),
-            F.first("n_a").alias("n_a"),
-            F.first("n_b").alias("n_b"),
-        )
-    )
+    shared = _shared_shingle_counts(df, id_col, text_col, n)
     containment = F.col("shared") / F.least(F.col("n_a"), F.col("n_b"))
     return shared.select(
         "id_a", "id_b",

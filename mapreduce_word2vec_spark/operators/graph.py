@@ -105,7 +105,7 @@ def connected_components(
         updated = tracked_persist(rerooted(step))
         n_changed = updated.where(F.col("_changed")).count()
         if prev is not None:
-            prev.unpersist(blocking=False)  # tracked sweep tolerates this
+            prev.unpersist(blocking=False)
         prev = updated
         labels = updated.drop("_changed")
         if n_changed == 0:
@@ -183,7 +183,7 @@ def kcore(
             )
         )
         nxt.count()  # materialize before releasing the parent
-        cur.unpersist(blocking=False)  # tracked sweep tolerates this
+        cur.unpersist(blocking=False)
         cur = nxt
     out = cur.groupBy(F.col("s").alias("node")).agg(
         F.count("*").alias("degree")

@@ -180,37 +180,3 @@ def format_reference_output(df: DataFrame) -> DataFrame:
             F.concat(F.lit("["), F.array_join("vector", ","), F.lit("]")),
         ).alias("value")
     )
-
-
-def sum_counts_and_mean_vectors(df: DataFrame, group_cols: list[str] | None = None) -> DataFrame:
-    """The reference's reducer aggregation (A13+A14+A15): per key,
-    total count and element-wise UNWEIGHTED mean of vectors.
-
-    Expressed as posexplode → per-position avg → re-assemble ordered
-    by position: three narrow shuffles on (key, pos) / key, all
-    Catalyst-planned with partial aggregation; no UDF, scales to any
-    vector count per key. Weighted-by-count averaging would be
-    ``sum(v*count)/sum(count)`` — the reference explicitly does NOT
-    do that (``MapRedWord2Vec.scala:229``).
-    """
-    group_cols = group_cols or ["word", "token"]
-    pos = df.select(
-        *group_cols, "count", F.posexplode("vector").alias("pos", "v")
-    )
-    per_pos = pos.groupBy(*group_cols, "pos").agg(
-        F.avg("v").alias("mean_v"), F.sum("count").alias("count_sum")
-    )
-    return (
-        per_pos.groupBy(*group_cols)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("pos", "mean_v"))
-            ).alias("pv"),
-            F.first("count_sum").alias("count"),
-        )
-        .select(
-            *group_cols,
-            "count",
-            F.transform("pv", lambda s: s.getField("mean_v")).alias("vector"),
-        )
-    )

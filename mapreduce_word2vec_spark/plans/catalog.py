@@ -78,16 +78,10 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
             # using pandas UDFs work from any driver cwd/deployment.
             from mapreduce_word2vec_spark.runtime import (
                 ensure_workers_can_import,
-                release_tracked,
+                scoped_build,
             )
 
             ensure_workers_can_import(spark)
-            # Release the PREVIOUS query's operator-level caches
-            # (shingle/signature tables): their lifetime ends when a
-            # new catalog query starts, so repeated catalog/bench runs
-            # in one session don't accumulate cached tables until LRU
-            # eviction pressure hits unrelated queries.
-            release_tracked()
             # Timestamp results must be comparable against a TZ-naive
             # oracle regardless of how the caller built its session;
             # likewise the engine's documented classic-SQL semantics
@@ -95,7 +89,8 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
             # the caller's session left Spark 4's ANSI default on.
             spark.conf.set("spark.sql.session.timeZone", "UTC")
             spark.conf.set("spark.sql.ansi.enabled", "false")
-            return _fn(spark, sf_dir)
+            # The caches the build tracks live as long as its frame.
+            return scoped_build(lambda: _fn(spark, sf_dir))
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__

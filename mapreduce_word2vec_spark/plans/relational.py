@@ -233,8 +233,8 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 6-way join; dims broadcast, facts shuffled on
     join keys only."""
     c = rt(spark, sf_dir, "customer")
-    o = rt(spark, sf_dir, "orders", parallelize="o_orderkey")
-    li = rt(spark, sf_dir, "lineitem", parallelize="l_orderkey")
+    o = rt(spark, sf_dir, "orders")
+    li = rt(spark, sf_dir, "lineitem")
     s = rt(spark, sf_dir, "supplier")
     n = rt(spark, sf_dir, "nation")
     r = rt(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")

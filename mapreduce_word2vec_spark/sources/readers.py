@@ -72,19 +72,7 @@ def read_json(
     return reader.json(path)
 
 
-# (path -> scan partition count) probe cache for parallelize_scan:
-# getNumPartitions costs one driver-side planning pass, paid once per
-# table per process. NOTE (r9 advice): keyed by path only — if the file
-# at a path were rewritten at a different file count mid-process the
-# stale probe would mis-decide. Unreachable in the driver/bench
-# harnesses (testdata is read-only); long-lived sessions that rewrite
-# tables should clear this dict alongside release_tracked().
-_SCAN_PARTS: dict[str, int] = {}
-
-
-def parallelize_scan(
-    df: DataFrame, spark: SparkSession, path: str, key: str | None = None
-) -> DataFrame:
+def parallelize_scan(df: DataFrame, spark: SparkSession) -> DataFrame:
     """Scale-adaptive compute distribution for CPU-heavy narrow
     pipelines (optimization guide §2.5 "repartition immediately after
     the read" / §6 input splits).
@@ -104,18 +92,11 @@ def parallelize_scan(
     identity: no shuffle is ever added where the scan already
     parallelizes. Opt-IN per call site: only pipelines whose per-row
     compute dominates their scan cost ask for it; model-training
-    inputs (Word2Vec gradient order) never do."""
+    inputs (Word2Vec gradient order) never do. The partition probe
+    costs one driver-side planning pass; :func:`read_testdata` pays it
+    once per scan plan it caches."""
     target = spark.sparkContext.defaultParallelism
-    parts = _SCAN_PARTS.get(path)
-    if parts is None:
-        parts = df.rdd.getNumPartitions()
-        _SCAN_PARTS[path] = parts
-    if parts * 2 <= target:
-        # key given → hash distribute (no pre-repartition local sort;
-        # the key must be a column the query reads anyway or pruning
-        # widens). keyless → round-robin, fully pruning-transparent.
-        if key is not None:
-            return df.repartition(target, F.col(key))
+    if df.rdd.getNumPartitions() * 2 <= target:
         return df.repartition(target)
     return df
 
@@ -130,7 +111,7 @@ def parallelize_scan(
 # be shared by every consumer — exactly what a production app does by
 # resolving a catalog table once. This caches ONLY the unexecuted plan
 # object: no rows, no results — every action still scans the parquet
-# files, and a release_tracked()/unpersist cycle never touches it.
+# files, and no unpersist ever touches it.
 # Keyed WEAKLY on the session so a restarted session rebuilds plans.
 from weakref import WeakKeyDictionary
 
@@ -143,7 +124,7 @@ def read_testdata(
     spark: SparkSession,
     sf_dir: str,
     table: str,
-    parallelize: bool | str = False,
+    parallelize: bool = False,
 ) -> DataFrame:
     """Load one of the driver's synthetic tables (TESTDATA.md).
 
@@ -183,14 +164,9 @@ def read_testdata(
             # shifting values — and the DuckDB oracle's naive
             # timestamps keep comparing equal.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        if parallelize:
-            key = parallelize if isinstance(parallelize, str) else None
-            df = parallelize_scan(df, spark, f"{sf_dir}/{table}.parquet", key=key)
-        cache[cache_key] = df
-        return df
-    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    else:
+        df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
     if parallelize:
-        key = parallelize if isinstance(parallelize, str) else None
-        df = parallelize_scan(df, spark, f"{sf_dir}/{table}.parquet", key=key)
+        df = parallelize_scan(df, spark)
     cache[cache_key] = df
     return df

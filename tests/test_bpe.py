@@ -174,9 +174,8 @@ def test_bpe_trainer_storage_released(spark):
     call, the persist chain is bounded at two live tables during
     training, and the last ones are freed on return."""
     from mapreduce_word2vec_spark.operators.bpe import train_bpe_merges
-    from mapreduce_word2vec_spark.runtime import release_tracked
 
-    release_tracked()  # isolate from caches left by other tests
+    spark.catalog.clearCache()  # isolate from caches left by other tests
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
     wf = spark.createDataFrame(
         [("lowlow", 10), ("lowest", 5), ("newest", 7), ("wider", 3)],
@@ -184,6 +183,4 @@ def test_bpe_trainer_storage_released(spark):
     )
     rules = train_bpe_merges(wf, n_merges=7)
     assert len(rules) >= 1
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
-    release_tracked()
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0

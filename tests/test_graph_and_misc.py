@@ -44,7 +44,6 @@ def test_connected_components_long_path_plan_stays_flat(spark):
     import time
 
     from mapreduce_word2vec_spark.operators.graph import connected_components
-    from mapreduce_word2vec_spark.runtime import release_tracked
 
     def path(n):
         return spark.createDataFrame([Row(id_a=i, id_b=i + 1) for i in range(n - 1)])
@@ -60,7 +59,7 @@ def test_connected_components_long_path_plan_stays_flat(spark):
     assert plan_len(cc) < 2 * short
     expected = {(i, 0) for i in range(20)}
     assert {(r["node"], r["component"]) for r in cc.collect()} == expected
-    release_tracked()
+    spark.catalog.clearCache()
     assert {(r["node"], r["component"]) for r in cc.collect()} == expected
     assert time.monotonic() - start < 120
 
@@ -396,25 +395,204 @@ def test_hash_mod_sample_python_parity(spark):
     assert 0.7 < counts["train"] / n < 0.9
 
 
+def _cached_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _wait_cached_rdds(spark, want: int) -> int:
+    """The persistent RDD count once it reaches ``want`` (released
+    from another thread), or the count after 30 s."""
+    import time
+
+    deadline = time.monotonic() + 30
+    while _cached_rdds(spark) != want and time.monotonic() < deadline:
+        time.sleep(0.1)
+    return _cached_rdds(spark)
+
+
 @pytest.mark.parametrize(
     "name", ["dedup_ngram_jaccard", "graph_pagerank", "dedup_clusters"]
 )
 def test_operator_caches_released_between_catalog_queries(spark, name):
     """Operator-level persists (shingle tables, PageRank's edge/degree
-    tables, connected components' rolled label caches) are released
-    when the next catalog query starts — a long-lived session running
-    the catalog or bench repeatedly must not accumulate caches until
-    LRU eviction pressure degrades unrelated queries."""
-    from mapreduce_word2vec_spark.plans import catalog
-    from tests.conftest import SF_SMOKE
+    tables, connected components' rolled label caches) live exactly as
+    long as the frame the catalog query returned: another catalog
+    query leaves a held frame's caches alone, and dropping the frame
+    releases them with no further catalog call — a long-lived session
+    neither recomputes held frames nor accumulates caches."""
+    import gc
 
+    from mapreduce_word2vec_spark.plans import catalog
+
+    spark.catalog.clearCache()  # isolate from caches left by other tests
     qs = catalog.all_queries()
-    qs[name].fn(spark, SF_SMOKE).collect()
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() > 0
-    # dedup_exact itself persists nothing, so after it starts the
-    # previous query's caches must be gone.
+    df = qs[name].fn(spark, SF_SMOKE)
+    df.collect()
+    held = _cached_rdds(spark)
+    assert held > 0
+    # dedup_exact itself persists nothing.
     qs["dedup_exact"].fn(spark, SF_SMOKE).collect()
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
+    assert _cached_rdds(spark) == held
+    del df
+    gc.collect()
+    assert _cached_rdds(spark) == 0
+
+
+def test_nested_catalog_call_caches_live_until_outer_frame_dropped(spark):
+    """A catalog call made while another one builds joins the outer
+    call's cache scope: its caches outlive its own frame and are
+    released with the outer frame."""
+    import gc
+
+    from mapreduce_word2vec_spark.runtime import scoped_build, tracked_persist
+
+    spark.catalog.clearCache()
+
+    def inner():
+        cached = tracked_persist(spark.range(100).withColumn("k", F.col("id") % 7))
+        cached.count()
+        return cached.groupBy("k").count()
+
+    def outer():
+        scoped_build(inner).collect()  # the inner frame is dropped here
+        return spark.range(3)
+
+    df = scoped_build(outer)
+    gc.collect()
+    assert _cached_rdds(spark) == 1
+    del df
+    gc.collect()
+    assert _cached_rdds(spark) == 0
+
+
+def test_build_returning_its_own_cache_is_released(spark):
+    """A build that returns the very frame it cached is still released
+    when that frame is dropped: the release holds the JVM handle, never
+    the Python frame, so the frame stays collectable."""
+    import gc
+
+    from mapreduce_word2vec_spark.runtime import scoped_build, tracked_persist
+
+    spark.catalog.clearCache()
+    df = scoped_build(lambda: tracked_persist(spark.range(50)))
+    assert df.count() == 50
+    assert _cached_rdds(spark) == 1
+    del df
+    gc.collect()
+    assert _cached_rdds(spark) == 0
+
+
+def test_held_frame_keeps_caches_while_other_thread_builds(spark):
+    """A frame held in this thread keeps its caches while another
+    thread builds, runs and drops a catalog query. The other query
+    persists the same shingle table, which Spark caches once: the
+    other thread's dropped frame leaves it to the held one."""
+    import gc
+    import threading
+
+    from mapreduce_word2vec_spark.plans import catalog
+
+    spark.catalog.clearCache()
+    qs = catalog.all_queries()
+    df = qs["dedup_ngram_jaccard"].fn(spark, SF_SMOKE)
+    df.collect()
+    held = _cached_rdds(spark)
+    assert held > 0
+    seen: list[int] = []
+    errors: list[Exception] = []
+
+    def other():
+        try:
+            other_df = qs["dedup_containment"].fn(spark, SF_SMOKE)
+            other_df.collect()
+            seen.append(_cached_rdds(spark))
+        except Exception as e:
+            errors.append(e)
+
+    t = threading.Thread(target=other)
+    t.start()
+    t.join(timeout=600)
+    assert not t.is_alive()
+    if errors:
+        raise errors[0]
+    assert seen[0] >= held
+    gc.collect()
+    assert _cached_rdds(spark) == held
+    del df
+    gc.collect()
+    assert _cached_rdds(spark) == 0
+
+
+def test_shared_cache_released_with_last_frame(spark):
+    """Two catalog frames whose builds persist the same shingle table
+    share Spark's one cache of it: dropping the frame that made it
+    leaves the cache to the other, and dropping both releases it."""
+    import gc
+
+    from mapreduce_word2vec_spark.plans import catalog
+
+    spark.catalog.clearCache()
+    qs = catalog.all_queries()
+    first = qs["dedup_containment"].fn(spark, SF_SMOKE)
+    first.collect()
+    second = qs["dedup_ngram_jaccard"].fn(spark, SF_SMOKE)
+    second.collect()
+    both = _cached_rdds(spark)
+    assert both > 0
+    del first
+    gc.collect()
+    assert _cached_rdds(spark) == both
+    del second
+    gc.collect()
+    assert _cached_rdds(spark) == 0
+
+
+def test_scope_leaves_callers_cache_alone(spark):
+    """A build that tracks a plan the caller already cached does not
+    take that cache with it when its frame is dropped."""
+    import gc
+
+    from mapreduce_word2vec_spark.runtime import scoped_build, tracked_persist
+
+    spark.catalog.clearCache()
+    mine = spark.range(20).persist()
+    mine.count()
+    df = scoped_build(lambda: tracked_persist(spark.range(20)))
+    df.count()
+    del df
+    gc.collect()
+    assert _cached_rdds(spark) == 1
+    mine.unpersist()
+
+
+def test_release_while_thread_awaits_py4j_reply(spark):
+    """A finalizer run by cyclic GC can fire while this thread's pinned
+    py4j connection awaits a reply. The release must not send on that
+    connection; it runs from a thread of its own and still lands."""
+    from mapreduce_word2vec_spark import runtime
+
+    spark.catalog.clearCache()
+    scope: list = []
+    token = runtime._SCOPE.set(scope)
+    try:
+        df = runtime.tracked_persist(spark.range(10))
+    finally:
+        runtime._SCOPE.reset(token)
+    df.count()
+    client = df._jdf._gateway_client
+    if not hasattr(client, "get_thread_connection"):
+        pytest.skip("py4j client without pinned thread connections")
+    conn = client.get_thread_connection()
+    client.deque.remove(conn)  # as while a command is in flight
+    try:
+        runtime._release(scope)
+        # A command sent on the connection would have given it back.
+        sent_here = conn in client.deque
+    finally:
+        if conn not in client.deque:
+            client.deque.append(conn)
+    assert not sent_here
+    assert _wait_cached_rdds(spark, 0) == 0
 
 
 def _matches_oracle(name, df):
@@ -430,10 +608,9 @@ def _matches_oracle(name, df):
 @pytest.mark.parametrize("name", ["graph_pagerank", "dedup_clusters"])
 def test_frame_survives_later_catalog_build(spark, name):
     """A returned frame stays valid after the caller builds another
-    catalog query: building dedup_exact releases the iterative
-    operator's caches, and the frame then recomputes from lineage to
-    its oracle's rows, within a time bound, instead of failing on a
-    missing block."""
+    catalog query: building dedup_exact leaves the iterative
+    operator's caches alone, and the frame runs to its oracle's rows
+    within a time bound."""
     import time
 
     from mapreduce_word2vec_spark.plans import catalog

@@ -671,7 +671,6 @@ def test_collect_aggregates_have_documented_bounds():
         ("operators/dedup.py", "_bucket_pairs"): "lsh-bucket-bounded",
         ("operators/dedup.py", "simhash_pairs"): "per-signature-ids, output-is-the-object",
         ("operators/similarity.py", "label_centroids"): "fixed-dim (64)",
-        ("operators/word2vec.py", "sum_counts_and_mean_vectors"): "fixed-dim",
         ("plans/dedup_queries.py", "dedup_paragraphs"): "row-local (one doc's paragraphs)",
         ("plans/embedding_queries.py", "emb_ood_mahalanobis"): "fixed-dim (64)",
         ("plans/multimodal_queries.py", "multimodal_dedup_phash"): "rank-capped (rn<=20)",

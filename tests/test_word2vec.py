@@ -11,7 +11,7 @@ import math
 
 import numpy as np
 import pytest
-from pyspark.sql import Row, Window
+from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 from mapreduce_word2vec_spark.functions.tokens import first_token_id_py
@@ -20,12 +20,48 @@ from mapreduce_word2vec_spark.operators.word2vec import (
     embedding_pipeline,
     format_reference_output,
     sentences_df,
-    sum_counts_and_mean_vectors,
     train_word2vec,
     word_vectors,
 )
 from mapreduce_word2vec_spark.session import EngineConfig
 from tests.conftest import REFERENCE_INPUT, SF_SMOKE
+
+
+def sum_counts_and_mean_vectors(df: DataFrame) -> DataFrame:
+    """The reference's reducer aggregation (A13+A14+A15): per key,
+    total count and element-wise UNWEIGHTED mean of vectors. The
+    engine's MLlib fit applies this rule after every iteration
+    (``operators/word2vec.py``); kept here as the golden rule
+    ``test_reducer_golden`` checks.
+
+    Expressed as posexplode → per-position avg → re-assemble ordered
+    by position: three narrow shuffles on (key, pos) / key, all
+    Catalyst-planned with partial aggregation; no UDF, scales to any
+    vector count per key. Weighted-by-count averaging would be
+    ``sum(v*count)/sum(count)`` — the reference explicitly does NOT
+    do that (``MapRedWord2Vec.scala:229``).
+    """
+    group_cols = ["word", "token"]
+    pos = df.select(
+        *group_cols, "count", F.posexplode("vector").alias("pos", "v")
+    )
+    per_pos = pos.groupBy(*group_cols, "pos").agg(
+        F.avg("v").alias("mean_v"), F.sum("count").alias("count_sum")
+    )
+    return (
+        per_pos.groupBy(*group_cols)
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct("pos", "mean_v"))
+            ).alias("pv"),
+            F.first("count_sum").alias("count"),
+        )
+        .select(
+            *group_cols,
+            "count",
+            F.transform("pv", lambda s: s.getField("mean_v")).alias("vector"),
+        )
+    )
 
 
 def test_reducer_golden(spark):
