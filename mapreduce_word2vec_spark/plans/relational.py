@@ -164,13 +164,13 @@ def cube_part(spark: SparkSession, sf_dir: str) -> DataFrame:
 def grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS via the SQL API (same Catalyst Expand
     operator as rollup/cube)."""
-    rt(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty
-        FROM lineitem
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
+        """,
+        lineitem=rt(spark, sf_dir, "lineitem"),
     )
 
 
@@ -577,14 +577,14 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE frame over a numeric ordering (value-based bounds).
     PySpark's ``rangeBetween`` only takes integer offsets, so the
     double-valued frame goes through the SQL API (same plan)."""
-    rt(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
         """
         SELECT o_orderkey, o_totalprice,
                count(*) OVER (ORDER BY o_totalprice
                               RANGE BETWEEN 1000.0 PRECEDING AND 1000.0 FOLLOWING) AS n_within_1k
-        FROM orders
-        """
+        FROM {orders}
+        """,
+        orders=rt(spark, sf_dir, "orders"),
     )
 
 
@@ -816,19 +816,21 @@ def scalar_date_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sql_direct_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SQL entry path: temp views + ``spark.sql`` with the SAME
-    ANSI text the oracle runs — demonstrating that every catalog
-    operator is equally reachable through SQL (one parser, one
-    optimizer, identical plans to the DataFrame API)."""
-    rt(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    """The SQL entry path: ``spark.sql`` over the oracle's ANSI text,
+    with the table name bound to a frame argument (``{lineitem}``, a
+    view PySpark drops after parsing) instead of a session view —
+    demonstrating that every catalog operator is equally reachable
+    through SQL (one parser, one optimizer, identical plans to the
+    DataFrame API)."""
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus,
                sum(l_quantity) AS sum_qty, count(*) AS n
-        FROM lineitem
+        FROM {lineitem}
         WHERE l_shipdate <= TIMESTAMP '1998-09-02'
         GROUP BY l_returnflag, l_linestatus
-        """
+        """,
+        lineitem=rt(spark, sf_dir, "lineitem"),
     )
 
 
@@ -1031,14 +1033,13 @@ def join_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 def subquery_in_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN + correlated EXISTS subqueries (SQL API; Catalyst rewrites
     both to semi-joins)."""
-    for t in ("orders", "customer", "lineitem"):
-        rt(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(
         """
-        SELECT o_orderkey, o_totalprice FROM orders
-        WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
-          AND EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey AND l_quantity > 48)
-        """
+        SELECT o_orderkey, o_totalprice FROM {orders}
+        WHERE o_custkey IN (SELECT c_custkey FROM {customer} WHERE c_mktsegment = 'BUILDING')
+          AND EXISTS (SELECT 1 FROM {lineitem} WHERE l_orderkey = o_orderkey AND l_quantity > 48)
+        """,
+        **{t: rt(spark, sf_dir, t) for t in ("orders", "customer", "lineitem")},
     )
 
 
@@ -1053,14 +1054,14 @@ def subquery_in_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncorrelated scalar subquery (computed once, broadcast)."""
-    rt(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql(
         """
         SELECT c_custkey, c_acctbal,
-               round(c_acctbal - (SELECT avg(c_acctbal) FROM customer), 6) AS bal_vs_avg
-        FROM customer
-        WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer)
-        """
+               round(c_acctbal - (SELECT avg(c_acctbal) FROM {customer}), 6) AS bal_vs_avg
+        FROM {customer}
+        WHERE c_acctbal > (SELECT avg(c_acctbal) FROM {customer})
+        """,
+        customer=rt(spark, sf_dir, "customer"),
     )
 
 
@@ -1546,13 +1547,13 @@ def udtf_split_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield key, (int(num) if num.isdigit() else None), name
 
     spark.udtf.register("split_priority", SplitPriority)
-    rt(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
         """
         SELECT t.o_orderkey, t.priority_num, t.priority_name
-        FROM orders, LATERAL split_priority(o_orderkey, o_orderpriority) t
+        FROM {orders} orders, LATERAL split_priority(o_orderkey, o_orderpriority) t
         WHERE orders.o_orderkey < 500
-        """
+        """,
+        orders=rt(spark, sf_dir, "orders"),
     )
 
 
@@ -3214,18 +3215,18 @@ def join_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number formulation produces, which is why this stays viable
     when the per-group subquery would naively re-scan orders once per
     customer."""
-    rt(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    rt(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
         """
         SELECT c.c_custkey, l.o_orderkey, l.o_totalprice
-        FROM customer c,
+        FROM {customer} c,
         LATERAL (
-          SELECT o_orderkey, o_totalprice FROM orders
+          SELECT o_orderkey, o_totalprice FROM {orders}
           WHERE o_custkey = c.c_custkey
           ORDER BY o_totalprice DESC, o_orderkey LIMIT 2
         ) l
-        """
+        """,
+        customer=rt(spark, sf_dir, "customer"),
+        orders=rt(spark, sf_dir, "orders"),
     )
 
 

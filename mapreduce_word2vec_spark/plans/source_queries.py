@@ -2,29 +2,33 @@
 
 Each query materializes a slice of the parquet fixtures through a
 different format (CSV with explicit schema, JSON, text) into a
-session-scoped temp dir, reads it back, and aggregates — so the
-oracle (straight parquet) verifies BOTH the writer and the reader of
-that format. ``_SUCCESS`` markers are asserted in tests.
+scratch dir (``runtime.scratch_dir``, removed at process exit), reads
+it back, and aggregates — so the oracle (straight parquet) verifies
+BOTH the writer and the reader of that format. ``_SUCCESS`` markers are asserted in tests.
 """
 
 from __future__ import annotations
 
+import functools
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_word2vec_spark.plans.catalog import register
+from mapreduce_word2vec_spark.runtime import scratch_dir
 from mapreduce_word2vec_spark.sources.readers import read_csv, read_json, read_testdata
 from mapreduce_word2vec_spark.sources.writers import write_csv
 
-_TMP = tempfile.mkdtemp(prefix="mw2v_sources_")
+
+@functools.cache
+def _tmp() -> str:
+    return scratch_dir("mw2v_sources_")
 
 
 def _roundtrip_dir(kind: str, sf_dir: str) -> str:
     tag = sf_dir.strip("/").replace("/", "_")
-    return os.path.join(_TMP, f"{kind}_{tag}")
+    return os.path.join(_tmp(), f"{kind}_{tag}")
 
 
 @register(
@@ -318,22 +322,19 @@ def source_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge per bucket — the biggest single shuffle saving a warehouse
     layout can buy. Results are identical to the plain join, which is
     what the oracle checks."""
-    import uuid
-
     o = read_testdata(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus"
     )
     li = read_testdata(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice"
     )
-    # EXTERNAL tables at a unique temp path per invocation: bucket
-    # metadata lives in the session catalog, while a fixed managed
-    # name would collide with a previous session's leftover warehouse
-    # directory (LOCATION_ALREADY_EXISTS). The tables must outlive
-    # this function (the returned DataFrame is lazy), so no cleanup
-    # here — OS tmp reaping owns the data files.
-    suffix = uuid.uuid4().hex[:8]
-    base = tempfile.mkdtemp(prefix="mrw2v_buckets_")
+    # EXTERNAL tables in a scratch dir per call: a fixed managed name
+    # would collide with a previous session's leftover warehouse
+    # directory (LOCATION_ALREADY_EXISTS). The tables are dropped once
+    # the frame is built — the frame's plan keeps their files and
+    # bucket spec — and the files go with the scratch dir at exit.
+    base = scratch_dir("mrw2v_buckets_")
+    suffix = os.path.basename(base).removeprefix("mrw2v_buckets_")
     t_o, t_li = f"mrw2v_b_orders_{suffix}", f"mrw2v_b_lineitem_{suffix}"
     (
         o.write.bucketBy(8, "o_orderkey")
@@ -349,7 +350,7 @@ def source_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bo = spark.table(t_o)
     bl = spark.table(t_li)
-    return (
+    out = (
         bl.join(bo, bl.l_orderkey == bo.o_orderkey)
         .groupBy("o_orderstatus")
         .agg(
@@ -357,6 +358,9 @@ def source_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("l_extendedprice"), 2).alias("revenue"),
         )
     )
+    for t in (t_o, t_li):
+        spark.sql(f"DROP TABLE {t}")
+    return out
 
 
 @register(
@@ -645,17 +649,24 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("temp_c"), 6).alias("total_temp"),
         )
     )
-    name = "pysrc_stream_out"
+    ckpt = scratch_dir("mw2v_pss_")
+    name = os.path.basename(ckpt)
     q = (
         agg.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .option("checkpointLocation", os.path.join(tempfile.mkdtemp(prefix="mw2v_pss_"), "ckpt"))
+        .option("checkpointLocation", ckpt)
         .start()
     )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name)
+    # processAllAvailable, not availableNow: an availableNow trigger
+    # on this Python source delivers only its first block (2,000 of
+    # the 8,000 readings).
+    try:
+        q.processAllAvailable()
+        q.stop()
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 @register(

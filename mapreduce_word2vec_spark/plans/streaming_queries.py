@@ -4,54 +4,86 @@ equivalents are exercised in tests/test_streaming.py with
 availableNow replays of the same fixtures and asserted equal to
 these batch results).
 
-Timestamp note: events.ts is nanosecond-precision in parquet; Spark
-reads it truncated to microseconds (see sources.readers). Queries
-therefore only emit window boundaries / second-truncated times,
-which are identical at both precisions.
+Timestamp note: events.ts is a microsecond timestamp in the parquet
+testdata; an older nanosecond encoding is still read, truncated to
+microseconds (see sources.readers). Queries therefore only emit window
+boundaries / second-truncated times, which are identical at both
+precisions.
+
+The ``*_live`` queries run real Structured Streaming: each replays its
+input as a file stream and drains it through the runner below.
 """
 
 from __future__ import annotations
+
+import glob
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_word2vec_spark.plans.catalog import register
+from mapreduce_word2vec_spark.runtime import scratch_dir
 from mapreduce_word2vec_spark.sources.readers import read_testdata
 
-# --- replay-source temp dirs -------------------------------------------
-# Every live-streaming query materializes a replay copy of its input
-# into a temp dir. A bare mkdtemp leaks one corpus copy per query per
-# run (a full-catalog gate sweep invokes ~10 live queries; repeated
-# sweeps accumulate until /tmp fills) — track them and reap at process
-# exit. Dirs stay alive for the whole session on purpose: memory-sink
-# tables and checkpoints may outlive the query function.
-_REPLAY_DIRS: list[str] = []
+# --- live-stream runner ------------------------------------------------
+# Every live-stream query replays a batch input as a multi-file source
+# (8 files) and drains it with availableNow. The files and checkpoints
+# live in runtime.scratch_dir, fresh per call (a reused checkpoint
+# would skip the already-committed files), and are reaped at exit.
 
 
-def _replay_dir(prefix: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
+def _replay(df: DataFrame, ordered: bool = False) -> str:
+    """Write ``df`` as an 8-file replay source; return its directory.
+    ``ordered`` range-partitions on ``ts``, sorts each file on
+    (ts, event_id) and pins strictly increasing mtimes, so the file
+    stream (whose batches are mtime-ordered, while parallel write tasks
+    finish in any order) replays in event-time order."""
+    src = scratch_dir("mw2v_replay_")
+    if ordered:
+        df = df.repartitionByRange(8, "ts").sortWithinPartitions("ts", "event_id")
+    else:
+        df = df.repartition(8)
+    df.write.mode("overwrite").parquet(src)
+    if ordered:
+        t0 = 1_700_000_000
+        for i, f in enumerate(sorted(glob.glob(os.path.join(src, "part-*")))):
+            os.utime(f, (t0 + i, t0 + i))
+    return src
 
-    if not _REPLAY_DIRS:
-        atexit.register(
-            lambda: [shutil.rmtree(d, ignore_errors=True) for d in _REPLAY_DIRS]
-        )
-    d = tempfile.mkdtemp(prefix=prefix)
-    _REPLAY_DIRS.append(d)
-    return d
+
+def _stream(spark: SparkSession, src: str, schema, per_trigger: int = 2) -> DataFrame:
+    """The replay at ``src`` as a file stream, ``per_trigger`` files per
+    micro-batch."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", str(per_trigger))
+        .parquet(src)
+    )
 
 
-def _pin_mtimes(src: str) -> None:
-    """Pin deterministic, strictly increasing mtimes on the part files
-    of a replay source so the file-stream replays them in a stable
-    order (maxFilesPerTrigger batches are mtime-ordered)."""
-    import glob
-    import os
-
-    t0 = 1_700_000_000
-    for i, f in enumerate(sorted(glob.glob(os.path.join(src, "part-*")))):
-        os.utime(f, (t0 + i, t0 + i))
+def _drain(stream: DataFrame, mode: str, with_query: bool = False):
+    """Run ``stream`` to the end of its input (availableNow) into a
+    memory sink and return the sink's rows; with ``with_query``, also
+    the finished query. The sink's temp view is dropped: the returned
+    frame holds the sink's plan, not its name."""
+    spark = stream.sparkSession
+    ckpt = scratch_dir("mw2v_sink_")
+    name = os.path.basename(ckpt)
+    q = (
+        stream.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination()
+        out = spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
+    return (out, q) if with_query else out
 
 
 @register(
@@ -1263,15 +1295,10 @@ def stream_foreach_batch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     Driver state here is bounded by |event_type| (single digits); a
     production sink would MERGE into a transactional table instead —
     the batch-split-invariance being asserted is the same."""
-    import os
-    import tempfile
     from collections import defaultdict
 
     ev = read_testdata(spark, sf_dir, "events").select("event_type", "value")
-    src = os.path.join(
-        _replay_dir("mw2v_fbm_"), "src_" + sf_dir.strip("/").replace("/", "_")
-    )
-    ev.repartition(8).write.mode("overwrite").parquet(src)
+    src = _replay(ev)
 
     state: dict[str, list] = defaultdict(lambda: [0, 0.0])
 
@@ -1286,15 +1313,11 @@ def stream_foreach_batch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             acc[0] += r["n"]
             acc[1] += r["v"]
 
-    stream = (
-        spark.readStream.schema("event_type string, value double")
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
-    )
     q = (
-        stream.writeStream.foreachBatch(merge_batch)
+        _stream(spark, src, ev.schema)
+        .writeStream.foreachBatch(merge_batch)
         .trigger(availableNow=True)
-        .option("checkpointLocation", src + "_ckpt")
+        .option("checkpointLocation", scratch_dir("mw2v_ckpt_"))
         .start()
     )
     q.awaitTermination()
@@ -1404,18 +1427,9 @@ def stream_tumbling_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduce the one-shot batch aggregation exactly — Spark's
     streaming agg state IS the partial-aggregate, so window counts
     and (rounded) sums land identical to the oracle's."""
-    import os
-    import tempfile
-
     ev = read_testdata(spark, sf_dir, "events").select("ts", "event_type", "value")
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = _replay_dir("mw2v_stl_")
-    src = os.path.join(base, "src")
-    ev.repartition(8).write.mode("overwrite").parquet(src)
     agg = (
-        spark.readStream.schema("ts timestamp, event_type string, value double")
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
+        _stream(spark, _replay(ev), ev.schema)
         .groupBy(F.window("ts", "5 minutes"), F.col("event_type"))
         .agg(F.count("*").cast("bigint").alias("n"), F.sum("value").alias("sv"))
         .select(
@@ -1425,17 +1439,7 @@ def stream_tumbling_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("sv", 6).alias("sum_value"),
         )
     )
-    name = f"stl_{tag}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(agg, "complete")
 
 
 @register(
@@ -1470,18 +1474,9 @@ def stream_session_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     session's (count, sum) must land exactly. Session identity
     (start time) is engine-internal — the output projects per-session
     aggregates keyed by user, which IS order-independent."""
-    import os
-    import tempfile
-
     ev = read_testdata(spark, sf_dir, "events").select("ts", "user_id", "value")
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = _replay_dir("mw2v_ssl_")
-    src = os.path.join(base, "src")
-    ev.repartition(8).write.mode("overwrite").parquet(src)
     agg = (
-        spark.readStream.schema("ts timestamp, user_id bigint, value double")
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
+        _stream(spark, _replay(ev), ev.schema)
         .groupBy(F.session_window("ts", "30 minutes"), F.col("user_id"))
         .agg(
             F.count("*").cast("bigint").alias("n_events"),
@@ -1489,17 +1484,7 @@ def stream_session_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("user_id", "n_events", "total_value")
     )
-    name = f"ssl_{tag}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(agg, "complete")
 
 
 # --- complex-event-processing pattern match ---------------------------
@@ -1521,6 +1506,7 @@ from mapreduce_word2vec_spark.streaming.windows import (  # noqa: E402
     CEP_CHAR as _CEP_CHAR,
     CEP_OTHER as _CEP_OTHER,
     CEP_PATTERN as _CEP_PATTERN,
+    cep_dfa_fold,
 )
 
 _CEP_CASE_SQL = (
@@ -1572,7 +1558,8 @@ def events_cep_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     regex engines implement), so instead of buffering each user's
     whole symbol string in one aggregate cell (hot-key OOM at 100 TB)
     the count folds over the sorted stream with O(1) state via
-    ``per_key_ordered_fold`` — memory is bounded by the Arrow batch,
+    ``per_key_ordered_fold`` stepping ``cep_dfa_fold`` (the DFA the
+    stream operators share) — memory is bounded by the Arrow batch,
     the sort spills, and values are bit-identical to the regex
     formulation (equivalence fuzz-pinned in tests/test_streaming_edges
     and by this query's standing DuckDB regex oracle)."""
@@ -1597,26 +1584,13 @@ def events_cep_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cep_init() -> tuple:
-    # (dfa_state: 0 idle / 1 seen-v / 2 seen-v..c, n_events, n_matches)
+    # (cep_dfa_fold state, n_events, n_matches)
     return (0, 0, 0)
 
 
 def _cep_step(st: tuple, ch: str) -> tuple:
     s, n, c = st
-    if s == 0:
-        if ch == "v":
-            s = 1
-    elif s == 1:
-        if ch == "e":
-            s = 0
-        elif ch == "c":
-            s = 2
-    else:
-        if ch == "e":
-            s = 0
-        elif ch == "p":
-            s = 0
-            c += 1
+    c, s = cep_dfa_fold(c, s, ch)
     return (s, n + 1, c)
 
 
@@ -1885,33 +1859,11 @@ def stream_cep_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     (max n_seen) selected with max_by. Must equal the batch
     events_cep_pattern answer exactly — out-of-order micro-batch
     arrival is reconciled by the operator's state buffer."""
-    import os
-    import tempfile
-
     from mapreduce_word2vec_spark.streaming.windows import stateful_cep_counts
 
     ev = read_testdata(spark, sf_dir, "events")
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = _replay_dir("mw2v_cep_")
-    src = os.path.join(base, "src")
-    ev.repartition(8).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
-    )
-    name = f"cep_{tag}"
-    q = (
-        stateful_cep_counts(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    emissions = spark.table(name)
+    stream = _stream(spark, _replay(ev), ev.schema)
+    emissions = _drain(stateful_cep_counts(stream), "update")
     return emissions.groupBy("user_id").agg(
         F.max("n_seen").cast("bigint").alias("seq_len"),
         F.max_by("n_conversions", "n_seen").cast("bigint").alias("n_conversions"),
@@ -1949,47 +1901,15 @@ def stream_cep_bounded_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark, so eviction is exercised on every batch and the final
     emission per user still equals the batch events_cep_pattern
     answer exactly."""
-    import os
-    import tempfile
-
     from mapreduce_word2vec_spark.streaming.windows import (
         stateful_cep_counts_bounded,
     )
 
     ev = read_testdata(spark, sf_dir, "events")
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = _replay_dir("mw2v_cepb_")
-    src = os.path.join(base, "src")
-    (
-        ev.repartitionByRange(8, "ts")
-        .sortWithinPartitions("ts", "event_id")
-        .write.mode("overwrite")
-        .parquet(src)
+    stream = _stream(spark, _replay(ev, ordered=True), ev.schema).withWatermark(
+        "ts", "1 hour"
     )
-    # FileStreamSource orders files by MODIFICATION TIME, and parallel
-    # write tasks finish in arbitrary order — pin replay order to the
-    # range-partition order (part-00000 = lowest ts range) by stamping
-    # strictly increasing mtimes on the sorted part files.
-
-    _pin_mtimes(src)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
-        .withWatermark("ts", "1 hour")
-    )
-    name = f"cepb_{tag}"
-    q = (
-        stateful_cep_counts_bounded(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    emissions = spark.table(name)
+    emissions = _drain(stateful_cep_counts_bounded(stream), "update")
     return emissions.groupBy("user_id").agg(
         F.max("n_seen").cast("bigint").alias("seq_len"),
         F.max_by("n_conversions", "n_seen").cast("bigint").alias("n_conversions"),
@@ -2018,33 +1938,14 @@ def stream_sliding_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     event lands in exactly two windows) under the value oracle —
     incremental multi-window state across availableNow micro-batches
     must equal the batch two-window expansion."""
-    import os
-    import tempfile
-
     ev = read_testdata(spark, sf_dir, "events").select("ts", "event_type")
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = _replay_dir("mw2v_ssl2_")
-    src = os.path.join(base, "src")
-    ev.repartition(8).write.mode("overwrite").parquet(src)
     agg = (
-        spark.readStream.schema("ts timestamp, event_type string")
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
+        _stream(spark, _replay(ev), ev.schema)
         .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
         .agg(F.count("*").cast("bigint").alias("n"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n")
     )
-    name = f"ssl2_{tag}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(agg, "complete")
 
 
 # --- bot detection --------------------------------------------------------
@@ -2691,30 +2592,14 @@ def stream_stream_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every (click, purchase) pair must therefore equal the one-shot
     batch join exactly — matched-state streaming correctness, not
     just aggregation-state."""
-
-    import os
-
     ev = read_testdata(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
-    )
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = _replay_dir("mw2v_ssj_")
-    src = os.path.join(base, "src")
-    (
-        ev.where(F.col("event_type").isin("click", "purchase"))
-        .repartitionByRange(8, "ts")
-        .sortWithinPartitions("ts", "event_id")
-        .write.mode("overwrite")
-        .parquet(src)
-    )
-    _pin_mtimes(src)
-    schema = "event_id bigint, ts timestamp, user_id bigint, event_type string, value double"
+    ).where(F.col("event_type").isin("click", "purchase"))
+    src = _replay(ev, ordered=True)
 
     def side(kind: str, id_alias: str, ts_alias: str):
         return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
+            _stream(spark, src, ev.schema)
             .where(F.col("event_type") == kind)
             .withWatermark("ts", "1 hour")
             .select(
@@ -2742,17 +2627,7 @@ def stream_stream_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_micros("pts") - F.unix_micros("cts")).alias("gap_us"),
         F.round("value", 6).alias("purchase_value"),
     )
-    name = f"ssj_{tag}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(joined, "append")
 
 
 @register(
@@ -2775,9 +2650,6 @@ def stream_dedup_watermark_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark ≫ the 60 s retransmission gap guarantee every
     duplicate meets its original's still-live state: the sink must
     equal the duplicate-free base table EXACTLY."""
-
-    import os
-
     from mapreduce_word2vec_spark.streaming.windows import stream_dedup
 
     ev = read_testdata(spark, sf_dir, "events").select(
@@ -2786,38 +2658,11 @@ def stream_dedup_watermark_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     dupes = ev.where(F.col("event_id") % 10 == 0).withColumn(
         "ts", F.col("ts") + F.expr("INTERVAL 60 SECONDS")
     )
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = _replay_dir("mw2v_sdw_")
-    src = os.path.join(base, "src")
-    (
-        ev.unionByName(dupes)
-        .repartitionByRange(8, "ts")
-        .sortWithinPartitions("ts", "event_id")
-        .write.mode("overwrite")
-        .parquet(src)
-    )
-    _pin_mtimes(src)
-    stream = (
-        spark.readStream.schema(
-            "event_id bigint, ts timestamp, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
-    )
-    deduped = stream_dedup(stream, watermark="10 minutes").select(
-        "event_id", "event_type", F.round("value", 6).alias("value")
-    )
-    name = f"sdw_{tag}"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    src = _replay(ev.unionByName(dupes), ordered=True)
+    deduped = stream_dedup(
+        _stream(spark, src, ev.schema), watermark="10 minutes"
+    ).select("event_id", "event_type", F.round("value", 6).alias("value"))
+    return _drain(deduped, "append")
 
 
 @register(
@@ -2867,13 +2712,10 @@ def stream_late_drop_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     (counts are monotone). Hash-equality here pins the drop boundary,
     the watermark update timing, and the ms truncation — not just
     that "some rows were dropped"."""
-    import os
-    import tempfile
     import time as _time
 
     ev = read_testdata(spark, sf_dir, "events").select("event_id", "ts")
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = _replay_dir("mw2v_sld_")
+    base = scratch_dir("mw2v_replay_")
     src = os.path.join(base, "src")
     os.makedirs(src, exist_ok=True)
     t0 = _time.time()
@@ -2892,29 +2734,13 @@ def stream_late_drop_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.replace(os.path.join(chunk_dir, part), dst)
         os.utime(dst, (t0 + k, t0 + k))
     agg = (
-        spark.readStream.schema("event_id bigint, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        _stream(spark, src, ev.schema, per_trigger=1)
         .withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "5 minutes"))
         .agg(F.count("*").cast("bigint").alias("n"))
         .select(F.col("window.start").alias("window_start"), "n")
     )
-    name = f"sld_{tag}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        spark.table(name)
-        .groupBy("window_start")
-        .agg(F.max("n").alias("n"))
-    )
+    return _drain(agg, "update").groupBy("window_start").agg(F.max("n").alias("n"))
 
 
 # Single source of truth for the per-event-type session gap: the
@@ -3091,16 +2917,10 @@ def stream_observe_metrics_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     what the oracle computes. Exercises the streaming observe path
     end-to-end (listener-visible metrics, not the batch Observation
     object, which streaming queries don't support)."""
-    import os
-    import tempfile
-
     ev = read_testdata(spark, sf_dir, "events").select(
         "ts", "event_type", "value"
     )
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = _replay_dir("mw2v_som_")
-    src = os.path.join(base, "src")
-    ev.repartition(8).write.mode("overwrite").parquet(src)
+    src = _replay(ev)
     # recentProgress is a ring buffer capped at
     # spark.sql.streaming.numRecentProgressUpdates (default 100); with
     # enough source files older batch observations would silently evict
@@ -3112,32 +2932,16 @@ def stream_observe_metrics_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev_cap = spark.conf.get(_CAP_KEY, None)
     spark.conf.set(_CAP_KEY, "512")
     try:
-        stream = (
-            spark.readStream.schema("ts timestamp, event_type string, value double")
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
-            .observe(
-                "ingest_metrics",
-                F.count(F.lit(1)).alias("n_rows"),
-                # Coalesced at the source: a zero-row micro-batch
-                # observes sum_value = NULL, and the Python fold below
-                # would crash on 0 + None.
-                F.coalesce(F.sum("value"), F.lit(0.0)).alias("sum_value"),
-                F.count(F.when(F.col("event_type") == "error", 1)).alias(
-                    "n_errors"
-                ),
-            )
+        stream = _stream(spark, src, ev.schema).observe(
+            "ingest_metrics",
+            F.count(F.lit(1)).alias("n_rows"),
+            # Coalesced at the source: a zero-row micro-batch
+            # observes sum_value = NULL, and the Python fold below
+            # would crash on 0 + None.
+            F.coalesce(F.sum("value"), F.lit(0.0)).alias("sum_value"),
+            F.count(F.when(F.col("event_type") == "error", 1)).alias("n_errors"),
         )
-        name = f"som_{tag}"
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _, q = _drain(stream, "append", with_query=True)
         progress = q.recentProgress
         if len(progress) >= 512:
             raise RuntimeError(
@@ -3464,8 +3268,8 @@ def events_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 # checkpoint. If offset recovery works, the summed increments equal
 # the batch count over ALL events; if the restart re-read run-1 files
 # (or skipped the new ones), the totals are wrong and the value
-# oracle catches it. Fresh mkdtemp per invocation keeps the query
-# idempotent across gate/pytest runs.
+# oracle catches it. A fresh scratch_dir per call keeps the query
+# idempotent across repeated calls in one process and across runs.
 
 
 @register(
@@ -3479,17 +3283,10 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two availableNow runs over one checkpoint: per-user totals from
     appended per-batch increments must equal the batch ground truth —
     exactly-once across a restart."""
-    import os
-    import tempfile
-
     ev = read_testdata(spark, sf_dir, "events").select("event_id", "user_id")
-    base = _replay_dir("mw2v_ckptrec_")
-    src = os.path.join(base, "src")
-    out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    ev.where(F.col("event_id") % 2 == 0).repartition(4).write.mode(
-        "overwrite"
-    ).parquet(src)
+    src = _replay(ev.where(F.col("event_id") % 2 == 0))
+    out = scratch_dir("mw2v_out_")
+    ckpt = scratch_dir("mw2v_ckpt_")
 
     def run_once() -> None:
         def sink(bdf, _bid) -> None:
@@ -3501,9 +3298,7 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         q = (
-            spark.readStream.schema("event_id bigint, user_id bigint")
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
+            _stream(spark, src, ev.schema)
             .writeStream.foreachBatch(sink)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)

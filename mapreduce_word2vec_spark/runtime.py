@@ -7,7 +7,8 @@ cluster only if the package is shipped. :func:`ensure_workers_can_import`
 zips the package once and registers it with ``SparkContext.addPyFile``
 (the same mechanism ``spark-submit --py-files`` uses), making every
 catalog query self-contained no matter where the driver process runs.
-The zip is deleted when the process exits.
+The zip is deleted when the process exits, and so is every
+:func:`scratch_dir` a catalog query writes its files into.
 
 It also owns the lifetime of operator caches: each catalog call builds
 in its own cache scope (:func:`scoped_build`), released when the frame
@@ -18,6 +19,7 @@ from __future__ import annotations
 
 import atexit
 import os
+import shutil
 import tempfile
 import threading
 import weakref
@@ -128,6 +130,16 @@ def rerooted(df: DataFrame) -> DataFrame:
     spark = df.sparkSession
     jdf = df._jdf
     return DataFrame(spark._jsparkSession.createDataFrame(jdf.javaRDD(), jdf.schema()), spark)
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory for files a catalog query writes (replay
+    copies, checkpoints, round-trip copies, external tables), removed
+    when the process exits. Not sooner: the frame the query returns
+    reads these files lazily, for as long as the caller holds it."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
 
 
 def ensure_workers_can_import(spark: SparkSession) -> None:

@@ -14,6 +14,7 @@ Catalyst pushes filters and prunes columns into them (verify with
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -129,15 +130,15 @@ def read_testdata(
     """Load one of the driver's synthetic tables (TESTDATA.md).
 
     ``events.ts`` has shipped in two physical encodings across driver
-    testdata generations: parquet TIMESTAMP(NANOS) (which Spark's
-    reader rejects — we read it as a long via the legacy conf and
-    convert with integer division; double division would lose
-    precision at ~1.7e18 ns) and plain TIMESTAMP(MICROS) (read
-    natively). We branch on the decoded type so both generations
-    work. Sub-microsecond digits are truncated in the nanos case —
-    queries must therefore never emit the raw ``ts`` value when an
-    external nanosecond-capable oracle is the comparator; emit
-    derived/bucketed values instead.
+    testdata generations: plain TIMESTAMP(MICROS) (read natively) and
+    parquet TIMESTAMP(NANOS), which Spark's reader rejects with
+    ``PARQUET_TYPE_ILLEGAL`` — only then is it re-read as a long via
+    the legacy conf and converted with integer division (double
+    division would lose precision at ~1.7e18 ns). Sub-microsecond
+    digits are truncated in the nanos case — queries must therefore
+    never emit the raw ``ts`` value when an external
+    nanosecond-capable oracle is the comparator; emit derived/bucketed
+    values instead.
     """
     if table not in TESTDATA_TABLES:
         raise ValueError(f"unknown table {table!r}; expected one of {TESTDATA_TABLES}")
@@ -146,14 +147,19 @@ def read_testdata(
     cached = cache.get(cache_key)
     if cached is not None:
         return cached
-    if table == "events":
-        # DELIBERATELY session-sticky (no restore): DataFrames are
-        # lazy, so the conf must still hold when the plan EXECUTES —
-        # a set-and-restore around the read definition would corrupt
-        # later runs. Side effect: any other TIMESTAMP(NANOS) parquet
+    path = f"{sf_dir}/{table}.parquet"
+    try:
+        df = spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PARQUET_TYPE_ILLEGAL":
+            raise
+        # TIMESTAMP(NANOS) data. DELIBERATELY session-sticky (no
+        # restore): DataFrames are lazy, so the conf must still hold
+        # when the plan EXECUTES. Side effect: any other NANOS parquet
         # read in the same session also decodes as long.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+        df = spark.read.parquet(path)
+    if table == "events":
         if isinstance(df.schema["ts"].dataType, T.LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         else:
@@ -164,8 +170,6 @@ def read_testdata(
             # shifting values — and the DuckDB oracle's naive
             # timestamps keep comparing equal.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    else:
-        df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
     if parallelize:
         df = parallelize_scan(df, spark)
     cache[cache_key] = df

@@ -326,11 +326,7 @@ def stateful_cep_counts(events: DataFrame) -> DataFrame:
     horizon). Each batch re-emits the (ts, event_id)-ordered match
     count; the final emission per user equals the batch
     ``events_cep_pattern`` answer."""
-    import re as _re
-
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    pat = _re.compile(CEP_PATTERN)
 
     def update(key, batches: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         us, eid, ch = (list(state.get[0]), list(state.get[1]), list(state.get[2])) \
@@ -347,7 +343,7 @@ def stateful_cep_counts(events: DataFrame) -> DataFrame:
             {
                 "user_id": [int(key[0])],
                 "n_seen": [len(seq)],
-                "n_conversions": [len(pat.findall(seq))],
+                "n_conversions": [cep_dfa_fold(0, 0, seq)[0]],
             }
         )
 
