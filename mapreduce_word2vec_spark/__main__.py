@@ -46,6 +46,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = parser.parse_args(argv)
 
+    from mapreduce_word2vec_spark.functions.tokens import bpe_backend_resolves
     from mapreduce_word2vec_spark.operators.word2vec import (
         embedding_pipeline,
         format_reference_output,
@@ -62,7 +63,10 @@ def main(argv: list[str] | None = None) -> int:
         iterations=args.iterations,
     )
     spark = get_spark(app_name="mapreduce-word2vec-spark-job")
-    ensure_workers_can_import(spark)
+    # Only the token-id pandas UDF runs Python on the workers; without a
+    # BPE backend the whole job is JVM expressions and ships nothing.
+    if bpe_backend_resolves():
+        ensure_workers_can_import(spark)
 
     t0 = time.perf_counter()
     out = embedding_pipeline(spark, args.input_dir, config, args.partitions)

@@ -24,12 +24,21 @@ Backend resolution, in order:
    first-token-only semantics, different id values — golden-tested
    rather than oracle-compared (SURVEY §2.B marks A10 "golden").
 
-On a real cluster the vocab file/env must be visible to executor
-Python workers (``--files`` + ``spark.executorEnv``); in local mode it
-is inherited automatically.
-
-Implemented as an Arrow-vectorized pandas UDF (the engine's archetypal
-scalar UDF): one Python crossing per batch, not per row.
+The reference pipelines (``operators.word2vec.ordered_with_token``, the
+``ref_pipeline_documents`` query) build the token id with
+:func:`token_id_col`, which chooses at plan time, on the driver. When
+backend 1 or 2 resolves there it returns the :func:`first_token_id` pandas UDF: one
+Arrow-vectorized Python crossing per batch, not per row. On a real
+cluster the vocab file and ``$MRW2V_CL100K_VOCAB`` must then be visible
+to the executors' Python workers (``--files`` + ``spark.executorEnv``);
+in local mode the workers inherit the environment the driver had when
+its session started. When neither resolves it returns
+:func:`fallback_token_id_expr`, the same fallback id as a pure Catalyst
+expression, so the plan has no Python node and no Python worker starts.
+That expression folds character codes where backend 3 folds UTF-8
+bytes. The two agree because every word the engine tokenizes is
+``[a-z]+`` (``functions.text.tokens_expr``), whose character codes are
+its bytes.
 """
 
 from __future__ import annotations
@@ -141,10 +150,9 @@ def fallback_token_id_expr(word) -> "F.Column":
     crossing): polynomial fold over the word's character codes — for
     ASCII words this equals :func:`first_token_id_py`'s fallback on
     UTF-8 bytes, which makes token-id-bearing outputs oracle-able.
-    The pandas UDF above remains the A10 archetype (and upgrades to
-    real cl100k ids when tiktoken or a vocab file exists); this is the
-    portable JVM-side variant used where cross-engine determinism is
-    required."""
+    :func:`token_id_col` uses it when no BPE backend resolves; callers
+    that need the same id from every engine (the DuckDB oracles) use it
+    directly."""
     col = F.col(word) if isinstance(word, str) else word
     codes = F.transform(F.split(col, ""), lambda c: F.ascii(c))
     return F.aggregate(
@@ -152,3 +160,16 @@ def fallback_token_id_expr(word) -> "F.Column":
         F.lit(0).cast("long"),
         lambda acc, c: (acc * _FALLBACK_BASE + c) % _FALLBACK_MOD,
     )
+
+
+def bpe_backend_resolves() -> bool:
+    """Whether ``tiktoken`` or a vocab file resolves on the driver, so
+    token ids are real cl100k ids computed in Python workers."""
+    return _ENCODING is not None or _vocab_ranks() is not None
+
+
+def token_id_col(word) -> "F.Column":
+    """The reference token id of ``word`` (a column or its name): the
+    :func:`first_token_id` pandas UDF when a BPE backend resolves, else
+    :func:`fallback_token_id_expr`, which keeps the plan in the JVM."""
+    return first_token_id(word) if bpe_backend_resolves() else fallback_token_id_expr(word)

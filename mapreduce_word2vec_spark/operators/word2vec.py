@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_word2vec_spark.functions.text import tokens_expr
-from mapreduce_word2vec_spark.functions.tokens import first_token_id
+from mapreduce_word2vec_spark.functions.tokens import token_id_col
 from mapreduce_word2vec_spark.session import DEFAULT_CONFIG, EngineConfig
 
 
@@ -116,11 +116,12 @@ def embedding_pipeline(
     corpus). The joined rows, one per model word, go through the one
     range exchange of the job (``ordered_with_token``), which gives the
     output its global word order. The range sort's sampling job re-reads
-    only the word-count shuffle and the broadcast join. The token-id
-    pandas UDF runs above the exchange, so it touches each distinct word
-    once, not per occurrence and not again for the sampling — the same
-    "compute where cheaper" placement the reference argued for
-    (``MapRedWord2Vec.scala:124-129``).
+    only the word-count shuffle and the broadcast join. The token id
+    (``functions.tokens.token_id_col``: a Catalyst expression offline,
+    the pandas UDF when a BPE backend resolves) runs above the exchange,
+    so it touches each distinct word once, not per occurrence and not
+    again for the sampling — the same "compute where cheaper" placement
+    the reference argued for (``MapRedWord2Vec.scala:124-129``).
     """
     from mapreduce_word2vec_spark.sources.readers import read_text_corpus
 
@@ -155,13 +156,15 @@ def ordered_with_token(df: DataFrame) -> DataFrame:
     key (``MapRedWord2Vec.scala:245-284``). Words are ``[a-z]+`` and
     ``","`` sorts below every letter, so ordering by word orders the
     ``word,token,...`` lines exactly as sorting the lines would. Sorting
-    here, at vocabulary grain and before the token-id pandas UDF, keeps
-    the UDF and every later narrow step (``format_reference_output``,
-    the text write) above the range exchange: they run once per word,
-    and the range sort's sampling job does not run them."""
+    here, at vocabulary grain and before the token id, keeps the token
+    id and every later narrow step (``format_reference_output``, the
+    text write) above the range exchange: they run once per word, and
+    the range sort's sampling job does not run them. With no BPE backend
+    the token id is a Catalyst expression (``token_id_col``), so the
+    whole job stays in the JVM."""
     return (
         df.orderBy("word")
-        .withColumn("token", first_token_id(F.col("word")))
+        .withColumn("token", token_id_col("word"))
         .select("word", "token", "count", "vector")
     )
 

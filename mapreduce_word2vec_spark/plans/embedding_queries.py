@@ -126,14 +126,14 @@ def ref_pipeline_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     text standing in for the Gutenberg corpus: (word, token, count,
     dim). Vector values are model-dependent → returns the shape-stable
     projection; full-value checks live in the E2E tests."""
-    from mapreduce_word2vec_spark.functions.tokens import first_token_id
+    from mapreduce_word2vec_spark.functions.tokens import token_id_col
     from mapreduce_word2vec_spark.operators.word2vec import vocabulary_rows
     from mapreduce_word2vec_spark.session import EngineConfig
 
     docs = read_testdata(spark, sf_dir, "documents").select(F.col("text").alias("value"))
     return (
         vocabulary_rows(docs, EngineConfig(layer_size=32))
-        .withColumn("token", first_token_id(F.col("word")))
+        .withColumn("token", token_id_col("word"))
         .select("word", "token", "count", F.size("vector").cast("int").alias("dim"))
     )
 

@@ -4081,6 +4081,7 @@ def table_ctas_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, exercised through SQL DDL rather than path-based IO. The
     oracle is the reunited source table, so CTAS + INSERT must be
     exactly additive (no dropped or doubled rows)."""
+    import atexit
     import os
     import shutil
     from urllib.parse import urlparse
@@ -4091,10 +4092,13 @@ def table_ctas_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     # A DROP in a fresh session can't see a previous process's catalog
     # entry, but the managed LOCATION survives on disk and would fail
-    # the CTAS with LOCATION_ALREADY_EXISTS — purge the stale dir.
+    # the CTAS with LOCATION_ALREADY_EXISTS — purge the stale dir. The
+    # returned frame reads the location lazily, so it goes at exit.
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir"))
     if wh.scheme in ("", "file"):
-        shutil.rmtree(os.path.join(wh.path, tbl.lower()), ignore_errors=True)
+        location = os.path.join(wh.path, tbl.lower())
+        shutil.rmtree(location, ignore_errors=True)
+        atexit.register(shutil.rmtree, location, ignore_errors=True)
     spark.sql(
         f"""CREATE TABLE {tbl} USING parquet AS
             SELECT n_nationkey, n_name, n_regionkey

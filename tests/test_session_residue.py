@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import atexit
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
@@ -102,6 +103,26 @@ def test_scratch_dirs_removed_at_exit(spark, monkeypatch, tmp_path):
     for fn, args, kwargs in at_exit:
         fn(*args, **kwargs)
     assert list(tmp_path.iterdir()) == []
+
+
+def test_ctas_table_location_removed_at_exit(spark, monkeypatch):
+    """``table_ctas_insert`` keeps its table managed, under the session's
+    warehouse dir, and registers the table's location for removal at
+    exit, so no ``nation_ctas_*`` dir outlives the process."""
+    from urllib.parse import urlparse
+
+    at_exit = []
+    monkeypatch.setattr(atexit, "register", lambda fn, *a, **kw: at_exit.append((fn, a, kw)))
+    assert catalog.queries()["table_ctas_insert"](spark, SF_SMOKE).count() > 0
+    warehouse = Path(urlparse(spark.conf.get("spark.sql.warehouse.dir")).path)
+    removals = [(args, kwargs) for fn, args, kwargs in at_exit if fn is shutil.rmtree]
+    assert len(removals) == 1
+    args, kwargs = removals[0]
+    location = Path(args[0])
+    assert location.parent == warehouse and location.name.startswith("nation_ctas_")
+    assert location.is_dir()
+    shutil.rmtree(*args, **kwargs)
+    assert not location.exists()
 
 
 def test_scratch_dir_is_fresh_per_call(monkeypatch, tmp_path):

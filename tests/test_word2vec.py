@@ -106,9 +106,10 @@ def test_embedding_pipeline_reference_corpus(spark):
     by_word = {r["word"]: r for r in rows}
     # minCount=1 and single-tokenization => model vocab == counted vocab.
     assert set(by_word) == set(counts)
+    for w, r in by_word.items():
+        assert r["token"] == first_token_id_py(w), w
     for w, r in list(by_word.items())[:50]:
         assert r["count"] == counts[w]
-        assert r["token"] == first_token_id_py(w)
         assert len(r["vector"]) == 100
         assert all(math.isfinite(v) for v in r["vector"])
     # Vectors are not all zero.
@@ -213,6 +214,28 @@ def test_cli_never_reads_its_output(spark, monkeypatch, tmp_path):
     assert read == [REFERENCE_INPUT]
 
 
+@pytest.mark.parametrize("backend", [False, True], ids=["offline", "bpe"])
+def test_cli_ships_the_package_only_for_the_token_udf(spark, monkeypatch, tmp_path, backend):
+    """Without a BPE backend the job runs no Python on the workers, so
+    the CLI writes no package zip and adds no file to the context; with
+    one it ships the package for the token-id pandas UDF."""
+    from mapreduce_word2vec_spark import __main__ as cli
+    from mapreduce_word2vec_spark import runtime, session
+    from mapreduce_word2vec_spark.functions import tokens
+    from mapreduce_word2vec_spark.operators import word2vec
+    from mapreduce_word2vec_spark.sources import writers
+
+    shipped = []
+    monkeypatch.setattr(tokens, "bpe_backend_resolves", lambda: backend)
+    monkeypatch.setattr(runtime, "ensure_workers_can_import", shipped.append)
+    monkeypatch.setattr(session, "get_spark", lambda **_: spark)
+    monkeypatch.setattr(word2vec, "embedding_pipeline", lambda *a: None)
+    monkeypatch.setattr(word2vec, "format_reference_output", lambda df: df)
+    monkeypatch.setattr(writers, "write_reference_csv", lambda df, path: None)
+    assert cli.main([REFERENCE_INPUT, str(tmp_path / "out")]) == 0
+    assert shipped == ([spark] if backend else [])
+
+
 # "global": one SGD partition per core (the default); "parity": one per
 # fixture file (3), the reference's one mapper per input file.
 @pytest.mark.parametrize("partitions", [[], ["--partitions", "3"]], ids=["global", "parity"])
@@ -241,26 +264,79 @@ def test_cli_writes_one_line_per_word_in_word_order(spark, monkeypatch, tmp_path
     assert words == sorted(counted)
 
 
+def _plan_lines(df: DataFrame) -> list[str]:
+    return df._jdf.queryExecution().executedPlan().toString().splitlines()
+
+
+def _line_of(plan: list[str], marker: str) -> int:
+    hits = [i for i, line in enumerate(plan) if marker in line]
+    assert len(hits) == 1, (marker, plan)
+    return hits[0]
+
+
+@pytest.fixture
+def no_bpe_backend(monkeypatch):
+    """Token ids as an environment without tiktoken or a vocab file
+    computes them."""
+    from mapreduce_word2vec_spark.functions import tokens
+
+    monkeypatch.setattr(tokens, "_ENCODING", None)
+    monkeypatch.setattr(tokens, "_RANKS", None)
+    monkeypatch.setattr(tokens, "_RANKS_RESOLVED", True)
+
+
 # "global": one SGD partition per core (the default); "parity": one per
 # fixture file (3), the reference's one mapper per input file.
 @pytest.mark.parametrize("num_partitions", [None, 3], ids=["global", "parity"])
-def test_token_udf_and_formatting_run_above_the_range_exchange(spark, num_partitions):
-    """One Python crossing per word: the token-id pandas UDF and the line
-    formatting sit above the job's one range exchange, so the range
-    sort's sampling job does not run them."""
+def test_token_id_and_formatting_run_above_the_range_exchange(
+    spark, no_bpe_backend, num_partitions
+):
+    """With no BPE backend the job never leaves the JVM: the plan has no
+    Python node, and the token-id expression and the line formatting sit
+    above the job's one range exchange, so the range sort's sampling job
+    does not run them."""
     out = format_reference_output(
         embedding_pipeline(spark, REFERENCE_INPUT, EngineConfig(layer_size=8), num_partitions)
     )
-    plan = out._jdf.queryExecution().executedPlan().toString().splitlines()
+    plan = _plan_lines(out)
+    assert [line for line in plan if "Python" in line] == []
+    exchange = _line_of(plan, "Exchange rangepartitioning")
+    assert _line_of(plan, "aggregate(") < exchange
+    assert _line_of(plan, "concat_ws(") < exchange
 
-    def line_of(marker: str) -> int:
-        hits = [i for i, line in enumerate(plan) if marker in line]
-        assert len(hits) == 1, (marker, plan)
-        return hits[0]
 
-    exchange = line_of("Exchange rangepartitioning")
-    assert line_of("ArrowEvalPython") < exchange
-    assert line_of("concat_ws(") < exchange
+def test_token_udf_runs_above_the_range_exchange_with_a_bpe_backend(
+    spark, monkeypatch, tmp_path
+):
+    """With a vocab file the token id is the pandas UDF: one Python
+    crossing per word above the range exchange, whose ids are the BPE
+    ids ``first_token_id_py`` computes. The vocab path reaches the
+    Python workers through the context's worker environment, as
+    ``spark.executorEnv`` carries it on a cluster."""
+    import base64
+
+    from mapreduce_word2vec_spark import runtime
+    from mapreduce_word2vec_spark.functions import tokens
+
+    ranks = {bytes([c]): 100 + i for i, c in enumerate(b"abcdefghijklmnopqrstuvwxyz")}
+    ranks.update({b"th": 1, b"the": 2, b"he": 3, b"in": 4})
+    vocab = tmp_path / "mini.tiktoken"
+    vocab.write_bytes(b"\n".join(base64.b64encode(t) + b" %d" % r for t, r in ranks.items()))
+    monkeypatch.setenv("MRW2V_CL100K_VOCAB", str(vocab))
+    monkeypatch.setitem(spark.sparkContext.environment, "MRW2V_CL100K_VOCAB", str(vocab))
+    monkeypatch.setattr(tokens, "_ENCODING", None)
+    monkeypatch.setattr(tokens, "_RANKS", None)
+    monkeypatch.setattr(tokens, "_RANKS_RESOLVED", False)
+    # The UDF's JVM function snapshots the worker environment once.
+    monkeypatch.setattr(tokens.first_token_id._unwrapped, "_judf_placeholder", None)
+    runtime.ensure_workers_can_import(spark)
+
+    out = embedding_pipeline(spark, REFERENCE_INPUT, EngineConfig(layer_size=8))
+    plan = _plan_lines(format_reference_output(out))
+    assert _line_of(plan, "ArrowEvalPython") < _line_of(plan, "Exchange rangepartitioning")
+    got = {r["word"]: r["token"] for r in out.select("word", "token").collect()}
+    assert got["the"] == 2
+    assert got == {w: first_token_id_py(w) for w in got}
 
 
 def _planted_pair_corpus(seed: int) -> tuple[list[str], list[tuple[str, str]]]:
