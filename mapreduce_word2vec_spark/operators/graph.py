@@ -6,10 +6,11 @@ generation (MinHash/SimHash/Jaccard pairs → clusters → one canonical
 doc per cluster).
 
 Spark-first shape: each iteration is one join + one aggregation, all
-Catalyst-planned. Loop inputs are persisted (released by the next
-catalog query or when the loop rolls past them) and iteration counts
-are fixed or bounded, so a released or lost cache block recomputes
-from a lineage of bounded depth. Connected components converges in
+Catalyst-planned. Loop inputs are persisted (released when the frame
+a catalog query returns is dropped, see ``runtime.scoped_build``, or
+when the loop rolls past them) and iteration counts are fixed or
+bounded, so a released or lost cache block recomputes from a lineage
+of bounded depth. Connected components converges in
 O(diameter) rounds (not O(V)) because labels propagate through BOTH
 edge directions each round; since that count depends on the data, each
 round is re-rooted on its own RDD so the plan does not nest one

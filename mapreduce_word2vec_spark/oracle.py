@@ -25,7 +25,7 @@ from dataclasses import dataclass, field
 import duckdb
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from mapreduce_word2vec_spark.sources.readers import TESTDATA_TABLES
@@ -313,23 +313,3 @@ def compare(
             ],
         )
     return OracleResult(name, len(s_rows), len(o_rows), not mismatches, mismatches)
-
-
-def check_all(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> list[OracleResult]:
-    from mapreduce_word2vec_spark.plans import catalog
-
-    qs = catalog.all_queries()
-    con = duckdb_connection(sf_dir)
-    results = []
-    for name, q in qs.items():
-        if names and name not in names:
-            continue
-        if q.oracle is None:
-            continue
-        try:
-            results.append(compare(name, q.fn(spark, sf_dir), q.oracle, con))
-        except Exception as e:  # pragma: no cover - debugging aid
-            results.append(OracleResult(name, -1, -1, False, [f"{type(e).__name__}: {e}"]))
-    return results

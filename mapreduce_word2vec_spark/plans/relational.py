@@ -1538,16 +1538,15 @@ def udtf_split_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF (table function): splits '3-MEDIUM'-style priority
     strings into (num, name) rows — the UDTF surface of the engine
     (lateral-join shape), deterministic so fully oracle-able."""
-    from pyspark.sql.functions import udtf
 
-    @udtf(returnType="o_orderkey bigint, priority_num int, priority_name string")
+    @F.udtf(returnType="o_orderkey bigint, priority_num int, priority_name string")
     class SplitPriority:
         def eval(self, key: int, prio: str):
             num, _, name = (prio or "").partition("-")
             yield key, (int(num) if num.isdigit() else None), name
 
     spark.udtf.register("split_priority", SplitPriority)
-    return spark.sql(
+    out = spark.sql(
         """
         SELECT t.o_orderkey, t.priority_num, t.priority_name
         FROM {orders} orders, LATERAL split_priority(o_orderkey, o_orderpriority) t
@@ -1555,6 +1554,8 @@ def udtf_split_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         """,
         orders=rt(spark, sf_dir, "orders"),
     )
+    spark.sql("DROP TEMPORARY FUNCTION split_priority")
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -3677,7 +3678,6 @@ def cte_recursive_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     and loop-bounded; at 100 TB only the pre-aggregation shuffles.
     The day is emitted as an ISO string so both engines hash the same
     canonical form."""
-    rt(spark, sf_dir, "orders").createOrReplaceTempView("orders_rcte_v")
     return spark.sql(
         """
         WITH RECURSIVE days AS (
@@ -3688,7 +3688,7 @@ def cte_recursive_series(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_day AS (
           SELECT CAST(o_orderdate AS DATE) AS day,
                  count(*) AS n, sum(o_totalprice) AS tp
-          FROM orders_rcte_v
+          FROM {orders}
           WHERE o_orderdate >= TIMESTAMP'1995-01-01'
             AND o_orderdate < TIMESTAMP'1995-04-01'
           GROUP BY CAST(o_orderdate AS DATE)
@@ -3697,7 +3697,8 @@ def cte_recursive_series(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(coalesce(p.n, 0) AS BIGINT) AS n_orders,
                round(coalesce(p.tp, 0), 6) AS total_price
         FROM days d LEFT JOIN per_day p ON p.day = d.day
-        """
+        """,
+        orders=rt(spark, sf_dir, "orders"),
     )
 
 
@@ -3887,23 +3888,23 @@ def subquery_not_in_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a dedicated join mode — not expressible as a plain LeftAnti),
     asserted in test_plans. At scale prefer NOT EXISTS: NAAJ must
     broadcast the whole subquery result to every task."""
-    rt(spark, sf_dir, "customer").createOrReplaceTempView("cust_nin_v")
-    rt(spark, sf_dir, "orders").createOrReplaceTempView("orders_nin_v")
     return spark.sql(
         """
         SELECT 'not_in' AS variant, CAST(count(*) AS BIGINT) AS n_customers
-        FROM cust_nin_v
+        FROM {customer}
         WHERE c_custkey NOT IN (
           SELECT CASE WHEN o_orderkey % 97 = 0 THEN NULL ELSE o_custkey END
-          FROM orders_nin_v)
+          FROM {orders})
         UNION ALL
         SELECT 'not_exists' AS variant, CAST(count(*) AS BIGINT) AS n_customers
-        FROM cust_nin_v c
+        FROM {customer} c
         WHERE NOT EXISTS (
-          SELECT 1 FROM orders_nin_v o
+          SELECT 1 FROM {orders} o
           WHERE (CASE WHEN o.o_orderkey % 97 = 0 THEN NULL ELSE o.o_custkey END)
                 = c.c_custkey)
-        """
+        """,
+        customer=rt(spark, sf_dir, "customer"),
+        orders=rt(spark, sf_dir, "orders"),
     )
 
 
@@ -4007,7 +4008,6 @@ def agg_percentile_within_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     p). Exact quantiles sort within groups; at 100 TB prefer
     approx_percentile (the sketch contract is registered as
     agg_approx_percentile) unless bit-exactness is required."""
-    rt(spark, sf_dir, "orders").createOrReplaceTempView("orders_pwg_v")
     return spark.sql(
         """
         SELECT o_orderpriority,
@@ -4017,8 +4017,9 @@ def agg_percentile_within_group(spark: SparkSession, sf_dir: str) -> DataFrame:
                  AS median_disc,
                round(percentile_cont(0.9) WITHIN GROUP (ORDER BY o_totalprice), 6)
                  AS p90_cont
-        FROM orders_pwg_v GROUP BY o_orderpriority
-        """
+        FROM {orders} GROUP BY o_orderpriority
+        """,
+        orders=rt(spark, sf_dir, "orders"),
     )
 
 
@@ -4088,7 +4089,6 @@ def table_ctas_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.strip("/"))
     tbl = f"nation_ctas_{tag}"
-    rt(spark, sf_dir, "nation").createOrReplaceTempView("nation_ctas_src")
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     # A DROP in a fresh session can't see a previous process's catalog
     # entry, but the managed LOCATION survives on disk and would fail
@@ -4102,12 +4102,14 @@ def table_ctas_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql(
         f"""CREATE TABLE {tbl} USING parquet AS
             SELECT n_nationkey, n_name, n_regionkey
-            FROM nation_ctas_src WHERE n_nationkey % 2 = 0"""
+            FROM {{src}} WHERE n_nationkey % 2 = 0""",
+        src=rt(spark, sf_dir, "nation"),
     )
     spark.sql(
         f"""INSERT INTO {tbl}
             SELECT n_nationkey, n_name, n_regionkey
-            FROM nation_ctas_src WHERE n_nationkey % 2 = 1"""
+            FROM {{src}} WHERE n_nationkey % 2 = 1""",
+        src=rt(spark, sf_dir, "nation"),
     )
     return spark.table(tbl)
 
@@ -4164,17 +4166,17 @@ def sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     folding and filter pushdown see the bound literal exactly as if
     it were inlined (pushdown asserted via the same plan checks as
     the static twin)."""
-    rt(spark, sf_dir, "orders").createOrReplaceTempView("orders_param_v")
     return spark.sql(
         """
         SELECT o_orderpriority,
                CAST(count(*) AS BIGINT) AS n_orders,
                round(sum(o_totalprice), 6) AS total
-        FROM orders_param_v
+        FROM {orders}
         WHERE o_totalprice > :minp AND o_orderstatus = :status
         GROUP BY o_orderpriority
         """,
         args={"minp": 250000, "status": "O"},
+        orders=rt(spark, sf_dir, "orders"),
     )
 
 
@@ -4237,17 +4239,15 @@ def agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP ordering is what makes the result deterministic and
     hash-comparable — a bare collect_list+concat_ws inherits
     partition arrival order and would flap across runs/engines."""
-    sup = rt(spark, sf_dir, "supplier")
-    nat = rt(spark, sf_dir, "nation")
-    j = sup.join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey)
-    j.createOrReplaceTempView("supp_nation_la_v")
     return spark.sql(
         """
-        SELECT n_name,
+        SELECT /*+ BROADCAST(n) */ n_name,
                listagg(s_name, '|') WITHIN GROUP (ORDER BY s_name) AS suppliers,
                CAST(count(*) AS BIGINT) AS n_supp
-        FROM supp_nation_la_v GROUP BY n_name
-        """
+        FROM {supplier} JOIN {nation} n ON s_nationkey = n_nationkey GROUP BY n_name
+        """,
+        supplier=rt(spark, sf_dir, "supplier"),
+        nation=rt(spark, sf_dir, "nation"),
     )
 
 
@@ -4272,18 +4272,16 @@ def scalar_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression would opaque them; the oracle reproduces the grouping
     with explicit lower() (DuckDB's engine-level equivalent), so the
     collation must match case-folding exactly."""
-    c = rt(spark, sf_dir, "customer")
-    mixed = c.select(
-        F.when(F.col("c_custkey") % 2 == 0, F.upper("c_mktsegment"))
-        .otherwise(F.lower("c_mktsegment"))
-        .alias("seg")
-    )
-    mixed.createOrReplaceTempView("mixed_coll_v")
     return spark.sql(
         """
         SELECT min(lower(seg)) AS segment, CAST(count(*) AS BIGINT) AS n
-        FROM mixed_coll_v GROUP BY seg COLLATE UTF8_LCASE
-        """
+        FROM {mixed} GROUP BY seg COLLATE UTF8_LCASE
+        """,
+        mixed=rt(spark, sf_dir, "customer").select(
+            F.when(F.col("c_custkey") % 2 == 0, F.upper("c_mktsegment"))
+            .otherwise(F.lower("c_mktsegment"))
+            .alias("seg")
+        ),
     )
 
 
@@ -6407,22 +6405,24 @@ def sql_scalar_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     serialization boundary (the opposite trade of every Python UDF in
     this catalog). The oracle applies the expression directly,
     proving the UDF call is transparent to the result."""
-    rt(spark, sf_dir, "lineitem").createOrReplaceTempView("li_sqludf_src")
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION line_charge("
         "p DOUBLE, d DOUBLE, t DOUBLE) RETURNS DOUBLE "
         "RETURN p * (1 - d) * (1 + t)"
     )
-    return spark.sql(
+    out = spark.sql(
         """
         SELECT l_returnflag,
                round(sum(line_charge(l_extendedprice, l_discount, l_tax)), 6)
                  AS total_charge,
                count(*) AS n_items
-        FROM li_sqludf_src
+        FROM {lineitem}
         GROUP BY l_returnflag
-        """
+        """,
+        lineitem=rt(spark, sf_dir, "lineitem"),
     )
+    spark.sql("DROP TEMPORARY FUNCTION line_charge")
+    return out
 
 
 @register(
@@ -6444,16 +6444,16 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     logical plan as the nested form (the oracle), so this is a
     front-end surface check: filter still pushes to the scan, the
     aggregate still splits partial/final."""
-    rt(spark, sf_dir, "orders").createOrReplaceTempView("orders_pipe_src")
     return spark.sql(
         """
-        FROM orders_pipe_src
+        FROM {orders}
         |> WHERE o_orderstatus = 'F'
         |> AGGREGATE count(*) AS n_orders,
                      round(sum(o_totalprice), 6) AS revenue
            GROUP BY o_orderpriority
         |> ORDER BY o_orderpriority
-        """
+        """,
+        orders=rt(spark, sf_dir, "orders"),
     )
 
 
@@ -6543,7 +6543,7 @@ def udtf_polymorphic(spark: SparkSession, sf_dir: str) -> DataFrame:
     Terminal `terminate()` emits the fold — exercising the
     eval/terminate accumulation contract — and the kernel is
     SQL-reproducible so the whole crossing is hash-checked."""
-    from pyspark.sql.functions import AnalyzeArgument, AnalyzeResult, udtf
+    from pyspark.sql.functions import AnalyzeArgument, AnalyzeResult
     from pyspark.sql.types import (
         DoubleType,
         StringType,
@@ -6585,15 +6585,16 @@ def udtf_polymorphic(spark: SparkSession, sf_dir: str) -> DataFrame:
                     lo, hi = self.state[name]
                     yield name, lo, hi
 
-    spark.udtf.register("profile_cols", udtf(ProfileCols))
-    rt(spark, sf_dir, "orders").createOrReplaceTempView("orders_poly_src")
+    spark.udtf.register("profile_cols", F.udtf(ProfileCols))
     out = spark.sql(
         """
         SELECT t.col, t.min_val, t.max_val
-        FROM orders_poly_src,
+        FROM {orders},
              LATERAL profile_cols(o_orderkey, o_custkey, o_totalprice) t
-        """
+        """,
+        orders=rt(spark, sf_dir, "orders"),
     )
+    spark.sql("DROP TEMPORARY FUNCTION profile_cols")
     # one terminate() per partition → per-partition partials; fold them
     return out.groupBy("col").agg(
         F.when(F.col("col") == "o_totalprice", F.round(F.min("min_val"), 6))
@@ -6621,19 +6622,21 @@ def sql_session_variable(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholds into query text (injection-safe, plan-cached by
     value). Constant-folded at plan time, so the filter still pushes
     to the scan; the oracle inlines the same constants."""
-    rt(spark, sf_dir, "orders").createOrReplaceTempView("orders_var_src")
     spark.sql("DECLARE OR REPLACE VARIABLE price_floor DOUBLE DEFAULT 0.0")
     spark.sql("DECLARE OR REPLACE VARIABLE status_wanted STRING DEFAULT 'F'")
-    spark.sql("SET VAR price_floor = 150000.0")
-    spark.sql("SET VAR status_wanted = 'O'")
-    return spark.sql(
+    spark.sql("SET VAR price_floor = 150000.0, status_wanted = 'O'")
+    out = spark.sql(
         """
         SELECT o_orderpriority, count(*) AS n_orders
-        FROM orders_var_src
+        FROM {orders}
         WHERE o_totalprice > price_floor AND o_orderstatus = status_wanted
         GROUP BY o_orderpriority
-        """
+        """,
+        orders=rt(spark, sf_dir, "orders"),
     )
+    spark.sql("DROP TEMPORARY VARIABLE price_floor")
+    spark.sql("DROP TEMPORARY VARIABLE status_wanted")
+    return out
 
 
 # --- as-of join with staleness tolerance -----------------------------------
@@ -6855,8 +6858,10 @@ def udtf_table_argument(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF consuming TABLE(orders) PARTITION BY o_orderstatus
     ORDER BY (o_orderdate, o_orderkey): per-partition row count plus
     the first/last order key in delivery order."""
-    from pyspark.sql.functions import udtf
 
+    @F.udtf(
+        returnType="o_orderstatus string, n_orders bigint, first_key bigint, last_key bigint"
+    )
     class StatusProfile:
         def __init__(self):
             self.status = None
@@ -6875,26 +6880,19 @@ def udtf_table_argument(spark: SparkSession, sf_dir: str) -> DataFrame:
             if self.n:
                 yield self.status, self.n, self.first, self.last
 
-    spark.udtf.register(
-        "status_profile",
-        udtf(
-            StatusProfile,
-            returnType=(
-                "o_orderstatus string, n_orders bigint,"
-                " first_key bigint, last_key bigint"
-            ),
-        ),
-    )
-    rt(spark, sf_dir, "orders").createOrReplaceTempView("orders_tblarg_src")
-    return spark.sql(
+    spark.udtf.register("status_profile", StatusProfile)
+    out = spark.sql(
         """
         SELECT * FROM status_profile(
-          TABLE(orders_tblarg_src)
+          TABLE({orders})
           PARTITION BY o_orderstatus
           ORDER BY (o_orderdate, o_orderkey)
         )
-        """
+        """,
+        orders=rt(spark, sf_dir, "orders"),
     )
+    spark.sql("DROP TEMPORARY FUNCTION status_profile")
+    return out
 
 
 # --- SQL scripting (BEGIN/DECLARE/WHILE) -----------------------------------
@@ -6933,24 +6931,24 @@ def udtf_table_argument(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sql_scripting_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL-scripting WHILE loop: exponential search for the smallest
     100·2^k revenue threshold that fewer than 1% of orders exceed."""
-    rt(spark, sf_dir, "orders").createOrReplaceTempView("orders_script_src")
     return spark.sql(
         """
         BEGIN
           DECLARE t DOUBLE DEFAULT 100.0;
           DECLARE n BIGINT DEFAULT 0;
           DECLARE total BIGINT DEFAULT 0;
-          SET total = (SELECT count(*) FROM orders_script_src);
-          SET n = (SELECT count(*) FROM orders_script_src WHERE o_totalprice > t);
+          SET total = (SELECT count(*) FROM {orders});
+          SET n = (SELECT count(*) FROM {orders} WHERE o_totalprice > t);
           WHILE n * 100 >= total DO
             SET t = t * 2;
-            SET n = (SELECT count(*) FROM orders_script_src WHERE o_totalprice > t);
+            SET n = (SELECT count(*) FROM {orders} WHERE o_totalprice > t);
           END WHILE;
           SELECT CAST(t AS DOUBLE) AS threshold,
                  CAST(n AS BIGINT) AS n_above,
                  CAST(total AS BIGINT) AS n_total;
         END
-        """
+        """,
+        orders=rt(spark, sf_dir, "orders"),
     )
 
 
@@ -6976,17 +6974,19 @@ def sql_execute_immediate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXECUTE IMMEDIATE with a USING bind: per-priority rollup of
     'F'-status orders from a dynamically supplied statement."""
     rt(spark, sf_dir, "orders").createOrReplaceTempView("orders_execimm_src")
-    spark.sql("DECLARE OR REPLACE VARIABLE stmt_execimm STRING")
     spark.sql(
-        """SET VAR stmt_execimm =
+        """DECLARE OR REPLACE VARIABLE stmt_execimm STRING DEFAULT
            'SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
                    round(sum(o_totalprice), 6) AS revenue
             FROM orders_execimm_src WHERE o_orderstatus = ?
-            GROUP BY o_orderpriority'
-        """
+            GROUP BY o_orderpriority'"""
     )
     spark.sql("DECLARE OR REPLACE VARIABLE status_execimm STRING DEFAULT 'F'")
-    return spark.sql("EXECUTE IMMEDIATE stmt_execimm USING status_execimm")
+    out = spark.sql("EXECUTE IMMEDIATE stmt_execimm USING status_execimm")
+    spark.catalog.dropTempView("orders_execimm_src")
+    spark.sql("DROP TEMPORARY VARIABLE stmt_execimm")
+    spark.sql("DROP TEMPORARY VARIABLE status_execimm")
+    return out
 
 
 # --- OTIF fulfillment KPI --------------------------------------------------

@@ -48,12 +48,14 @@ def get_spark(
     Designed so the same code path works on ``local[N]`` and on a
     1000-executor cluster: everything scale-sensitive (shuffle
     partition count, AQE, broadcast threshold) is config, not code.
+    The default master is ``local[N]`` with N shuffle partitions, where
+    N is ``$SPARK_GRAFT_CPUS`` or else the CPUs this process may run on.
 
     ``spark.sql.codegen.cache.maxEntries`` is a static setting: like
     the driver memory, it takes effect only when this call creates the
     session, not when ``getOrCreate`` returns one that already exists.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

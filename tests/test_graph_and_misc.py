@@ -138,6 +138,39 @@ def test_codegen_classes_survive_other_queries(spark):
     assert again <= 0.1 * first, (first, again)
 
 
+def test_default_session_sized_to_cpu_affinity(monkeypatch):
+    """Without ``SPARK_GRAFT_CPUS`` the session runs one task slot and
+    one shuffle partition per CPU this process may run on."""
+    from types import SimpleNamespace
+
+    from mapreduce_word2vec_spark import session
+
+    seen = {}
+
+    class Builder:
+        def master(self, m):
+            seen["master"] = m
+            return self
+
+        def appName(self, _):
+            return self
+
+        def config(self, k, v):
+            seen[k] = v
+            return self
+
+        def getOrCreate(self):
+            return SimpleNamespace(sparkContext=SimpleNamespace(setLogLevel=lambda _: None))
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(session.os, "sched_getaffinity", lambda _: {0, 1, 2})
+    monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=Builder()))
+    session.get_spark()
+    assert seen["master"] == "local[3]"
+    assert seen["spark.sql.shuffle.partitions"] == "3"
+    assert seen["spark.default.parallelism"] == "3"
+
+
 def test_approx_count_distinct_error_bound(spark):
     """HLL++ at rsd=0.02 stays within 5% of the exact distinct count
     (the property check backing the rows-only agg_approx_distinct)."""

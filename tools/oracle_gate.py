@@ -35,8 +35,6 @@ def main() -> int:
     # and the 1g default aborts the harness-side toPandas.
     spark = get_spark(
         app_name="oracle-gate",
-        master="local[16]",
-        shuffle_partitions=16,
         # Progress bars write \r fragments that glue onto the [OK]
         # lines the committed GATE logs are grepped by — keep them out.
         extra_conf={
