@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Benchmark harness (driver contract).
 
-Runs the engine's headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
-JSON line::
+Runs the engine's headline queries at ``$SPARK_GRAFT_SF_DIR`` (default:
+the sf0.1 test data) on ``session.get_spark``'s default ``local[N]``
+(N = ``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on) and
+prints ONE JSON line::
 
     {"metric": ..., "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": <float>}
@@ -79,7 +80,6 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
@@ -88,8 +88,6 @@ def main() -> None:
 
     spark = get_spark(
         app_name="mapreduce-word2vec-spark-bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
         # Console progress bars (\r[Stage ...]) share the driver's tail
         # capture with the final JSON line; silence them so the line is
         # never crowded out of the 2000-char tail buffer (BENCH_r04
@@ -123,10 +121,11 @@ def main() -> None:
     def _calibrate() -> float:
         from pyspark.sql import functions as F
 
+        slices = spark.sparkContext.defaultParallelism
         reps = []
         for _ in range(3):
             t0 = time.perf_counter()
-            spark.range(0, 200_000_000, 1, int(cpus)).select(
+            spark.range(0, 200_000_000, 1, slices).select(
                 F.sum(F.xxhash64("id"))
             ).write.format("noop").mode("overwrite").save()
             reps.append(time.perf_counter() - t0)

@@ -209,8 +209,11 @@ def pagerank(
     iteration: ONE join of the rank vector onto the out-edge list and
     ONE aggregation back onto nodes — both hash-partitioned on node id,
     with a partial sum below each exchange; the plan grows linearly
-    with the fixed iteration count. Dangling nodes cannot occur
-    (symmetrized edges give every node degree ≥ 1)."""
+    with the fixed iteration count. The node count N is a scalar
+    subquery over the degree table, so building the frame runs no Spark
+    job; the caller's action computes N once and reuses it in every
+    iteration. Dangling nodes cannot occur (symmetrized edges give
+    every node degree ≥ 1)."""
     # Persisted for the same reason as in connected_components: the
     # edge list and degree table feed every iteration; without the
     # persist each round re-runs the full upstream pair generation.
@@ -221,18 +224,9 @@ def pagerank(
     # 5 iterations save 5 joins; rank/deg division is unchanged, so
     # the result stays bit-identical to the unrolled SQL oracle.
     sym_deg = tracked_persist(sym.join(deg, "s"))
-    # N collected ONCE as a scalar (r9): the former 1-row n_nodes
-    # aggregate rode a crossJoin(broadcast(...)) into the init AND
-    # every iteration, costing one BroadcastExchange + BNLJ stage per
-    # power iteration. A single bounded driver count off the
-    # already-persisted degree table replaces all of them with
-    # literals; the division stays in the JVM on the same operand
-    # types, so ranks are bit-identical.
-    n_val = deg.count()
-    ranks = deg.select(
-        F.col("s").alias("node"), (F.lit(1.0) / F.lit(n_val)).alias("rank")
-    )
-    base = F.lit(1.0 - damping) / F.lit(n_val)
+    n = deg.select(F.count("*")).scalar()
+    ranks = deg.select(F.col("s").alias("node"), (F.lit(1.0) / n).alias("rank"))
+    base = F.lit(1.0 - damping) / n
     for _ in range(iterations):
         contribs = (
             sym_deg.join(ranks, F.col("s") == F.col("node"))

@@ -848,14 +848,9 @@ def dedup_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ngram_jaccard_pairs,
     )
 
-    from mapreduce_word2vec_spark.runtime import tracked_persist
-
     docs = read_testdata(spark, sf_dir, "documents")
-    # Each pair table feeds TWO consumers (its own count + the hit
-    # join); persist so the shingle self-join and the banded bucket
-    # expansion run once, not twice (the dedup_lsh_param_sweep lesson).
-    exact = tracked_persist(ngram_jaccard_pairs(docs, threshold=0.6).select("id_a", "id_b"))
-    lsh = tracked_persist(minhash_lsh_pairs(docs, threshold=0.5).select("id_a", "id_b"))
+    exact = ngram_jaccard_pairs(docs, threshold=0.6).select("id_a", "id_b")
+    lsh = minhash_lsh_pairs(docs, threshold=0.5).select("id_a", "id_b")
     hit = exact.join(lsh, ["id_a", "id_b"])
     return (
         exact.agg(F.count("*").alias("n_exact"))
@@ -2008,8 +2003,6 @@ def graph_walk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-step deterministic random walks over the co-purchase graph:
     (start, step, visited) positive pairs, next hop = min-md5
     neighbor."""
-    from mapreduce_word2vec_spark.runtime import tracked_persist
-
     ev = read_testdata(spark, sf_dir, "events")
     p = (
         ev.where(F.col("event_type") == "purchase")
@@ -2024,10 +2017,8 @@ def graph_walk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id_a", "id_b")
         .distinct()
     )
-    adj = tracked_persist(
-        edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")).unionByName(
-            edges.select(F.col("id_b").alias("u"), F.col("id_a").alias("v"))
-        )
+    adj = edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")).unionByName(
+        edges.select(F.col("id_b").alias("u"), F.col("id_a").alias("v"))
     )
     def hop(node_col: str, step: int) -> F.Column:
         return F.md5(

@@ -478,20 +478,7 @@ def split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DEPRECATED (unregistered round 6): ``sampleBy(lang)`` stratified
-    sample. Bernoulli sampling is seed-deterministic but partition-
-    layout-dependent, so it could never be value-checked against an
-    oracle; superseded in round 2 by ``sample_stratified_hash`` (the
-    deterministic, engine-independent variant below). Kept as a plain
-    helper for the stratum-rate property test
-    (tests/test_graph_and_misc.py)."""
-    docs = read_testdata(spark, sf_dir, "documents")
-    fractions = {"en": 0.2, "es": 0.5, "fr": 0.5, "de": 0.5, "zh": 1.0}
-    return docs.sampleBy("lang", fractions, seed=42).select("doc_id", "lang", "source")
-
-
-# Per-language admission rate (percent) for the deterministic variant:
+# Per-language admission rate (percent) for sample_stratified_hash:
 # downsample the majority language, keep the rest — corpus rebalancing.
 _STRATA_PCT = {"en": 20, "es": 50, "fr": 50, "de": 50, "zh": 100}
 

@@ -374,37 +374,6 @@ def test_stream_stream_join(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_stratified_sample_rates_and_determinism(spark):
-    """sampleBy: per-stratum rates near the requested fractions, same
-    seed → identical sample, and the deterministic hash-mod variants
-    agree with a Python recomputation."""
-    from mapreduce_word2vec_spark.plans.text_queries import sample_stratified
-    from tests.conftest import SF_ORACLE
-
-    q = sample_stratified
-    s1 = q(spark, SF_ORACLE).collect()
-    s2 = q(spark, SF_ORACLE).collect()
-    assert sorted(r["doc_id"] for r in s1) == sorted(r["doc_id"] for r in s2)
-
-    from mapreduce_word2vec_spark.sources.readers import read_testdata
-
-    totals = {
-        r["lang"]: r["n"]
-        for r in read_testdata(spark, SF_ORACLE, "documents")
-        .groupBy("lang").agg(__import__("pyspark.sql.functions", fromlist=["F"]).count("*").alias("n"))
-        .collect()
-    }
-    from collections import Counter
-
-    got = Counter(r["lang"] for r in s1)
-    fractions = {"en": 0.2, "es": 0.5, "fr": 0.5, "de": 0.5, "zh": 1.0}
-    for lang, frac in fractions.items():
-        rate = got.get(lang, 0) / totals[lang]
-        assert abs(rate - frac) < 0.25, (lang, rate, frac)
-    # zh stratum at fraction 1.0 must be complete
-    assert got["zh"] == totals["zh"]
-
-
 def test_hash_mod_sample_python_parity(spark):
     """The hash-mod sample/split is reproducible outside Spark."""
     from mapreduce_word2vec_spark.plans import catalog
@@ -703,7 +672,9 @@ def test_pagerank_partial_sum_below_every_iteration_exchange(spark):
     """Map-side combine before every PageRank iteration exchange: each
     iteration's partial sum over node2 sits directly under an
     ENSURE_REQUIREMENTS hash exchange on node2, so the shuffle carries
-    one row per (map task, node) instead of one per edge."""
+    one row per (map task, node) instead of one per edge. The node
+    count is one scalar subquery: the executed plan runs it once and
+    every iteration reads it as a ReusedSubquery."""
     import re
 
     from mapreduce_word2vec_spark.plans import catalog
@@ -719,6 +690,32 @@ def test_pagerank_partial_sum_below_every_iteration_exchange(spark):
         plan,
     )
     assert len(combined) == _PR_ITERS, plan
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    final = final.split("\n+- == Initial Plan ==")[0]  # the outer final plan
+    refs = re.findall(r"(ReusedSubquery )?Subquery subquery#(\d+)", final)
+    assert len({sid for _, sid in refs}) == 1 and sum(1 for r, _ in refs if r) == _PR_ITERS, final
+
+
+def test_pagerank_build_runs_no_spark_job(spark):
+    """Building graph_pagerank's frame runs no Spark job: the node
+    count is a scalar subquery that the caller's action computes. The
+    first build reads each table's parquet schema (a per-session job),
+    so the jobs are counted on the second."""
+    from mapreduce_word2vec_spark.plans import catalog
+    from tests.conftest import SF_ORACLE
+
+    build = catalog.all_queries()["graph_pagerank"].fn
+    build(spark, SF_ORACLE)
+    sc = spark.sparkContext
+    group = "test_pagerank_build_runs_no_spark_job"
+    sc.setJobGroup(group, "warm graph_pagerank build")
+    try:
+        build(spark, SF_ORACLE)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_sample_bucket_overflow_safe(spark):
