@@ -23,8 +23,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Java/RE2 ASCII non-word-char run — the reference's split regex (M:102).
-SPLIT_REGEX = r"\W+"
 # Net effect of the reference's isLetter filter after ASCII split (M:102).
 WORD_REGEX = r"^[a-z]+$"
 

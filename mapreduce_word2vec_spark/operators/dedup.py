@@ -247,6 +247,27 @@ def minhash_signatures(
     return sh.groupBy("doc_id").agg(*mins).select("doc_id", sig.alias("sig"))
 
 
+def _minhash_bands(sigs: DataFrame, payload: list[str]) -> DataFrame:
+    """(doc_id, *payload, band, key): each signature split into
+    ``MINHASH_BANDS`` bands of equal slices, one row per band — the
+    input :func:`_bucket_pairs` expects."""
+    rows_per_band = len(MINHASH_COEFFS) // MINHASH_BANDS
+    bk = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(i).alias("band"),
+                    F.slice("sig", i * rows_per_band + 1, rows_per_band).alias("key"),
+                )
+                for i in range(MINHASH_BANDS)
+            ]
+        )
+    )
+    return sigs.select("doc_id", *payload, bk.alias("bk")).select(
+        "doc_id", *payload, F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+    )
+
+
 def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.5, **kw) -> DataFrame:
     """Banded-LSH candidate pairs + estimated Jaccard.
 
@@ -254,23 +275,7 @@ def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.5, **kw) -> DataFrame:
     the estimate is the fraction of equal signature slots. Band join
     keys are (band_idx, sig-slice) so the shuffle carries signatures,
     never documents."""
-    sigs = minhash_signatures(df, **kw)
-    rows_per_band = len(MINHASH_COEFFS) // MINHASH_BANDS
-    bands = sigs.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.slice("sig", i * rows_per_band + 1, rows_per_band).alias("key"),
-                    )
-                    for i in range(MINHASH_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "sig", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    bands = _minhash_bands(minhash_signatures(df, **kw), ["sig"])
     cand = _bucket_pairs(bands, ["sig"])
     est = F.aggregate(
         F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
@@ -539,23 +544,4 @@ def minhash_candidates(
     pair count is bounded by bucket sizes (high-entropy 4-hash keys),
     not by corpus length quantiles."""
     sigs = minhash_signatures(df, id_col=id_col, text_col=text_col)
-    rows_per_band = len(MINHASH_COEFFS) // MINHASH_BANDS
-    bands = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.slice("sig", i * rows_per_band + 1, rows_per_band).alias(
-                            "key"
-                        ),
-                    )
-                    for i in range(MINHASH_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select(
-        "doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
-    return _bucket_pairs(bands, [])
+    return _bucket_pairs(_minhash_bands(sigs, []), [])

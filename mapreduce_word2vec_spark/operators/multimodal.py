@@ -9,14 +9,11 @@ partitioning (media bytes are column-pruned away unless the operator
 actually touches them).
 
 The actual codecs (PIL/ffmpeg/torchaudio) are NOT in this
-environment, so the decode kernel is stubbed two ways:
-
-* :func:`decode_media` with ``impl="real"`` raises
-  ``NotImplementedError`` — the marked integration point;
-* ``impl="fake"`` (default) runs a deterministic byte-level kernel
-  (16-bin byte histogram) through the SAME plumbing: same schema,
-  same Arrow batching, same partition behavior — so everything
-  Spark-side is real and tested even though the codec is fake.
+environment, so :func:`decode_media` runs a deterministic byte-level
+kernel (16-bin byte histogram) in the codec's place, through the
+plumbing a real codec would use: same schema, same Arrow batching,
+same partition behavior — so everything Spark-side is real and tested
+even though the codec is a stand-in.
 """
 
 from __future__ import annotations
@@ -29,11 +26,6 @@ from pyspark.sql import functions as F
 
 MEDIA_FORMATS = ("png", "jpeg", "webp")
 N_HIST_BINS = 16
-
-MEDIA_SCHEMA = (
-    "doc_id long, payload binary, "
-    "meta struct<format: string, width: int, height: int>"
-)
 
 
 def attach_media_expr(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -69,36 +61,20 @@ def _fake_histogram(payload: bytes) -> list[float]:
     return [c / total for c in counts]
 
 
-def decode_media(
-    media: DataFrame,
-    impl: str = "fake",
-    batch_note_col: bool = False,
-) -> DataFrame:
-    """Decode/feature-extract: (doc_id, meta) + features array.
-
-    ``impl="real"`` is the integration point for an actual codec —
-    deliberately unimplemented here (no imaging libs in this
-    environment)."""
-    if impl == "real":
-        raise NotImplementedError(
-            "real media decode requires an imaging/audio codec (PIL/ffmpeg); "
-            "not available in this environment — use impl='fake' for the "
-            "deterministic test kernel with identical Spark plumbing"
-        )
-    if impl != "fake":
-        raise ValueError(f"unknown impl {impl!r}")
-
+def decode_media(media: DataFrame) -> DataFrame:
+    """Decode/feature-extract: (doc_id, meta) + features array, from
+    the byte-histogram stand-in kernel (the integration point for an
+    actual codec)."""
     out_schema = (
         "doc_id long, format string, width int, height int, "
-        f"features array<double>, n_bytes long"
-        + (", batch_rows long" if batch_note_col else "")
+        "features array<double>, n_bytes long"
     )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
-            out = pd.DataFrame(
+            yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
                     "format": pdf["meta"].map(lambda m: m["format"]),
@@ -108,9 +84,6 @@ def decode_media(
                     "n_bytes": pdf["payload"].map(len),
                 }
             )
-            if batch_note_col:
-                out["batch_rows"] = len(pdf)
-            yield out
 
     return media.mapInPandas(kernel, schema=out_schema)
 

@@ -44,25 +44,33 @@ _SQL_SHINGLES = (
     "i -> ws[i] || ' ' || ws[i + 1] || ' ' || ws[i + 2]))"
 )
 
+# The toks -> sh -> sizes -> shared chain: every document pair sharing
+# a 3-token shingle, with the shared count and both distinct-shingle
+# set sizes — the oracle twin of operators.dedup._shared_shingle_counts,
+# which every shingle-overlap query (Jaccard, containment, the edge
+# list below) composes.
+_SQL_SHARED_SHINGLES = f"""toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
+    sh AS (SELECT doc_id, unnest({_SQL_SHINGLES}) AS shingle FROM toks),
+    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+    shared AS (
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
+      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      GROUP BY 1, 2
+    )"""
+
 # The exact-Jaccard >= 0.6 near-dup edge list over 3-token shingles —
 # the ONE definition every graph/cluster oracle composes (pagerank,
-# k-core, LPA, triangles, BFS, clusters, survivors, split-leakage's
-# pairs are the same derivation); a threshold or shingle change edits
-# exactly one place. MATERIALIZED is load-bearing at scale: DuckDB
-# inlines plain CTEs per reference, so the unrolled iterative oracles
-# (pagerank's pr0..pr5, k-core's rounds, LPA) would re-run the
-# quadratic shared-shingle join once per iteration — measured 23.5 s
-# -> 2.2 s at sf0.1, and the difference between a finished gate and
-# an 80 GB temp-spill abort at the sf1 probe.
+# k-core, LPA, triangles, BFS, clusters, survivors, the LSH evaluations'
+# ground truth); a threshold or shingle change edits exactly one place.
+# The chain's CTEs are scoped inside the body, so the edge list composes
+# with _minhash_sig_sql()'s own toks. MATERIALIZED is load-bearing at
+# scale: DuckDB inlines plain CTEs per reference, so the unrolled
+# iterative oracles (pagerank's pr0..pr5, k-core's rounds, LPA) would
+# re-run the quadratic shared-shingle join once per iteration —
+# measured 23.5 s -> 2.2 s at sf0.1, and the difference between a
+# finished gate and an 80 GB temp-spill abort at the sf1 probe.
 _SQL_EDGES = f"""edges AS MATERIALIZED (
-      WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
-      sh AS (SELECT doc_id, unnest({_SQL_SHINGLES}) AS shingle FROM toks),
-      sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-      shared AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-      )
+      WITH {_SQL_SHARED_SHINGLES}
       SELECT id_a, id_b FROM shared
       JOIN sizes sa ON id_a = sa.doc_id JOIN sizes sb ON id_b = sb.doc_id
       WHERE shared * 1.0 / (sa.n_sh + sb.n_sh - shared) >= 0.6
@@ -98,14 +106,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_ngram_jaccard",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
-    sh AS (SELECT doc_id, unnest({_SQL_SHINGLES}) AS shingle FROM toks),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    shared AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
+    WITH {_SQL_SHARED_SHINGLES}
     SELECT id_a, id_b,
            shared * 1.0 / (sa.n_sh + sb.n_sh - shared) AS jaccard
     FROM shared
@@ -139,16 +140,21 @@ def _minhash_sig_sql() -> str:
 _ROWS_PER_BAND = len(MINHASH_COEFFS) // MINHASH_BANDS
 _N_HASH = len(MINHASH_COEFFS)
 
-
-@register(
-    "dedup_minhash_lsh",
-    oracle=f"""
-    WITH {_minhash_sig_sql()},
+# Every signature split into MINHASH_BANDS bands of _ROWS_PER_BAND
+# slots, one (doc_id, sig, band, key) row per band — the oracle twin of
+# operators.dedup._minhash_bands, shared by the fixed-banding oracles.
+_SQL_MINHASH_BANDS = f"""{_minhash_sig_sql()},
     bands AS (
       SELECT doc_id, sig, band,
              sig[band * {_ROWS_PER_BAND} + 1 : band * {_ROWS_PER_BAND} + {_ROWS_PER_BAND}] AS key
       FROM sig CROSS JOIN (VALUES {_SQL_MINHASH_BAND_VALUES}) AS t(band)
-    ),
+    )"""
+
+
+@register(
+    "dedup_minhash_lsh",
+    oracle=f"""
+    WITH {_SQL_MINHASH_BANDS},
     cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
                       a.sig AS sig_a, b.sig AS sig_b
@@ -260,14 +266,7 @@ def dedup_mllib_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_mllib_minhash_recall",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
-    sh AS (SELECT doc_id, unnest({_SQL_SHINGLES}) AS shingle FROM toks),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    shared AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
+    WITH {_SQL_SHARED_SHINGLES}
     SELECT CAST(count(*) AS BIGINT) AS n_exact,
            true AS recall_ok,
            true AS precision_ok
@@ -790,25 +789,8 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_lsh_eval",
     oracle=f"""
-    WITH toks_e AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
-    sh_e AS (SELECT doc_id, unnest({_SQL_SHINGLES}) AS shingle FROM toks_e),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh_e GROUP BY doc_id),
-    shared AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-      FROM sh_e a JOIN sh_e b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    exact AS (
-      SELECT id_a, id_b FROM shared
-      JOIN sizes sa ON id_a = sa.doc_id JOIN sizes sb ON id_b = sb.doc_id
-      WHERE shared * 1.0 / (sa.n_sh + sb.n_sh - shared) >= 0.6
-    ),
-    {_minhash_sig_sql().strip().rstrip(',')},
-    bands AS (
-      SELECT doc_id, sig, band,
-             sig[band * {_ROWS_PER_BAND} + 1 : band * {_ROWS_PER_BAND} + {_ROWS_PER_BAND}] AS key
-      FROM sig CROSS JOIN (VALUES {_SQL_MINHASH_BAND_VALUES}) AS t(band)
-    ),
+    WITH {_SQL_EDGES},
+    {_SQL_MINHASH_BANDS},
     lsh AS (
       SELECT id_a, id_b FROM (
         SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -822,9 +804,9 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     m AS (
       SELECT
-        (SELECT count(*) FROM exact) AS n_exact,
+        (SELECT count(*) FROM edges) AS n_exact,
         (SELECT count(*) FROM lsh) AS n_lsh,
-        (SELECT count(*) FROM exact JOIN lsh USING (id_a, id_b)) AS n_hit
+        (SELECT count(*) FROM edges JOIN lsh USING (id_a, id_b)) AS n_hit
     )
     SELECT n_exact, n_lsh, n_hit,
            round(n_hit * 1.0 / n_lsh, 6) AS precision_,
@@ -936,14 +918,7 @@ def doc_contamination_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_containment",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
-    sh AS (SELECT doc_id, unnest({_SQL_SHINGLES}) AS shingle FROM toks),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    shared AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
+    WITH {_SQL_SHARED_SHINGLES}
     SELECT id_a, id_b, CAST(shared AS BIGINT) AS shared,
            shared * 1.0 / least(sa.n_sh, sb.n_sh) AS containment
     FROM shared
@@ -1008,14 +983,7 @@ def doc_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_split_leakage",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
-    sh AS (SELECT doc_id, unnest({_SQL_SHINGLES}) AS shingle FROM toks),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    shared AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
+    WITH {_SQL_SHARED_SHINGLES},
     pairs AS (
       SELECT id_a, id_b,
              shared * 1.0 / (sa.n_sh + sb.n_sh - shared) AS jaccard
@@ -1333,21 +1301,12 @@ def dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- common-neighbor link prediction ------------------------------------
-# Link prediction on a behavioral graph: users are adjacent when they
-# purchased in the same 5-minute window; predicted links are
-# non-adjacent pairs ranked by common-neighbor count (the classic
-# baseline — here "likely same cohort/campaign"). Wedge enumeration =
-# adjacency self-join on the middle node (the graph_triangles shape);
-# known edges drop out via an anti-join. (The near-dup doc graph is
-# unusable for this: synthetic duplicates form perfect cliques, so
-# every wedge closes.)
-
-
-@register(
-    "graph_link_prediction",
-    oracle="""
-    WITH p AS (
+# --- the co-purchase user graph -----------------------------------------
+# Users are adjacent when they purchased in the same 5-minute window:
+# one (id_a < id_b) row per pair. One definition each side for the five
+# graph queries below. (The near-dup doc graph is unusable for them:
+# synthetic duplicates form perfect cliques, so every wedge closes.)
+_SQL_CO_PURCHASE_EDGES = """p AS (
       SELECT DISTINCT user_id,
              CAST(time_bucket(INTERVAL '5 minutes', ts) AS TIMESTAMP) AS b
       FROM events WHERE event_type = 'purchase'
@@ -1356,7 +1315,40 @@ def dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT a.user_id AS id_a, b.user_id AS id_b
       FROM p a JOIN p b ON a.b = b.b AND a.user_id < b.user_id
       GROUP BY 1, 2
-    ),
+    )"""
+
+
+def _co_purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The co-purchase edge list — the Spark twin of
+    ``_SQL_CO_PURCHASE_EDGES``."""
+    ev = read_testdata(spark, sf_dir, "events")
+    p = (
+        ev.where(F.col("event_type") == "purchase")
+        .select("user_id", F.window("ts", "5 minutes")["start"].alias("b"))
+        .distinct()
+    )
+    a = p.select(F.col("user_id").alias("id_a"), "b")
+    bb = p.select(F.col("user_id").alias("id_b"), "b")
+    return (
+        a.join(bb, "b")
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
+
+
+# --- common-neighbor link prediction ------------------------------------
+# Predicted links are non-adjacent pairs of the co-purchase graph ranked
+# by common-neighbor count (the classic baseline — here "likely same
+# cohort/campaign"). Wedge enumeration = adjacency self-join on the
+# middle node (the graph_triangles shape); known edges drop out via an
+# anti-join.
+
+
+@register(
+    "graph_link_prediction",
+    oracle=f"""
+    WITH {_SQL_CO_PURCHASE_EDGES},
     adj AS (
       SELECT id_a AS u, id_b AS v FROM edges
       UNION ALL
@@ -1377,20 +1369,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     user graph: wedge counts for non-adjacent pairs."""
     from mapreduce_word2vec_spark.runtime import tracked_persist
 
-    ev = read_testdata(spark, sf_dir, "events")
-    p = (
-        ev.where(F.col("event_type") == "purchase")
-        .select("user_id", F.window("ts", "5 minutes")["start"].alias("b"))
-        .distinct()
-    )
-    a = p.select(F.col("user_id").alias("id_a"), "b")
-    bb = p.select(F.col("user_id").alias("id_b"), "b")
-    edges = tracked_persist(
-        a.join(bb, "b")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    edges = tracked_persist(_co_purchase_edges(spark, sf_dir))
     adj = edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")).unionByName(
         edges.select(F.col("id_b").alias("u"), F.col("id_a").alias("v"))
     )
@@ -1583,24 +1562,6 @@ def _lsh_sweep_sql() -> str:
     """Candidate/precision/recall for each banding config, unrolled:
     one bands/cand/stat CTE chain per (b, r) over the shared signature
     and ground-truth CTEs."""
-    truth = f"""
-    toks AS (SELECT doc_id, {TOKENS_DUCKDB} AS ws FROM documents),
-    sh AS (SELECT doc_id, unnest({_SQL_SHINGLES}) AS shingle FROM toks),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    shared AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    truth AS (
-      SELECT id_a, id_b FROM shared
-      JOIN sizes sa ON id_a = sa.doc_id JOIN sizes sb ON id_b = sb.doc_id
-      WHERE shared * 1.0 / (sa.n_sh + sb.n_sh - shared) >= 0.6
-    ),
-    nt AS (SELECT count(*) AS n_true FROM truth)"""
-    sig = _minhash_sig_sql().replace("toks AS", "toks2 AS").replace(
-        "FROM toks", "FROM toks2", 1
-    )
     parts = []
     for b in _SWEEP_CONFIGS:
         r = len(MINHASH_COEFFS) // b
@@ -1619,11 +1580,12 @@ def _lsh_sweep_sql() -> str:
       SELECT CAST({b} AS INT) AS bands, CAST({r} AS INT) AS rows_per_band,
              CAST(count(*) AS BIGINT) AS n_candidates,
              CAST(coalesce(sum(CASE WHEN t.id_a IS NOT NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_hits
-      FROM cand{b} LEFT JOIN truth t ON cand{b}.id_a = t.id_a AND cand{b}.id_b = t.id_b
+      FROM cand{b} LEFT JOIN edges t ON cand{b}.id_a = t.id_a AND cand{b}.id_b = t.id_b
     )""")
     union = " UNION ALL ".join(f"SELECT * FROM stat{b}" for b in _SWEEP_CONFIGS)
     return f"""
-    WITH {truth},{sig}{"".join(parts)}
+    WITH {_SQL_EDGES},
+    nt AS (SELECT count(*) AS n_true FROM edges),{_minhash_sig_sql()}{"".join(parts)}
     SELECT bands, rows_per_band, n_candidates,
            CAST((SELECT n_true FROM nt) AS BIGINT) AS n_true, n_hits,
            CASE WHEN n_candidates > 0 THEN round(n_hits * 1.0 / n_candidates, 6) END AS precision_,
@@ -1742,12 +1704,7 @@ _EDIT_HEAD = 160
 @register(
     "dedup_edit_distance",
     oracle=f"""
-    WITH {{_sig}},
-    bands AS (
-      SELECT doc_id, band,
-             sig[band * {_ROWS_PER_BAND} + 1 : band * {_ROWS_PER_BAND} + {_ROWS_PER_BAND}] AS key
-      FROM sig CROSS JOIN (VALUES {_SQL_MINHASH_BAND_VALUES}) AS t(band)
-    ),
+    WITH {_SQL_MINHASH_BANDS},
     cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
@@ -1765,7 +1722,7 @@ _EDIT_HEAD = 160
     SELECT id_a, id_b, dist, round(1.0 - dist / m, 6) AS sim
     FROM pairs
     WHERE 1.0 - dist / m >= 0.5
-    """.replace("{_sig}", _minhash_sig_sql()),
+    """,
 )
 def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs verified by exact Levenshtein distance on
@@ -1803,17 +1760,8 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_adamic_adar",
-    oracle="""
-    WITH p AS (
-      SELECT DISTINCT user_id,
-             CAST(time_bucket(INTERVAL '5 minutes', ts) AS TIMESTAMP) AS b
-      FROM events WHERE event_type = 'purchase'
-    ),
-    edges AS (
-      SELECT a.user_id AS id_a, b.user_id AS id_b
-      FROM p a JOIN p b ON a.b = b.b AND a.user_id < b.user_id
-      GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {_SQL_CO_PURCHASE_EDGES},
     adj AS (
       SELECT id_a AS u, id_b AS v FROM edges
       UNION ALL
@@ -1841,20 +1789,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbors, decimal-exact accumulation."""
     from mapreduce_word2vec_spark.runtime import tracked_persist
 
-    ev = read_testdata(spark, sf_dir, "events")
-    p = (
-        ev.where(F.col("event_type") == "purchase")
-        .select("user_id", F.window("ts", "5 minutes")["start"].alias("b"))
-        .distinct()
-    )
-    a = p.select(F.col("user_id").alias("id_a"), "b")
-    bb = p.select(F.col("user_id").alias("id_b"), "b")
-    edges = tracked_persist(
-        a.join(bb, "b")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    edges = tracked_persist(_co_purchase_edges(spark, sf_dir))
     adj = edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")).unionByName(
         edges.select(F.col("id_b").alias("u"), F.col("id_a").alias("v"))
     )
@@ -1934,16 +1869,11 @@ def graph_bfs_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_minhash_candidates",
     oracle=f"""
-    WITH {{_sig}},
-    bands AS (
-      SELECT doc_id, band,
-             sig[band * {_ROWS_PER_BAND} + 1 : band * {_ROWS_PER_BAND} + {_ROWS_PER_BAND}] AS key
-      FROM sig CROSS JOIN (VALUES {_SQL_MINHASH_BAND_VALUES}) AS t(band)
-    )
+    WITH {_SQL_MINHASH_BANDS}
     SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
     FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
     WHERE a.doc_id < b.doc_id
-    """.replace("{_sig}", _minhash_sig_sql()),
+    """,
 )
 def dedup_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded-LSH candidate pairs (ids only) — the shared blocking
@@ -1968,17 +1898,8 @@ def dedup_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_walk_pairs",
-    oracle="""
-    WITH p AS (
-      SELECT DISTINCT user_id,
-             CAST(time_bucket(INTERVAL '5 minutes', ts) AS TIMESTAMP) AS b
-      FROM events WHERE event_type = 'purchase'
-    ),
-    edges AS (
-      SELECT a.user_id AS id_a, b.user_id AS id_b
-      FROM p a JOIN p b ON a.b = b.b AND a.user_id < b.user_id
-      GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {_SQL_CO_PURCHASE_EDGES},
     adj AS (
       SELECT id_a AS u, id_b AS v FROM edges
       UNION ALL
@@ -2003,20 +1924,7 @@ def graph_walk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-step deterministic random walks over the co-purchase graph:
     (start, step, visited) positive pairs, next hop = min-md5
     neighbor."""
-    ev = read_testdata(spark, sf_dir, "events")
-    p = (
-        ev.where(F.col("event_type") == "purchase")
-        .select("user_id", F.window("ts", "5 minutes")["start"].alias("b"))
-        .distinct()
-    )
-    a = p.select(F.col("user_id").alias("id_a"), "b")
-    bb = p.select(F.col("user_id").alias("id_b"), "b")
-    edges = (
-        a.join(bb, "b")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    edges = _co_purchase_edges(spark, sf_dir)
     adj = edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")).unionByName(
         edges.select(F.col("id_b").alias("u"), F.col("id_a").alias("v"))
     )
@@ -2055,17 +1963,8 @@ def graph_walk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_degree_powerlaw",
-    oracle="""
-    WITH p AS (
-      SELECT DISTINCT user_id,
-             CAST(time_bucket(INTERVAL '5 minutes', ts) AS TIMESTAMP) AS b
-      FROM events WHERE event_type = 'purchase'
-    ),
-    edges AS (
-      SELECT a.user_id AS id_a, b.user_id AS id_b
-      FROM p a JOIN p b ON a.b = b.b AND a.user_id < b.user_id
-      GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {_SQL_CO_PURCHASE_EDGES},
     adj AS (
       SELECT id_a AS u FROM edges UNION ALL SELECT id_b FROM edges
     ),
@@ -2087,20 +1986,7 @@ def graph_walk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree histogram of the co-purchase graph with the log-log
     OLS power-law slope attached to every row."""
-    ev = read_testdata(spark, sf_dir, "events")
-    p = (
-        ev.where(F.col("event_type") == "purchase")
-        .select("user_id", F.window("ts", "5 minutes")["start"].alias("b"))
-        .distinct()
-    )
-    a = p.select(F.col("user_id").alias("id_a"), "b")
-    bb = p.select(F.col("user_id").alias("id_b"), "b")
-    edges = (
-        a.join(bb, "b")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    edges = _co_purchase_edges(spark, sf_dir)
     adj = edges.select(F.col("id_a").alias("u")).unionByName(
         edges.select(F.col("id_b").alias("u"))
     )
@@ -2128,17 +2014,8 @@ def graph_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_assortativity",
-    oracle="""
-    WITH p AS (
-      SELECT DISTINCT user_id,
-             CAST(time_bucket(INTERVAL '5 minutes', ts) AS TIMESTAMP) AS b
-      FROM events WHERE event_type = 'purchase'
-    ),
-    edges AS (
-      SELECT a.user_id AS id_a, b.user_id AS id_b
-      FROM p a JOIN p b ON a.b = b.b AND a.user_id < b.user_id
-      GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {_SQL_CO_PURCHASE_EDGES},
     adj AS (
       SELECT id_a AS u, id_b AS v FROM edges
       UNION ALL
@@ -2155,20 +2032,7 @@ def graph_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity (Pearson r of endpoint degrees over the
     symmetrized edge list) of the co-purchase graph."""
-    ev = read_testdata(spark, sf_dir, "events")
-    p = (
-        ev.where(F.col("event_type") == "purchase")
-        .select("user_id", F.window("ts", "5 minutes")["start"].alias("b"))
-        .distinct()
-    )
-    a = p.select(F.col("user_id").alias("id_a"), "b")
-    bb = p.select(F.col("user_id").alias("id_b"), "b")
-    edges = (
-        a.join(bb, "b")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    edges = _co_purchase_edges(spark, sf_dir)
     adj = edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")).unionByName(
         edges.select(F.col("id_b").alias("u"), F.col("id_a").alias("v"))
     )

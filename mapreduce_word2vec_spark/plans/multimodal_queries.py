@@ -84,7 +84,7 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce_word2vec_spark.operators.multimodal import attach_media_expr, decode_media
 
     docs = read_testdata(spark, sf_dir, "documents")
-    feats = decode_media(attach_media_expr(docs), impl="fake")
+    feats = decode_media(attach_media_expr(docs))
     return feats.select(
         "doc_id",
         F.posexplode(F.transform("features", lambda x: F.round(x, 6))).alias(

@@ -380,27 +380,22 @@ def join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "join_asof",
-    oracle="""
-    WITH clicks AS (SELECT event_id, ts, user_id, value FROM events
+# The click/purchase as-of inputs: each click (left) against the same
+# user's purchases (right), carrying the purchase's id and value. One
+# definition each side for join_asof and its forward, tolerance and
+# strict variants (join_asof_nearest projects its own purchase side).
+_SQL_ASOF_INPUTS = """clicks AS (SELECT event_id, ts, user_id, value FROM events
                     WHERE event_type = 'click'),
          purch AS (SELECT user_id, ts,
                           event_id AS purchase_event_id,
                           value AS purchase_value
-                   FROM events WHERE event_type = 'purchase')
-    SELECT c.user_id, c.ts, c.event_id, c.value,
-           p.purchase_event_id, p.purchase_value, p.ts AS ts_right
-    FROM clicks c ASOF LEFT JOIN purch p
-      ON c.user_id = p.user_id AND c.ts >= p.ts
-    """,
-)
-def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join (operator Spark lacks; DuckDB `ASOF JOIN` is the
-    oracle): each click event enriched with the same user's most recent
-    prior-or-equal purchase. Union-then-window formulation — a single
-    shuffle on user_id, no inequality-join pair explosion (operators/
-    asof.py)."""
+                   FROM events WHERE event_type = 'purchase')"""
+
+
+def _asof_click_purchase(spark: SparkSession, sf_dir: str, **asof_kw) -> DataFrame:
+    """Clicks as-of joined to purchases — the Spark twin of
+    ``_SQL_ASOF_INPUTS``; ``asof_kw`` (direction, boundary, tolerance)
+    passes through to :func:`operators.asof.asof_join`."""
     from mapreduce_word2vec_spark.operators.asof import asof_join
 
     ev = rt(spark, sf_dir, "events")
@@ -420,7 +415,27 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         left_time="ts",
         right_time="ts",
         right_cols=["purchase_event_id", "purchase_value"],
+        **asof_kw,
     )
+
+
+@register(
+    "join_asof",
+    oracle=f"""
+    WITH {_SQL_ASOF_INPUTS}
+    SELECT c.user_id, c.ts, c.event_id, c.value,
+           p.purchase_event_id, p.purchase_value, p.ts AS ts_right
+    FROM clicks c ASOF LEFT JOIN purch p
+      ON c.user_id = p.user_id AND c.ts >= p.ts
+    """,
+)
+def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """As-of join (operator Spark lacks; DuckDB `ASOF JOIN` is the
+    oracle): each click event enriched with the same user's most recent
+    prior-or-equal purchase. Union-then-window formulation — a single
+    shuffle on user_id, no inequality-join pair explosion (operators/
+    asof.py)."""
+    return _asof_click_purchase(spark, sf_dir)
 
 
 # --------------------------------------------------------------------------
@@ -2564,13 +2579,8 @@ def q20_promotion_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "join_asof_forward",
-    oracle="""
-    WITH clicks AS (SELECT event_id, ts, user_id, value FROM events
-                    WHERE event_type = 'click'),
-         purch AS (SELECT user_id, ts,
-                          event_id AS purchase_event_id,
-                          value AS purchase_value
-                   FROM events WHERE event_type = 'purchase')
+    oracle=f"""
+    WITH {_SQL_ASOF_INPUTS}
     SELECT c.user_id, c.ts, c.event_id, c.value,
            p.purchase_event_id, p.purchase_value, p.ts AS ts_right
     FROM clicks c ASOF LEFT JOIN purch p
@@ -2582,27 +2592,7 @@ def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     NEXT purchase at-or-after it (attribution's "time to conversion"
     direction, vs join_asof's last-prior). Same union-then-window
     single-shuffle shape — the window just looks forward."""
-    from mapreduce_word2vec_spark.operators.asof import asof_join
-
-    ev = rt(spark, sf_dir, "events")
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "event_id", "ts", "user_id", "value"
-    )
-    purch = ev.where(F.col("event_type") == "purchase").select(
-        "user_id",
-        "ts",
-        F.col("event_id").alias("purchase_event_id"),
-        F.col("value").alias("purchase_value"),
-    )
-    return asof_join(
-        clicks,
-        purch,
-        on="user_id",
-        left_time="ts",
-        right_time="ts",
-        right_cols=["purchase_event_id", "purchase_value"],
-        direction="forward",
-    )
+    return _asof_click_purchase(spark, sf_dir, direction="forward")
 
 
 @register(
@@ -6656,12 +6646,7 @@ _ASOF_TOL_S = 1800
 @register(
     "join_asof_tolerance",
     oracle=f"""
-    WITH clicks AS (SELECT event_id, ts, user_id, value FROM events
-                    WHERE event_type = 'click'),
-         purch AS (SELECT user_id, ts,
-                          event_id AS purchase_event_id,
-                          value AS purchase_value
-                   FROM events WHERE event_type = 'purchase'),
+    WITH {_SQL_ASOF_INPUTS},
          j AS (
            SELECT c.user_id, c.ts, c.event_id, c.value,
                   p.purchase_event_id, p.purchase_value, p.ts AS pts
@@ -6681,27 +6666,7 @@ _ASOF_TOL_S = 1800
 def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backward as-of join with a 30-minute staleness tolerance:
     matches older than the horizon are NULLed, left rows survive."""
-    from mapreduce_word2vec_spark.operators.asof import asof_join
-
-    ev = rt(spark, sf_dir, "events")
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "event_id", "ts", "user_id", "value"
-    )
-    purch = ev.where(F.col("event_type") == "purchase").select(
-        "user_id",
-        "ts",
-        F.col("event_id").alias("purchase_event_id"),
-        F.col("value").alias("purchase_value"),
-    )
-    return asof_join(
-        clicks,
-        purch,
-        on="user_id",
-        left_time="ts",
-        right_time="ts",
-        right_cols=["purchase_event_id", "purchase_value"],
-        tolerance_seconds=_ASOF_TOL_S,
-    )
+    return _asof_click_purchase(spark, sf_dir, tolerance_seconds=_ASOF_TOL_S)
 
 
 # --- multinomial Naive Bayes (ML-in-SQL) -----------------------------------
@@ -7168,13 +7133,8 @@ def stats_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "join_asof_strict",
-    oracle="""
-    WITH clicks AS (SELECT event_id, ts, user_id, value FROM events
-                    WHERE event_type = 'click'),
-         purch AS (SELECT user_id, ts,
-                          event_id AS purchase_event_id,
-                          value AS purchase_value
-                   FROM events WHERE event_type = 'purchase')
+    oracle=f"""
+    WITH {_SQL_ASOF_INPUTS}
     SELECT c.user_id, c.ts, c.event_id, c.value,
            p.purchase_event_id, p.purchase_value, p.ts AS ts_right
     FROM clicks c ASOF LEFT JOIN purch p
@@ -7184,27 +7144,7 @@ def stats_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_asof_strict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backward as-of join with a STRICT boundary: most recent
     purchase strictly before each click."""
-    from mapreduce_word2vec_spark.operators.asof import asof_join
-
-    ev = rt(spark, sf_dir, "events")
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "event_id", "ts", "user_id", "value"
-    )
-    purch = ev.where(F.col("event_type") == "purchase").select(
-        "user_id",
-        "ts",
-        F.col("event_id").alias("purchase_event_id"),
-        F.col("value").alias("purchase_value"),
-    )
-    return asof_join(
-        clicks,
-        purch,
-        on="user_id",
-        left_time="ts",
-        right_time="ts",
-        right_cols=["purchase_event_id", "purchase_value"],
-        allow_exact_matches=False,
-    )
+    return _asof_click_purchase(spark, sf_dir, allow_exact_matches=False)
 
 
 # --- trimmed mean (robust location) ----------------------------------------

@@ -123,21 +123,29 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sliding_counts(read_testdata(spark, sf_dir, "events"))
 
 
-@register(
-    "stream_session",
-    oracle="""
-    WITH g AS (
-      SELECT user_id, event_id, value, ts,
-             CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800 * 1000000
+# Gap sessionization (a gap over _SESSION_GAP_MIN minutes opens a new
+# session): every event row gains new_session and a per-user running
+# session_idx — the oracle twin of streaming.windows.assign_sessions,
+# shared by the session queries.
+_SESSION_GAP_MIN = 30
+_SQL_SESSIONS = f"""g AS (
+      SELECT *,
+             CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > {_SESSION_GAP_MIN * 60} * 1000000
                   OR lag(ts) OVER w IS NULL THEN 1 ELSE 0 END AS new_session
       FROM events
       WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     ), s AS (
-      SELECT user_id, event_id, value, ts,
+      SELECT *,
              sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
                                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
       FROM g
-    )
+    )"""
+
+
+@register(
+    "stream_session",
+    oracle=f"""
+    WITH {_SQL_SESSIONS}
     SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
            count(*) AS n_events,
            CAST(date_trunc('second', min(ts)) AS TIMESTAMP) AS session_start,
@@ -152,7 +160,8 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests)."""
     from mapreduce_word2vec_spark.streaming.windows import session_counts_batch
 
-    out = session_counts_batch(read_testdata(spark, sf_dir, "events"), gap_minutes=30)
+    ev = read_testdata(spark, sf_dir, "events")
+    out = session_counts_batch(ev, gap_minutes=_SESSION_GAP_MIN)
     return out.withColumn("session_idx", F.col("session_idx").cast("long"))
 
 
@@ -720,19 +729,8 @@ def stream_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_session_funnel",
-    oracle="""
-    WITH g AS (
-      SELECT user_id, event_type, ts, event_id,
-             CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800 * 1000000
-                  OR lag(ts) OVER w IS NULL THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), s AS (
-      SELECT user_id, event_type, ts,
-             sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-      FROM g
-    ), per AS (
+    oracle=f"""
+    WITH {_SQL_SESSIONS}, per AS (
       SELECT user_id, session_idx,
              min(CASE WHEN event_type = 'view' THEN ts END) AS t_view,
              min(CASE WHEN event_type = 'click' THEN ts END) AS t_click,
@@ -760,7 +758,7 @@ def events_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce_word2vec_spark.streaming.windows import assign_sessions
 
     ev = read_testdata(spark, sf_dir, "events")
-    s = assign_sessions(ev, gap_minutes=30)
+    s = assign_sessions(ev, gap_minutes=_SESSION_GAP_MIN)
     per = s.groupBy("user_id", "session_idx").agg(
         F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("t_view"),
         F.min(F.when(F.col("event_type") == "click", F.col("ts"))).alias("t_click"),
@@ -1444,20 +1442,8 @@ def stream_tumbling_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_session_live",
-    oracle="""
-    WITH g AS (
-      SELECT user_id, value, ts, event_id,
-             CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800 * 1000000
-                  OR lag(ts) OVER w IS NULL THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), s AS (
-      SELECT user_id, value, ts,
-             sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS session_idx
-      FROM g
-    )
+    oracle=f"""
+    WITH {_SQL_SESSIONS}
     SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
            round(sum(value), 6) AS total_value
     FROM s GROUP BY user_id, session_idx
@@ -1477,7 +1463,7 @@ def stream_session_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_testdata(spark, sf_dir, "events").select("ts", "user_id", "value")
     agg = (
         _stream(spark, _replay(ev), ev.schema)
-        .groupBy(F.session_window("ts", "30 minutes"), F.col("user_id"))
+        .groupBy(F.session_window("ts", f"{_SESSION_GAP_MIN} minutes"), F.col("user_id"))
         .agg(
             F.count("*").cast("bigint").alias("n_events"),
             F.round(F.sum("value"), 6).alias("total_value"),
@@ -2332,20 +2318,8 @@ def events_rolling_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_session_abandonment",
-    oracle="""
-    WITH g AS (
-      SELECT user_id, event_type, ts, event_id,
-             CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800 * 1000000
-                  OR lag(ts) OVER w IS NULL THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), s AS (
-      SELECT user_id, event_type,
-             sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS session_idx
-      FROM g
-    ), sess AS (
+    oracle=f"""
+    WITH {_SQL_SESSIONS}, sess AS (
       SELECT user_id, session_idx,
              count(*) AS n_events,
              max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS has_p,
@@ -2366,7 +2340,7 @@ def events_session_abandonment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce_word2vec_spark.streaming.windows import assign_sessions
 
     ev = read_testdata(spark, sf_dir, "events")
-    s = assign_sessions(ev, gap_minutes=30)
+    s = assign_sessions(ev, gap_minutes=_SESSION_GAP_MIN)
     sess = s.groupBy("user_id", "session_idx").agg(
         F.count("*").alias("n_events"),
         F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(

@@ -1,19 +1,16 @@
 from mapreduce_word2vec_spark.sources.readers import (
     read_csv,
     read_json,
-    read_parquet,
     read_text_corpus,
     read_testdata,
 )
-from mapreduce_word2vec_spark.sources.writers import write_csv, write_parquet, write_reference_csv
+from mapreduce_word2vec_spark.sources.writers import write_csv, write_reference_csv
 
 __all__ = [
     "read_csv",
     "read_json",
-    "read_parquet",
     "read_text_corpus",
     "read_testdata",
     "write_csv",
-    "write_parquet",
     "write_reference_csv",
 ]

@@ -38,13 +38,6 @@ def read_text_corpus(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.text(path)
 
 
-def read_parquet(spark: SparkSession, path: str, columns: list[str] | None = None) -> DataFrame:
-    df = spark.read.parquet(path)
-    if columns:
-        df = df.select(*columns)
-    return df
-
-
 def read_csv(
     spark: SparkSession,
     path: str,

@@ -16,18 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite", header: bool = True) -> None:
     # header default aligned with read_csv: default-arguments
     # write->read round-trips through this module must not eat the

@@ -70,9 +70,7 @@ def test_mllib_minhash_recall(spark):
 
 def test_multimodal_plumbing(spark):
     """Binary payload round-trip: frame chunks cover the payload,
-    decode features are a valid distribution, real-decode raises."""
-    import pytest
-
+    decode features are a valid distribution."""
     from mapreduce_word2vec_spark.operators.multimodal import (
         attach_media_expr,
         decode_media,
@@ -83,7 +81,7 @@ def test_multimodal_plumbing(spark):
     media = attach_media_expr(docs)
     assert dict(media.dtypes)["payload"] == "binary"
 
-    feats = decode_media(media, impl="fake").collect()
+    feats = decode_media(media).collect()
     for r in feats:
         assert len(r["features"]) == 16
         assert abs(sum(r["features"]) - 1.0) < 1e-6
@@ -92,9 +90,6 @@ def test_multimodal_plumbing(spark):
     frames = sample_frames(media, n_frames=4)
     per_doc = frames.groupBy("doc_id").agg(F.count("*").alias("n")).collect()
     assert all(r["n"] == 4 for r in per_doc)
-
-    with pytest.raises(NotImplementedError):
-        decode_media(media, impl="real")
 
 
 def test_pii_redaction_on_synthetic_text(spark):
